@@ -26,21 +26,22 @@ smaller cluster/code id, and centroid means use exact FLOOR division
 Scale shape (100 TB): initial centroids are the k lowest-id vectors via
 ``orderBy().limit(k)`` — TakeOrderedAndProject, no global sort; the
 codebook is a BOUNDED driver collect (k ≤ 256 rows — the same class as
-the PCA sufficient-statistics collect) shipped in an Arrow UDF closure,
-so every assignment/encode pass is one int64 matmul per row batch
-INSIDE the corpus scan: zero shuffle, zero per-row window (r18 — the
-previous crossJoin→window argmin shuffled corpus×k scored rows per
-pass, and the r17-era claim that the codegen'd expression beats the
-Arrow round-trip at k=8 did not survive re-measurement; see the kernel
-block comment).  The Lloyd update remains one posexplode/groupBy
-(cluster, dim) pass whose reduce input is bounded by k·dim rows after
-partial aggregation.  Nothing is quadratic in the corpus; the k×dim
-update state is constant.  Hostile codebooks (ragged/NULL-element head
-vectors) fall back to the broadcast-expression shape with identical
-semantics (pinned in tests/test_r18_optimization.py).
+the PCA sufficient-statistics collect), taken when the operator is
+called and shipped in an Arrow UDF closure, so every assignment/encode
+pass is one int64 matmul per row batch INSIDE the corpus scan: zero
+shuffle, zero per-row window (see the kernel block comment).  The Lloyd
+update remains one posexplode/groupBy (cluster, dim) pass whose reduce
+input is bounded by k·dim rows after partial aggregation.  Nothing is
+quadratic in the corpus; the k×dim update state is constant.  Hostile
+rows and codebooks (ragged/NULL-element vectors) score through the
+kernels' exact per-row fallback with the ``zip_with`` semantics the
+DuckDB twins replay (pinned against straight-line references in
+tests/test_clustering.py).
 """
 
 from __future__ import annotations
+
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -98,32 +99,58 @@ def floordiv(s: Column, n: Column) -> Column:
     return F.call_function("div", s - F.pmod(s, n), n)
 
 
-# --- Arrow argmin/argmax kernels (r18, guide §4.2 / VERDICT r17 item 6) ----
+# --- Arrow scoring kernels --------------------------------------------------
 #
-# The r17 module header claimed "at the registered k=8 the codegen'd
-# expression is faster than the Arrow round-trip" (EXPR_CENTROID_CAP's
-# crossover).  Re-A/B'd this round at the registered sizes: the claim is
-# WRONG for these operators, for the same reason it was wrong for
-# lsh_topk_det — ``aggregate(zip_with(...))`` is INTERPRETED per row, and
-# on top of it the crossJoin→window argmin shape shuffles corpus×k scored
-# rows through a full exchange just to pick each row's minimum.  The
-# kernels below collect the codebook once (BOUNDED by construction:
-# k ≤ 256 rows — the same driver-statistics class as the PCA collect and
-# the ANN centroid fetches), ship it in the UDF closure, and compute each
-# row's argmin/top-n inside the scan — no crossJoin, no per-row window,
-# zero shuffle for the assignment.  All arithmetic stays exact int64
-# (|Σx²| ≤ 64·(5e6)² < 2⁶³); ties break to the smaller code id because
-# codebook rows are sorted by id and numpy argmin/stable argsort take the
-# first occurrence — bit-identical to the (dist, j) window order.
+# Every vector operator in this module and in operators/similarity.py
+# scores rows against a small collected codebook through ONE of two
+# kernels, each a numpy matmul per Arrow batch:
 #
-# Exact-semantics fallbacks: the expression forms define edge behavior
-# through ``zip_with`` + ``aggregate`` + ``coalesce`` — a length-mismatched
-# pair or any NULL element NULLs the whole fold, which coalesces to
-# distance/dot 0 (ties → the smallest id).  Rows that are not clean
-# fixed-width int vectors take :func:`_py_sq_dist`/:func:`_py_int_dot`,
-# which replicate exactly that rule; a codebook that is itself not a
-# clean rectangle (ragged/NULL-element head vectors on a hostile corpus)
-# makes the caller fall back to the expression path wholesale.
+# * :func:`_sq_argmin_batch` — exact squared-L2 argmin, ties to the smaller
+#   code id.  ``n_sub > 1`` runs it per PQ subspace; its positions give RQ
+#   stage 1 its residual (:func:`_sq_argmin_column`).
+# * :func:`_dot_topn_batch` — exact dot top-n by (dot DESC, id ASC).  n = 1
+#   is IVF list assignment, n = nprobe is query probing.
+#
+# The codebook is a bounded driver collect taken when the operator is
+# CALLED (k ≤ 256 rows here, ≤ 4096 auto-sized IVF lists) and ships in
+# the UDF closure, so scoring runs inside the corpus scan: no crossJoin,
+# no per-row window, zero shuffle.  Quantized arithmetic stays exact
+# int64 (|Σx²| ≤ 64·(5e6)² < 2⁶³); ties go to the smaller id because
+# codebook rows are in id order and numpy argmin / stable argsort take
+# the first occurrence.  Measured against the interpreted
+# ``aggregate(zip_with)`` expression shapes this replaced, under a
+# full-result noop write: faster or tied on every registered query.
+#
+# Only clean rows (fixed codebook width, no NULL element) reach the
+# matmul.  Every other row — NULL, empty, ragged, NULL-element — and
+# EVERY row when the codebook itself is not a clean rectangle takes the
+# exact per-row fallback :func:`_py_sq_dist` / :func:`_py_int_dot`, which
+# replicates the ``zip_with`` + ``aggregate`` + ``coalesce`` rule of
+# :func:`sq_dist_q` / :func:`int_dot_q` (and of the DuckDB twins): a
+# length mismatch or any NULL element makes the distance/dot 0, so ties
+# go to the smallest id.
+
+
+class _Codebook(NamedTuple):
+    ids: np.ndarray  # int64 code ids, in codebook (id) order
+    vecs: list  # the vectors as Python lists; may be NULL, ragged or hold NULLs
+    mat: np.ndarray | None  # the clean rectangle, or None → all rows fall back
+    num: type  # element type the fallback scores in (int or float)
+
+
+def _codebook(rows: list, dtype=np.int64) -> _Codebook:
+    """Kernel codebook from collected ``[(id, vector), ...]`` rows in id
+    order.  ``mat`` is set only when every vector is NULL-free and all
+    share one non-zero width."""
+    vecs = [None if v is None else list(v) for _, v in rows]
+    widths = {-1 if v is None or None in v else len(v) for v in vecs}
+    clean = len(widths) == 1 and min(widths) > 0
+    return _Codebook(
+        np.array([c for c, _ in rows], dtype=np.int64),
+        vecs,
+        np.array(vecs, dtype=dtype) if clean else None,
+        int if np.dtype(dtype).kind == "i" else float,
+    )
 
 
 def _codebook_rows(cb: DataFrame, code_col: str, vec_col: str) -> list:
@@ -135,27 +162,14 @@ def _codebook_rows(cb: DataFrame, code_col: str, vec_col: str) -> list:
     )
 
 
-def _codebook_matrix(rows: list):
-    """(ids, mat) int64 arrays for a clean rectangular codebook, else
-    None (caller falls back to the expression path)."""
-    if not rows:
-        return None
-    vecs = [v for _, v in rows]
-    if any(v is None or any(x is None for x in v) for v in vecs):
-        return None
-    if len({len(v) for v in vecs}) != 1 or len(vecs[0]) == 0:
-        return None
-    ids = np.array([c for c, _ in rows], dtype=np.int64)
-    return ids, np.array(vecs, dtype=np.int64)
-
-
 def _collect_head_codebook(base: DataFrame, k: int) -> list:
     """[(position, qv-list), ...] — the ``init_centroids`` codebook
     collected WITHOUT the row_number window: ``orderBy().limit(k)`` is
-    TakeOrderedAndProject and already yields rows in vec_id order, so
-    list position IS the centroid/code id.  Bounded (k ≤ 256 at every
-    call site)."""
-    rows = base.orderBy("vec_id").limit(k).select("qv").collect()
+    TakeOrderedAndProject and already yields rows in (vec_id, qv) order,
+    so list position IS the centroid/code id.  ``qv`` breaks ties between
+    repeated vec_ids, so the head does not depend on partitioning.
+    Bounded (k ≤ 256 at every call site)."""
+    rows = base.orderBy("vec_id", "qv").limit(k).select("qv").collect()
     return [(i, None if r[0] is None else list(r[0])) for i, r in enumerate(rows)]
 
 
@@ -185,23 +199,38 @@ def _py_int_dot(a, b) -> int:
     return s
 
 
-def _as_pylist(v):
+def _py_residual(v, cv):
+    """Exact replica of ``zip_with(v, cv, x − y)`` on Python lists: NULL
+    when either side is NULL; a NULL element wherever either side is
+    short or NULL."""
+    if v is None or cv is None:
+        return None
+    return [
+        None if i >= len(v) or i >= len(cv) or v[i] is None or cv[i] is None else v[i] - cv[i]
+        for i in range(max(len(v), len(cv)))
+    ]
+
+
+def _as_pylist(v, num: type = int):
     """Normalize one Arrow-delivered cell for the Python fallbacks: None
     stays None; NaN elements (Arrow's float64 representation of NULL
-    list elements) become None; everything else becomes an exact int
-    (quantized values are ≤ ~5e6, exactly representable in float64)."""
+    list elements) become None; everything else becomes ``num`` (exact
+    for quantized ints, which are ≤ ~5e6)."""
     if v is None:
         return None
-    return [None if x is None or x != x else int(x) for x in v]
+    return [None if x is None or x != x else num(x) for x in v]
 
 
-def _clean_rows(vals, d: int):
-    """(mask, X): boolean mask of rows that are d-wide NULL-free int
-    vectors, and their stacked int64 matrix (None when no clean rows).
-    Arrow hands list<int64> cells to pandas as float64 ndarrays when the
-    row carries NULL elements — detect via NaN and route those rows to
-    the exact-semantics Python fallback."""
+def _clean_rows(vals, mat):
+    """(mask, X): boolean mask of rows that are NULL-free vectors of the
+    codebook's width, and their stacked matrix (None when there are no
+    such rows, or when the codebook ``mat`` is None).  Arrow hands
+    list<int64> cells to pandas as float64 ndarrays when the row carries
+    NULL elements — detect via NaN and route those rows to the fallback."""
     mask = np.zeros(len(vals), dtype=bool)
+    if mat is None:
+        return mask, None
+    d = mat.shape[1]
     for j, v in enumerate(vals):
         if v is None or len(v) != d:
             continue
@@ -213,191 +242,145 @@ def _clean_rows(vals, d: int):
         mask[j] = True
     if not mask.any():
         return mask, None
-    X = np.stack([np.asarray(vals[j]) for j in np.flatnonzero(mask)]).astype(np.int64)
+    X = np.stack([np.asarray(vals[j]) for j in np.flatnonzero(mask)]).astype(mat.dtype)
     return mask, X
 
 
-def _sqdist_argmin_column(qv_col, ids, mat, code_name: str, code_type: str = "int"):
-    """struct(<code_name>, dist) per row: nearest codebook row by exact
-    integer L2², ties to the smaller id — ONE matmul per Arrow batch in
-    place of crossJoin(k) → window(argmin)."""
-    from pyspark.sql.functions import pandas_udf
+def _pq_slices(d: int, n_sub: int) -> list[tuple[int, int]]:
+    """0-based [start, end) per subspace of a width-``d`` vector — the
+    numpy twin of the Spark slice arithmetic (start = floor(d·s/M)+1,
+    len = end−start+1)."""
+    return [(d * s // n_sub, d * (s + 1) // n_sub) for s in range(n_sub)]
 
-    d = mat.shape[1]
-    cb_lists = [list(map(int, row)) for row in mat]
-    c_sq = np.einsum("ij,ij->i", mat, mat)  # |c|² per codebook row, int64
 
-    @pandas_udf(f"{code_name} {code_type}, dist long")
-    def assign(qv: pd.Series) -> pd.DataFrame:
-        vals = qv.to_numpy()
-        codes = np.empty(len(vals), dtype=np.int64)
-        dists = np.empty(len(vals), dtype=np.int64)
-        mask, X = _clean_rows(vals, d)
-        if X is not None:
-            scores = c_sq[None, :] - 2 * (X @ mat.T)  # dist − |x|²: same argmin
-            pos = scores.argmin(axis=1)
-            x_sq = np.einsum("ij,ij->i", X, X)
-            codes[mask] = ids[pos]
-            dists[mask] = scores[np.arange(len(X)), pos] + x_sq
-        for j in np.flatnonzero(~mask):
-            v = _as_pylist(vals[j])
-            dd = [_py_sq_dist(v, cv) for cv in cb_lists]
+def _sub(v, s: int, n_sub: int):
+    """Subspace ``s`` of one vector, bounded by the vector's OWN length
+    (what the slice arithmetic does to a ragged row)."""
+    return None if v is None else v[len(v) * s // n_sub : len(v) * (s + 1) // n_sub]
+
+
+def _sq_argmin_batch(vals, cb: _Codebook, n_sub: int = 1):
+    """(pos, dist), each (n_sub, rows) int64: per row and subspace, the
+    codebook position with the smallest exact L2² (ties → smaller
+    position) and that distance."""
+    n = len(vals)
+    pos = np.zeros((n_sub, n), dtype=np.int64)
+    dist = np.zeros((n_sub, n), dtype=np.int64)
+    mask, X = _clean_rows(vals, cb.mat)
+    if X is not None:
+        for s, (a, b) in enumerate(_pq_slices(cb.mat.shape[1], n_sub)):
+            C, Xs = cb.mat[:, a:b], X[:, a:b]
+            scores = np.einsum("ij,ij->i", C, C)[None, :] - 2 * (Xs @ C.T)  # dist − |x|²
+            p = scores.argmin(axis=1)
+            pos[s, mask] = p
+            dist[s, mask] = scores[np.arange(len(Xs)), p] + np.einsum("ij,ij->i", Xs, Xs)
+    for j in np.flatnonzero(~mask):
+        v = _as_pylist(vals[j], cb.num)
+        for s in range(n_sub):
+            sv = _sub(v, s, n_sub)
+            dd = [_py_sq_dist(sv, _sub(cv, s, n_sub)) for cv in cb.vecs]
             p = min(range(len(dd)), key=lambda i: (dd[i], i))
-            codes[j], dists[j] = ids[p], dd[p]
-        return pd.DataFrame({code_name: codes, "dist": dists})
-
-    return assign(qv_col)
+            pos[s, j], dist[s, j] = p, dd[p]
+    return pos, dist
 
 
-def _dot_topn_column(qv_col, ids, mat, n: int):
-    """array<int> of the top-``n`` codebook ids by (dot DESC, id ASC) —
-    the ``best_buckets`` order — one matmul per batch."""
+def _sq_argmin_column(qv_col, cb: _Codebook, n_sub: int = 1, extra: tuple = ("dist",)):
+    """struct(code_s0 … code_s{n_sub−1} int[, dist long][, rv array<long>])
+    per row: the nearest code per subspace — one Arrow kernel inside the
+    scan.  ``extra`` picks the optional fields: ``dist`` is the total
+    exact L2² over subspaces; ``rv`` is the row minus its (n_sub = 1)
+    codeword with ``zip_with`` semantics.  Callers ask only for what they
+    read, so the plan carries no unused struct field."""
     from pyspark.sql.functions import pandas_udf
 
-    d = mat.shape[1]
-    cb_lists = [list(map(int, row)) for row in mat]
+    fields = [f"code_s{s} int" for s in range(n_sub)]
+    fields += [{"dist": "dist long", "rv": "rv array<long>"}[f] for f in extra]
 
-    @pandas_udf("array<int>")
-    def probes(qv: pd.Series) -> pd.Series:
+    @pandas_udf(", ".join(fields))
+    def sq_argmin(qv: pd.Series) -> pd.DataFrame:
         vals = qv.to_numpy()
-        out = np.empty(len(vals), dtype=object)
-        mask, X = _clean_rows(vals, d)
-        if X is not None:
-            pos = np.argsort(-(X @ mat.T), axis=1, kind="stable")[:, :n]
-            picked = ids[pos]
-            for j, row in zip(np.flatnonzero(mask), picked):
-                out[j] = [int(x) for x in row]
-        for j in np.flatnonzero(~mask):
-            v = _as_pylist(vals[j])
-            dd = [_py_int_dot(v, cv) for cv in cb_lists]
-            order = sorted(range(len(dd)), key=lambda i: (-dd[i], i))[:n]
-            out[j] = [int(ids[i]) for i in order]
-        return pd.Series(out)
-
-    return probes(qv_col)
-
-
-def _pq_slices(d: int, n_subspaces: int) -> list[tuple[int, int]]:
-    """0-based [start, end) per subspace — the numpy twin of the literal
-    Spark slice arithmetic (start = floor(d·s/M)+1, len = end−start+1)."""
-    return [
-        (d * s // n_subspaces, d * (s + 1) // n_subspaces)
-        for s in range(n_subspaces)
-    ]
-
-
-def _literal_csub(spark, ids, mat, n_subspaces: int) -> DataFrame:
-    """(j, s, cv2) sub-codebook as a LITERAL local relation (≤ 256·M
-    rows) — the distance-table side of ADC built from the already
-    collected codebook, so consuming it never re-executes the
-    corpus-head subtree the codebook came from."""
-    slices = _pq_slices(mat.shape[1], n_subspaces)
-    rows = [
-        (int(j), s, [int(x) for x in mat[pos, a:b]])
-        for pos, j in enumerate(ids)
-        for s, (a, b) in enumerate(slices)
-    ]
-    return spark.createDataFrame(rows, "j int, s int, cv2 array<bigint>")
-
-
-def _pq_codes_column(qv_col, ids, mat, n_subspaces: int, with_err: bool):
-    """Per-row PQ encode against a collected codebook: struct of M codes
-    (+ total err when ``with_err``) — replaces explode(M) → broadcast
-    join(k) → window(argmin per (row, s)) → groupBy(row) with a map.
-    Weird rows replicate the expression semantics per subspace: the row's
-    OWN length drives its slice bounds, and any mismatch/NULL inside a
-    (row-slice, codebook-slice) pair zeroes that pair's distance."""
-    from pyspark.sql.functions import pandas_udf
-
-    d = mat.shape[1]
-    slices = _pq_slices(d, n_subspaces)
-    subs = [mat[:, a:b] for a, b in slices]
-    sub_sq = [np.einsum("ij,ij->i", s, s) for s in subs]
-    cb_sub_lists = [[list(map(int, row)) for row in s] for s in subs]
-    fields = ", ".join(f"code_s{s} int" for s in range(n_subspaces))
-    schema = f"{fields}, err_q long" if with_err else fields
-
-    @pandas_udf(schema)
-    def encode(qv: pd.Series) -> pd.DataFrame:
-        vals = qv.to_numpy()
-        n = len(vals)
-        codes = [np.zeros(n, dtype=np.int64) for _ in range(n_subspaces)]
-        err = np.zeros(n, dtype=np.int64)
-        mask, X = _clean_rows(vals, d)
-        if X is not None:
-            x_rows = np.flatnonzero(mask)
-            for s, (a, b) in enumerate(slices):
-                Xs = X[:, a:b]
-                scores = sub_sq[s][None, :] - 2 * (Xs @ subs[s].T)
-                pos = scores.argmin(axis=1)
-                codes[s][x_rows] = ids[pos]
-                err[x_rows] += scores[np.arange(len(Xs)), pos] + np.einsum(
-                    "ij,ij->i", Xs, Xs
-                )
-        for j in np.flatnonzero(~mask):
-            v = _as_pylist(vals[j])
-            L = 0 if v is None else len(v)
-            for s in range(n_subspaces):
-                a, b = L * s // n_subspaces, L * (s + 1) // n_subspaces
-                sv = None if v is None else v[a:b]
-                dd = [_py_sq_dist(sv, cv) for cv in cb_sub_lists[s]]
-                p = min(range(len(dd)), key=lambda i: (dd[i], i))
-                codes[s][j] = ids[p]
-                err[j] += dd[p]
-        out = {f"code_s{s}": codes[s] for s in range(n_subspaces)}
-        if with_err:
-            out["err_q"] = err
+        pos, dist = _sq_argmin_batch(vals, cb, n_sub)
+        out = {f"code_s{s}": cb.ids[pos[s]] for s in range(n_sub)}
+        if "dist" in extra:
+            out["dist"] = dist.sum(axis=0)
+        if "rv" in extra:
+            out["rv"] = [_py_residual(_as_pylist(v), cb.vecs[p]) for v, p in zip(vals, pos[0])]
         return pd.DataFrame(out)
 
-    return encode(qv_col)
+    return sq_argmin(qv_col)
 
 
-def _rq_stage1_column(qv_col, ids, mat):
-    """struct(code1, err1, rv) per row: the nearest stage-1 codeword, its
-    exact error, AND the residual ``zip_with(qv, cv1, x − y)`` — computed
-    together so rq_encode's stage 1 is a single map (the previous shape
-    re-attached the codeword by a broadcast join just to subtract it)."""
+def _dot_topn_batch(vals, cb: _Codebook, n: int) -> np.ndarray:
+    """Object array of per-row int64 id arrays: the top-``n`` codebook ids
+    by (exact dot DESC, id ASC)."""
+    out = np.empty(len(vals), dtype=object)
+    mask, X = _clean_rows(vals, cb.mat)
+    if X is not None:
+        top = cb.ids[np.argsort(-(X @ cb.mat.T), axis=1, kind="stable")[:, :n]]
+        # element-wise: a 2-D source into an object array trips numpy's
+        # dimension check
+        for j, row in zip(np.flatnonzero(mask), top):
+            out[j] = row
+    for j in np.flatnonzero(~mask):
+        v = _as_pylist(vals[j], cb.num)
+        dd = [_py_int_dot(v, cv) for cv in cb.vecs]
+        out[j] = cb.ids[sorted(range(len(dd)), key=lambda i: (-dd[i], i))[:n]]
+    return out
+
+
+def _dot_topn_column(qv_col, cb: _Codebook, n: int):
+    """array<long> of the top-``n`` codebook ids per row (see
+    :func:`_dot_topn_batch`) — one Arrow kernel inside the scan."""
     from pyspark.sql.functions import pandas_udf
 
-    d = mat.shape[1]
-    cb_lists = [list(map(int, row)) for row in mat]
-    c_sq = np.einsum("ij,ij->i", mat, mat)
+    @pandas_udf("array<long>")
+    def dot_topn(qv: pd.Series) -> pd.Series:
+        return pd.Series(_dot_topn_batch(qv.to_numpy(), cb, n))
 
-    @pandas_udf("code1 int, err1 long, rv array<long>")
-    def stage1(qv: pd.Series) -> pd.DataFrame:
-        vals = qv.to_numpy()
-        codes = np.empty(len(vals), dtype=np.int64)
-        errs = np.empty(len(vals), dtype=np.int64)
-        rvs = np.empty(len(vals), dtype=object)
-        mask, X = _clean_rows(vals, d)
-        if X is not None:
-            scores = c_sq[None, :] - 2 * (X @ mat.T)
-            pos = scores.argmin(axis=1)
-            x_sq = np.einsum("ij,ij->i", X, X)
-            codes[mask] = ids[pos]
-            errs[mask] = scores[np.arange(len(X)), pos] + x_sq
-            R = X - mat[pos]
-            for j, row in zip(np.flatnonzero(mask), R):
-                rvs[j] = [int(x) for x in row]
-        for j in np.flatnonzero(~mask):
-            v = _as_pylist(vals[j])
-            dd = [_py_sq_dist(v, cv) for cv in cb_lists]
-            p = min(range(len(dd)), key=lambda i: (dd[i], i))
-            codes[j], errs[j] = ids[p], dd[p]
-            if v is None:
-                rvs[j] = None  # zip_with(NULL, cv) is NULL
-            else:
-                cv = cb_lists[p]
-                n = max(len(v), len(cv))
-                rvs[j] = [
-                    (v[i] - cv[i])
-                    if i < len(v) and i < len(cv) and v[i] is not None
-                    else None
-                    for i in range(n)
-                ]
-        return pd.DataFrame({"code1": codes, "err1": errs, "rv": rvs})
+    return dot_topn(qv_col)
 
-    return stage1(qv_col)
+
+def _sub_slices(qv: Column, n_sub: int, alias: str) -> Column:
+    """Explodable array of (s, sub-vector) structs, bounds from the row's
+    own size; per-subspace bounds are literals so the slice stays a
+    codegen projection."""
+    dim_col = F.size(qv)
+    pieces = []
+    for s in range(n_sub):
+        start = F.floor(dim_col * s / n_sub).cast("int") + 1
+        end = F.floor(dim_col * (s + 1) / n_sub).cast("int")
+        pieces.append(
+            F.struct(
+                F.lit(s).alias("s"),
+                F.slice(qv, start, F.greatest(end - start + 1, F.lit(0))).alias(alias),
+            )
+        )
+    return F.array(*pieces)
+
+
+def _adc_inputs(base: DataFrame, qbase: DataFrame, cb: _Codebook, n_sub: int):
+    """(codes, dtab) for ADC scoring: corpus ``(c_id, s, code)`` rows from
+    the PQ kernel, and the query-side exact distance table ``(q_id, s,
+    code, qd)`` joined against a LITERAL sub-codebook built from the
+    collected codebook, so nothing re-executes the corpus head."""
+    spark = base.sparkSession
+    csub = spark.createDataFrame(
+        [(int(j), s, _sub(cv, s, n_sub)) for j, cv in zip(cb.ids, cb.vecs) for s in range(n_sub)],
+        "j int, s int, cv2 array<bigint>",
+    )
+    codes = base.select(
+        F.col("vec_id").alias("c_id"), _sq_argmin_column(F.col("qv"), cb, n_sub, extra=()).alias("__e")
+    ).select(
+        "c_id",
+        F.posexplode(F.array(*[F.col(f"__e.code_s{s}") for s in range(n_sub)])).alias("s", "code"),
+    )
+    qsub = qbase.select("q_id", F.explode(_sub_slices(F.col("qv"), n_sub, "sv")).alias("p")).select(
+        "q_id", "p.s", "p.sv"
+    )
+    dtab = qsub.join(F.broadcast(csub), "s").select(
+        "q_id", "s", F.col("j").alias("code"), sq_dist_q(F.col("sv"), F.col("cv2")).alias("qd")
+    )
+    return codes, dtab
 
 
 def _quantized_base(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
@@ -412,12 +395,14 @@ def _quantized_base(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
 
 def init_centroids(base: DataFrame, k: int) -> DataFrame:
     """(cluster, cv): the k lowest-id quantized vectors, cluster ids
-    0..k−1 in id order.  ``orderBy().limit(k)`` is TakeOrderedAndProject
-    (bounded, no global sort) and the result STAYS distributed — every
-    consumer broadcasts it; nothing lands on the driver."""
-    w = Window.orderBy("vec_id")
+    0..k−1 in (vec_id, qv) order — ``qv`` breaks ties between repeated
+    vec_ids, so :func:`kmeans_lloyd`'s lazy re-evaluation of this frame
+    picks the same rows as the codebook collect of the first assignment.
+    ``orderBy().limit(k)`` is TakeOrderedAndProject (bounded, no global
+    sort) and the result stays a DataFrame."""
+    w = Window.orderBy("vec_id", "qv")
     return (
-        base.orderBy("vec_id")
+        base.orderBy("vec_id", "qv")
         .limit(k)
         .select((F.row_number().over(w) - 1).cast("int").alias("cluster"), F.col("qv").alias("cv"))
     )
@@ -427,34 +412,20 @@ def assign_clusters(base: DataFrame, centroids: DataFrame) -> DataFrame:
     """(vec_id, qv, cluster, dist): nearest centroid by exact integer
     squared L2, ties toward the smaller cluster id.
 
-    Plan (r18): the k-row centroid table is a BOUNDED collect (k ≤ 256
-    by every caller's construction) shipped in an Arrow UDF closure; the
-    argmin is one int64 matmul per row batch INSIDE the scan — zero
-    shuffle.  The previous crossJoin(k) → row_number window shape
-    shuffled corpus×k scored rows per assignment pass; the interleaved
-    A/B and the exact-semantics edge cases live in
-    tests/test_r18_optimization.py and OPTIMIZATION_r18.md.  A codebook
-    that is not a clean fixed-width int matrix (hostile corpora) keeps
-    the expression path."""
-    mx = _codebook_matrix(_codebook_rows(centroids, "cluster", "cv"))
-    if mx is not None:
-        ids, mat = mx
-        return base.select(
-            "vec_id",
-            "qv",
-            _sqdist_argmin_column(F.col("qv"), ids, mat, "cluster").alias("__a"),
-        ).select(
-            "vec_id",
-            "qv",
-            F.col("__a.cluster").alias("cluster"),
-            F.col("__a.dist").alias("dist"),
-        )
-    scored = (
-        base.crossJoin(F.broadcast(centroids))
-        .select("vec_id", "qv", "cluster", sq_dist_q(F.col("qv"), F.col("cv")).alias("dist"))
+    Eager snapshot: the k-row ``centroids`` frame (k ≤ 256 by every
+    caller's construction) is collected when this function is CALLED —
+    one driver job — and ships in the closure of the squared-L2 argmin
+    kernel (module comment above the kernels), so the assignment is one
+    int64 matmul per row batch inside the scan, zero shuffle."""
+    cb = _codebook(_codebook_rows(centroids, "cluster", "cv"))
+    return base.select(
+        "vec_id", "qv", _sq_argmin_column(F.col("qv"), cb).alias("__a")
+    ).select(
+        "vec_id",
+        "qv",
+        F.col("__a.code_s0").alias("cluster"),
+        F.col("__a.dist").alias("dist"),
     )
-    w = Window.partitionBy("vec_id").orderBy("dist", "cluster")
-    return scored.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1).drop("__rn")
 
 
 def update_centroids(assigned: DataFrame, centroids: DataFrame) -> DataFrame:
@@ -495,14 +466,17 @@ def kmeans_lloyd(
     docstring), so the registered query hash-checks against an unrolled
     DuckDB twin.
 
-    Plan cost per iteration (r18): one Arrow-kernel assignment pass
-    over the corpus (zero shuffle — the k-row centroid table is a
-    bounded collect per pass; see :func:`assign_clusters`) + one
-    (cluster, dim) groupBy whose combined reduce input is k·dim
-    (update).  The iteration count is a literal, so the lineage stays a
-    handful of narrow stages — no checkpointing needed at the k/n_iters
-    this engine registers (contrast ``bpe_train``'s k=256
-    localCheckpoint cadence, where rounds are data-dependent).
+    Eager snapshot: the Lloyd loop runs while this function is CALLED —
+    each iteration is one driver collect of the k-row centroid table
+    (:func:`assign_clusters`), which executes that iteration's update —
+    so the returned DataFrame is only the final assignment: one
+    Arrow-kernel pass over the corpus against the last collected
+    centroids, zero shuffle.  Each update is one (cluster, dim) groupBy
+    whose combined reduce input is k·dim.  The iteration count is a
+    literal, so the lineage stays a handful of narrow stages — no
+    checkpointing needed at the k/n_iters this engine registers
+    (contrast ``bpe_train``'s k=256 localCheckpoint cadence, where
+    rounds are data-dependent).
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
@@ -563,14 +537,12 @@ def pq_encode(
     corpus decades; explicit values pin it (the oracle-twinned registry
     queries pass 8).
 
-    Plan (r18): the M·n_codes-row codebook is a bounded collect shipped
-    in an Arrow kernel that emits all M codes + the exact error per row
-    INSIDE the scan — a pure map, ZERO shuffle (was: explode by
-    subspace → broadcast join → per-(vec, subspace) argmin window →
-    groupBy(vec_id), which shuffled corpus·M scored rows).  The encoded
-    output is M bytes-scale codes per vector, the whole point of PQ at
-    100 TB; a non-rectangular (hostile) codebook falls back to the old
-    expression shape with identical semantics.
+    Eager snapshot: the n_codes-row codebook is collected when this
+    function is CALLED (one driver job, plus a ``count()`` when
+    ``n_codes`` is None); the returned DataFrame is a pure map — the
+    squared-L2 argmin kernel emits all M codes + the exact error per row
+    inside the scan, zero shuffle.  The encoded output is M
+    bytes-scale codes per vector, the whole point of PQ at 100 TB.
 
     Dimension note: the last subspace takes the remainder when dim % M
     ≠ 0 (slice length = ceil stays within bounds on both engines); all
@@ -585,57 +557,14 @@ def pq_encode(
         # one count() — the same bounded corpus-size probe the ANN tier's
         # auto sizing pays (similarity.py); metadata-cheap on parquet
         n_codes = auto_n_codes(base.count())
-    cb = init_centroids(base, n_codes).withColumnRenamed("cluster", "j")
-
-    def sub_slices(qv: Column, alias: str) -> Column:
-        """explodable array of (s, sub-vector) structs; per-subspace
-        bounds are literals so the slice stays a codegen projection."""
-        dim_col = F.size(qv)
-        pieces = []
-        for s in range(n_subspaces):
-            start = F.floor(dim_col * s / n_subspaces).cast("int") + 1
-            end = F.floor(dim_col * (s + 1) / n_subspaces).cast("int")
-            pieces.append(
-                F.struct(
-                    F.lit(s).alias("s"),
-                    F.slice(qv, start, F.greatest(end - start + 1, F.lit(0))).alias(alias),
-                )
-            )
-        return F.array(*pieces)
-
-    # r18: clean codebook → one Arrow kernel per batch computes all M
-    # codes + the exact error INSIDE the scan (module comment above the
-    # kernels) — replaces explode(M) → broadcast join(M·n_codes) →
-    # argmin window over corpus×M scored rows → groupBy(vec_id): the
-    # encode becomes a pure map with ZERO shuffle, which is the actual
-    # PQ storage-layout shape at 100 TB
-    mx = _codebook_matrix(_collect_head_codebook(base, n_codes))
-    if mx is not None:
-        ids, mat = mx
-        return base.select(
-            "vec_id",
-            _pq_codes_column(F.col("qv"), ids, mat, n_subspaces, with_err=True).alias("__e"),
-        ).select(
-            "vec_id",
-            *[F.col(f"__e.code_s{s}").alias(f"code_s{s}") for s in range(n_subspaces)],
-            F.col("__e.err_q").alias("err_q"),
-        )
-    vsub = base.select("vec_id", F.explode(sub_slices(F.col("qv"), "sv")).alias("p")).select(
-        "vec_id", "p.s", "p.sv"
+    cb = _codebook(_collect_head_codebook(base, n_codes))
+    return base.select(
+        "vec_id", _sq_argmin_column(F.col("qv"), cb, n_subspaces).alias("__e")
+    ).select(
+        "vec_id",
+        *[F.col(f"__e.code_s{s}").alias(f"code_s{s}") for s in range(n_subspaces)],
+        F.col("__e.dist").alias("err_q"),
     )
-    csub = cb.select("j", F.explode(sub_slices(F.col("cv"), "cv2")).alias("p")).select(
-        "j", "p.s", "p.cv2"
-    )
-    scored = vsub.join(F.broadcast(csub), "s").select(
-        "vec_id", "s", "j", sq_dist_q(F.col("sv"), F.col("cv2")).alias("dist")
-    )
-    w = Window.partitionBy("vec_id", "s").orderBy("dist", "j")
-    best = scored.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1)
-    aggs = [
-        F.max(F.when(F.col("s") == s, F.col("j"))).cast("int").alias(f"code_s{s}")
-        for s in range(n_subspaces)
-    ]
-    return best.groupBy("vec_id").agg(*aggs, F.sum("dist").alias("err_q"))
 
 
 def pq_adc_topk(
@@ -656,81 +585,26 @@ def pq_adc_topk(
     (q_id, c_id, adc_dist, rn), k rows per query, ties toward smaller
     c_id, self-matches excluded.
 
-    Plan (r18): corpus codes come from the pq_encode Arrow kernel in
-    the scan (zero-shuffle map; was an explode→join→argmin-window pass);
-    the distance table (|queries|·M·n_codes rows) joins a LITERAL
-    sub-codebook built from the same bounded collect and broadcasts;
-    scoring is a broadcast hash join on (s, code) + one
-    groupBy(q_id, c_id) whose input is corpus·|queries|·M rows of five
-    small integers — vectors never enter a shuffle.  Cost is inherently corpus × queries (brute ADC);
-    production composes it with the IVF pruning ``ivf_topk`` already
-    provides.  Exactness: same micro-unit quantization and int64 sums
-    as :func:`pq_encode`, so a SQL twin replays every step."""
+    Eager snapshot: the PQ codebook is collected when this function is
+    CALLED (one driver job, plus a ``count()`` when ``n_codes`` is None).
+    In the returned plan, corpus codes come from the squared-L2 argmin
+    kernel in the scan (zero-shuffle map); the distance table
+    (|queries|·M·n_codes rows) joins a LITERAL sub-codebook built from
+    the same collect and broadcasts; scoring is a broadcast hash join on
+    (s, code) + one groupBy(q_id, c_id) whose input is
+    corpus·|queries|·M rows of five small integers — vectors never enter
+    a shuffle.  Cost is inherently corpus × queries (brute ADC);
+    production composes it with the IVF pruning of :func:`ivfpq_topk`.
+    Exactness: same micro-unit quantization and int64 sums as
+    :func:`pq_encode`, so a SQL twin replays every step."""
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     base = _quantized_base(df, id_col, vec_col)
     if n_codes is None:
         n_codes = auto_n_codes(base.count())  # √n rule, see auto_n_codes
     qbase = _quantized_base(queries, id_col, vec_col).withColumnRenamed("vec_id", "q_id")
-    cb = init_centroids(base, n_codes).withColumnRenamed("cluster", "j")
-
-    def sub_slices(qv: Column, alias: str) -> Column:
-        dim_col = F.size(qv)
-        pieces = []
-        for s in range(n_subspaces):
-            start = F.floor(dim_col * s / n_subspaces).cast("int") + 1
-            end = F.floor(dim_col * (s + 1) / n_subspaces).cast("int")
-            pieces.append(
-                F.struct(
-                    F.lit(s).alias("s"),
-                    F.slice(qv, start, F.greatest(end - start + 1, F.lit(0))).alias(alias),
-                )
-            )
-        return F.array(*pieces)
-
-    # corpus → codes: identical argmin to pq_encode (same tie-break).
-    # r18: clean codebook → the pq_encode Arrow kernel emits the M codes
-    # in the scan and posexplode fans them to (c_id, s, code) — the
-    # corpus-side explode(M)→join→argmin-window shuffle is gone — and the
-    # (tiny) query-side distance table joins a LITERAL sub-codebook built
-    # from the same collect, so nothing downstream re-executes the
-    # corpus-head subtree
-    mx = _codebook_matrix(_collect_head_codebook(base, n_codes))
-    if mx is not None:
-        kids, kmat = mx
-        csub = _literal_csub(df.sparkSession, kids, kmat, n_subspaces)
-        codes = base.select(
-            F.col("vec_id").alias("c_id"),
-            _pq_codes_column(F.col("qv"), kids, kmat, n_subspaces, with_err=False).alias("__e"),
-        ).select(
-            "c_id",
-            F.posexplode(
-                F.array(*[F.col(f"__e.code_s{s}") for s in range(n_subspaces)])
-            ).alias("s", "code"),
-        )
-    else:
-        csub = cb.select("j", F.explode(sub_slices(F.col("cv"), "cv2")).alias("p")).select(
-            "j", "p.s", "p.cv2"
-        )
-        vsub = base.select("vec_id", F.explode(sub_slices(F.col("qv"), "sv")).alias("p")).select(
-            F.col("vec_id").alias("c_id"), "p.s", "p.sv"
-        )
-        scored = vsub.join(F.broadcast(csub), "s").select(
-            "c_id", "s", "j", sq_dist_q(F.col("sv"), F.col("cv2")).alias("dist")
-        )
-        w = Window.partitionBy("c_id", "s").orderBy("dist", "j")
-        codes = (
-            scored.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .select("c_id", "s", F.col("j").alias("code"))
-        )
-    # query → distance table: exact L2² to every codebook entry
-    qsub = qbase.select("q_id", F.explode(sub_slices(F.col("qv"), "sv")).alias("p")).select(
-        "q_id", "p.s", "p.sv"
-    )
-    dtab = qsub.join(F.broadcast(csub), "s").select(
-        "q_id", "s", F.col("j").alias("code"), sq_dist_q(F.col("sv"), F.col("cv2")).alias("qd")
-    )
+    cb = _codebook(_collect_head_codebook(base, n_codes))
+    codes, dtab = _adc_inputs(base, qbase, cb, n_subspaces)
     adc = (
         codes.join(F.broadcast(dtab), ["s", "code"])
         .filter(F.col("q_id") != F.col("c_id"))
@@ -743,32 +617,6 @@ def pq_adc_topk(
         .filter(F.col("rn") <= k)
         .select("q_id", "c_id", "adc_dist", "rn")
     )
-
-
-def _nearest_code(
-    base: DataFrame, vcol: str, codebook: DataFrame, cb_vcol: str, code_col: str
-) -> DataFrame:
-    """(vec_id, <vcol>, code, dist): nearest codebook entry by exact
-    integer L2², ties toward the smaller code id — the shared argmin of
-    this module.  r18: clean codebook → Arrow matmul kernel in the scan
-    (zero shuffle); otherwise the broadcast-crossJoin → vec_id-window
-    expression shape."""
-    mx = _codebook_matrix(_codebook_rows(codebook, code_col, cb_vcol))
-    if mx is not None:
-        ids, mat = mx
-        return base.select(
-            "vec_id", vcol, _sqdist_argmin_column(F.col(vcol), ids, mat, code_col).alias("__a")
-        ).select(
-            "vec_id",
-            vcol,
-            F.col(f"__a.{code_col}").alias(code_col),
-            F.col("__a.dist").alias("dist"),
-        )
-    scored = base.crossJoin(F.broadcast(codebook)).select(
-        "vec_id", vcol, code_col, sq_dist_q(F.col(vcol), F.col(cb_vcol)).alias("dist")
-    )
-    w = Window.partitionBy("vec_id").orderBy("dist", code_col)
-    return scored.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1).drop("__rn")
 
 
 def rq_encode(
@@ -798,93 +646,41 @@ def rq_encode(
     all-zero codebook and a dead stage 2; found by the err2<err1 pin).
     Guarantee: zero ∈ C2 ⇒ err2_q ≤ err1_q for EVERY vector.
 
-    Plan (r18): a MAP — stage 1 (code1, err1, residual) is one Arrow
-    kernel against the bounded-collected codebook 1; codebook 2 is a
-    bounded head collect of the stage-1 output (zero row + the next
-    n_codes2−1 residuals, ≤ n_codes2 rows — the same driver-statistics
-    class as the codebook itself); stage 2 is a second kernel on the
-    residual column.  Zero shuffle, no corpus×corpus join (the previous
-    shape's final vec_id join was this family's one Final-Plan
-    SortMergeJoin).  Hostile codebooks fall back to the broadcast +
-    window expression shape with identical semantics."""
+    Eager snapshot: ONE head collect of n_codes1 + n_codes2 − 1 rows
+    when this function is CALLED gives both codebooks — codebook 2's
+    residuals are computed on the driver by the same stage-1 kernel the
+    executors run.  The returned DataFrame is a MAP: stage 1 (code1,
+    err1, residual) is one squared-L2 argmin kernel, stage 2 a second
+    kernel on the residual column — zero shuffle, no corpus×corpus
+    join."""
     for name, v in (("n_codes1", n_codes1), ("n_codes2", n_codes2)):
         if v < 1:
             raise ValueError(f"{name} must be >= 1, got {v}")
     base = _quantized_base(df, id_col, vec_col)
-    # r18 fast path: with a clean stage-1 codebook the whole operator is a
-    # MAP — stage 1 (code1, err1, residual) in one kernel, codebook 2 from
-    # a bounded head collect (zero row + the next n_codes2−1 residuals),
-    # stage 2 in a second kernel on the residual column.  This removes
-    # stage 1's broadcast re-attach join, both argmin windows, AND the
-    # final corpus×corpus vec_id join (the family's one remaining
-    # Final-Plan SortMergeJoin in plans/r18/rq_encode_report_before.txt).
-    mx1 = _codebook_matrix(_collect_head_codebook(base, n_codes1))
-    if mx1 is not None:
-        ids1, mat1 = mx1
-        stage1 = base.select(
-            "vec_id", _rq_stage1_column(F.col("qv"), ids1, mat1).alias("__a")
-        )
-        head = stage1.orderBy("vec_id").limit(n_codes1 + n_codes2 - 1).select("__a.rv").collect()
-        cb2_rows = [(0, [0] * mat1.shape[1])] + [
-            (i - n_codes1 + 1, None if r[0] is None else list(r[0]))
-            for i, r in enumerate(head)
-            if i >= n_codes1
-        ]
-        mx2 = _codebook_matrix(cb2_rows)
-        if mx2 is not None:
-            ids2, mat2 = mx2
-            return stage1.select(
-                "vec_id",
-                F.col("__a.code1").alias("code1"),
-                F.col("__a.err1").alias("err1_q"),
-                _sqdist_argmin_column(F.col("__a.rv"), ids2, mat2, "code2").alias("__b"),
-            ).select(
-                "vec_id",
-                "code1",
-                F.col("__b.code2").alias("code2"),
-                "err1_q",
-                F.col("__b.dist").alias("err2_q"),
-            )
-    cb1 = init_centroids(base, n_codes1).select(
-        F.col("cluster").alias("code1"), F.col("cv").alias("cv1")
+    head = _collect_head_codebook(base, n_codes1 + n_codes2 - 1)
+    cb1 = _codebook(head[:n_codes1])
+    nxt = pd.Series([v for _, v in head[n_codes1:]], dtype=object).to_numpy()
+    pos, _ = _sq_argmin_batch(nxt, cb1)
+    # the zero codeword has code 0's width (the twin's transform of cv1)
+    zero = [(0, [0] * len(head[0][1]))] if head else []
+    cb2 = _codebook(
+        zero
+        + [(i + 1, _py_residual(_as_pylist(v), cb1.vecs[p])) for i, (v, p) in enumerate(zip(nxt, pos[0]))]
     )
-    a1 = _nearest_code(base.select("vec_id", "qv"), "qv", cb1, "cv1", "code1")
-    res = (
-        a1.join(F.broadcast(cb1), "code1")
-        .select(
-            "vec_id",
-            "code1",
-            F.col("dist").alias("err1"),
-            F.zip_with("qv", "cv1", lambda x, y: x - y).alias("rv"),
-        )
+    stage1 = base.select(
+        "vec_id", _sq_argmin_column(F.col("qv"), cb1, extra=("dist", "rv")).alias("__a")
     )
-    w = Window.orderBy("vec_id")
-    zero_row = cb1.filter(F.col("code1") == 0).select(
-        F.lit(0).cast("int").alias("code2"),
-        F.transform("cv1", lambda x: F.lit(0).cast("long")).alias("cv2"),
-    )
-    nxt = (
-        res.orderBy("vec_id")
-        .limit(n_codes1 + n_codes2 - 1)
-        .withColumn("__hrn", F.row_number().over(w))
-        .filter(F.col("__hrn") > n_codes1)
-        .select(
-            (F.col("__hrn") - n_codes1).cast("int").alias("code2"),
-            F.col("rv").alias("cv2"),
-        )
-    )
-    cb2 = zero_row.unionAll(nxt)
-    a2 = _nearest_code(res.select("vec_id", "rv"), "rv", cb2, "cv2", "code2")
-    return (
-        res.select("vec_id", "code1", "err1")
-        .join(a2.select("vec_id", "code2", F.col("dist").alias("err2")), "vec_id")
-        .select(
-            "vec_id",
-            "code1",
-            "code2",
-            F.col("err1").alias("err1_q"),
-            F.col("err2").alias("err2_q"),
-        )
+    return stage1.select(
+        "vec_id",
+        F.col("__a.code_s0").alias("code1"),
+        F.col("__a.dist").alias("err1_q"),
+        _sq_argmin_column(F.col("__a.rv"), cb2).alias("__b"),
+    ).select(
+        "vec_id",
+        "code1",
+        F.col("__b.code_s0").alias("code2"),
+        "err1_q",
+        F.col("__b.dist").alias("err2_q"),
     )
 
 
@@ -923,13 +719,16 @@ def ivfpq_topk(
     (ties toward the smaller list id, the ``ivf_topk_det`` rule), PQ
     codes by exact integer L2 argmin (the :func:`pq_encode` rule).
 
-    Plan (r18): centroid table and PQ codebook are bounded collects;
-    bucket assignment, query probing and PQ codes are Arrow kernels in
-    their scans (zero shuffle each — both per-c_id argmin windows and
-    the crossJoins are gone); the probe table (|queries|·nprobe rows)
-    broadcasts into the bucket join, and the final ADC join carries only
-    (q_id, c_id, s, code, qd) integers.  Work ∝ corpus/lists · nprobe · |queries| — the IVF
-    pruning factor — instead of brute ADC's corpus × queries."""
+    Eager snapshot: ONE head collect of max(n_centroids, n_codes) rows
+    when this function is CALLED gives both the centroid table and the
+    PQ codebook (plus a ``count()`` when a size is auto).  In the
+    returned plan, bucket assignment (dot top-1), query probing (dot
+    top-nprobe) and PQ codes (squared-L2 argmin) are Arrow kernels in
+    their scans, zero shuffle each; the probe table (|queries|·nprobe
+    rows) broadcasts into the bucket join, and the final ADC join
+    carries only (q_id, c_id, s, code, qd) integers.  Work ∝
+    corpus/lists · nprobe · |queries| — the IVF pruning factor — instead
+    of brute ADC's corpus × queries."""
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     base = _quantized_base(df, id_col, vec_col)
@@ -951,91 +750,21 @@ def ivfpq_topk(
     if nprobe < 1 or nprobe > n_centroids:
         raise ValueError(f"nprobe must be in [1, n_centroids], got {nprobe}")
     qbase = _quantized_base(queries, id_col, vec_col).withColumnRenamed("vec_id", "q_id")
-    cents = init_centroids(base, n_centroids)
-    # r18: clean centroid table → list assignment/probing via the Arrow
-    # top-n dot kernel in the scan (no crossJoin(n_centroids), no per-row
-    # window shuffle); hostile centroid rows keep the expression shape
-    mxc = _codebook_matrix(_collect_head_codebook(base, n_centroids))
-
-    def best_buckets(side: DataFrame, idc: str, n: int) -> DataFrame:
-        if mxc is not None:
-            cids, cmat = mxc
-            return side.select(
-                idc, "qv", F.explode(_dot_topn_column(F.col("qv"), cids, cmat, n)).alias("bucket")
-            )
-        scored = side.crossJoin(F.broadcast(cents)).select(
-            idc, "qv", "cluster", int_dot_q(F.col("qv"), F.col("cv")).alias("dot")
-        )
-        w = Window.partitionBy(idc).orderBy(F.col("dot").desc(), "cluster")
-        return (
-            scored.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") <= n)
-            .select(idc, "qv", F.col("cluster").alias("bucket"))
-        )
-
-    buckets = best_buckets(base, "vec_id", 1).withColumnRenamed("vec_id", "c_id")
-    probes = best_buckets(qbase, "q_id", nprobe).select("q_id", "bucket")
+    head = _collect_head_codebook(base, max(n_centroids, n_codes))
+    cents = _codebook(head[:n_centroids])
+    buckets = base.select(
+        F.col("vec_id").alias("c_id"),
+        F.explode(_dot_topn_column(F.col("qv"), cents, 1)).alias("bucket"),
+    )
+    probes = qbase.select(
+        "q_id", F.explode(_dot_topn_column(F.col("qv"), cents, nprobe)).alias("bucket")
+    )
     candidates = (
-        buckets.select("c_id", "bucket")
-        .join(F.broadcast(probes), "bucket")
+        buckets.join(F.broadcast(probes), "bucket")
         .filter(F.col("q_id") != F.col("c_id"))
         .select("q_id", "c_id")
     )
-
-    cb = init_centroids(base, n_codes).withColumnRenamed("cluster", "j")
-
-    def sub_slices(qv: Column, alias: str) -> Column:
-        dim_col = F.size(qv)
-        pieces = []
-        for s in range(n_subspaces):
-            start = F.floor(dim_col * s / n_subspaces).cast("int") + 1
-            end = F.floor(dim_col * (s + 1) / n_subspaces).cast("int")
-            pieces.append(
-                F.struct(
-                    F.lit(s).alias("s"),
-                    F.slice(qv, start, F.greatest(end - start + 1, F.lit(0))).alias(alias),
-                )
-            )
-        return F.array(*pieces)
-
-    # corpus → codes: the pq_encode Arrow kernel when the PQ codebook is
-    # clean (same shuffle-removal as pq_adc_topk, same literal distance
-    # table), expression otherwise
-    mxk = _codebook_matrix(_collect_head_codebook(base, n_codes))
-    if mxk is not None:
-        kids, kmat = mxk
-        csub = _literal_csub(df.sparkSession, kids, kmat, n_subspaces)
-        codes = base.select(
-            F.col("vec_id").alias("c_id"),
-            _pq_codes_column(F.col("qv"), kids, kmat, n_subspaces, with_err=False).alias("__e"),
-        ).select(
-            "c_id",
-            F.posexplode(
-                F.array(*[F.col(f"__e.code_s{s}") for s in range(n_subspaces)])
-            ).alias("s", "code"),
-        )
-    else:
-        csub = cb.select("j", F.explode(sub_slices(F.col("cv"), "cv2")).alias("p")).select(
-            "j", "p.s", "p.cv2"
-        )
-        vsub = base.select("vec_id", F.explode(sub_slices(F.col("qv"), "sv")).alias("p")).select(
-            F.col("vec_id").alias("c_id"), "p.s", "p.sv"
-        )
-        cscored = vsub.join(F.broadcast(csub), "s").select(
-            "c_id", "s", "j", sq_dist_q(F.col("sv"), F.col("cv2")).alias("dist")
-        )
-        wc = Window.partitionBy("c_id", "s").orderBy("dist", "j")
-        codes = (
-            cscored.withColumn("__rn", F.row_number().over(wc))
-            .filter(F.col("__rn") == 1)
-            .select("c_id", "s", F.col("j").alias("code"))
-        )
-    qsub = qbase.select("q_id", F.explode(sub_slices(F.col("qv"), "sv")).alias("p")).select(
-        "q_id", "p.s", "p.sv"
-    )
-    dtab = qsub.join(F.broadcast(csub), "s").select(
-        "q_id", "s", F.col("j").alias("code"), sq_dist_q(F.col("sv"), F.col("cv2")).alias("qd")
-    )
+    codes, dtab = _adc_inputs(base, qbase, _codebook(head[:n_codes]), n_subspaces)
     adc = (
         candidates.join(codes, "c_id")
         .join(F.broadcast(dtab), ["q_id", "s", "code"])

@@ -49,7 +49,19 @@ def pin(df: DataFrame, reliable: bool | None = None) -> DataFrame:
     caller-facing signature should expose the choice as a
     ``reliable_checkpoint`` parameter and pass it through (see
     ``connected_components``).  See the module docstring for the
-    executor-loss trade each form makes."""
+    executor-loss trade each form makes.
+
+    Raises ``ValueError`` when a reliable checkpoint is asked for but no
+    checkpoint directory is set, naming both settings, instead of
+    Spark's generic error from inside ``checkpoint()``."""
     if reliable is None:
         reliable = reliable_default()
-    return df.checkpoint() if reliable else df.localCheckpoint()
+    if not reliable:
+        return df.localCheckpoint()
+    if not df.sparkSession.sparkContext.getCheckpointDir():
+        raise ValueError(
+            f"reliable checkpoint requested ({_ENV} or reliable=True) but no "
+            "checkpoint directory is set: call "
+            "spark.sparkContext.setCheckpointDir(<durable shared path>) first"
+        )
+    return df.checkpoint()

@@ -156,8 +156,6 @@ def grouped_kth_select(
     id_col: str = "event_id",
     p: float = 0.5,
     B: int = GROUPED_KTH_B,
-    materialize: bool = False,
-    reliable_checkpoint: bool | None = None,
 ) -> DataFrame:
     """Exact per-group k-th order statistic (k = max(1, ceil(p·n_g)) —
     p=0.5 is the lower median) with NO per-group value buffer and NO
@@ -199,8 +197,7 @@ def grouped_kth_select(
     percentile (the ``p`` output column dropped), so the single- and
     multi-p paths physically cannot drift."""
     return grouped_kth_select_multi(
-        df, group_cols, value_col=value_col, id_col=id_col, ps=[p], B=B,
-        materialize=materialize, reliable_checkpoint=reliable_checkpoint,
+        df, group_cols, value_col=value_col, id_col=id_col, ps=[p], B=B
     ).drop("p")
 
 
@@ -211,8 +208,6 @@ def grouped_kth_select_multi(
     id_col: str = "event_id",
     ps: list[float] = (0.25, 0.5, 0.75),
     B: int = GROUPED_KTH_B,
-    materialize: bool = False,
-    reliable_checkpoint: bool | None = None,
 ) -> DataFrame:
     """Several exact per-group order statistics from ONE shared level-1
     histogram pass: the fact table is scanned the same number of times
@@ -230,34 +225,7 @@ def grouped_kth_select_multi(
     :func:`grouped_kth_select` + its property test).
 
     Output: (group_cols…, p, id_col, value_col, k) — one row per
-    (group, p), k = max(1, ceil(p·n_g)).
-
-    ``materialize`` (r18, default **False** — measured): pin the three
-    GROUP-BOUNDED intermediates — ``stats`` (one row per group),
-    ``win1``/``win2`` (one row per (group, p)) — with
-    :func:`operators.materialize.pin`.  The r17 verdict hypothesized the
-    lazy form re-executes its input ~13× (robust_mad_select's dump: 34
-    scans over the whole file), but the EXECUTED ``== Final Plan ==``
-    section tells a different story: Spark's exchange reuse already
-    dedupes the identical subtrees (robust_mad final: 7 scans + 10
-    ReusedExchange; grouped_median: 4 + 7; rfm: 3 + 17), so the pins
-    only add eager job barriers (~3 per invocation) to save cheap
-    scan-side re-reads.  Interleaved A/B (min-of-5, alternating arm
-    order, parity-checked): pins LOSE on every consumer at both bench
-    SFs — sf0.01: robust_mad 1.91→2.74 s, grouped_median 0.81→1.29,
-    grouped_percentiles 0.81→1.15, rfm 1.50→1.71; sf0.1: 2.71→3.99,
-    1.11→1.84, 1.11→1.60, 1.87→2.12.  Lazy is therefore the default at
-    any SF this host can measure.  The knob stays because the trade
-    inverts when the INPUT is expensive enough that even the deduped
-    4-subtree scan-side re-execution dominates 3 job dispatches (a
-    multi-TB fact scan): flip ``materialize=True`` there;
-    ``reliable_checkpoint`` then follows the
-    :func:`operators.materialize.pin` contract (None → env switch)."""
-    from amazon_kinesis_data_analytics_flinktableapi_spark.operators.materialize import pin
-
-    def _pin(frame: DataFrame) -> DataFrame:
-        return pin(frame, reliable_checkpoint) if materialize else frame
-
+    (group, p), k = max(1, ceil(p·n_g))."""
     ps = list(ps)
     if not ps:
         raise ValueError("ps must name at least one percentile")
@@ -273,12 +241,10 @@ def grouped_kth_select_multi(
         & ~F.isnan(value_col)
         & (F.abs(F.col(value_col)) != F.lit(inf))
     ).select(*g, id_col, value_col)
-    stats = _pin(
-        v.groupBy(*g).agg(
-            F.count(F.lit(1)).alias("__n"),
-            F.min(value_col).alias("__lo"),
-            F.max(value_col).alias("__hi"),
-        )
+    stats = v.groupBy(*g).agg(
+        F.count(F.lit(1)).alias("__n"),
+        F.min(value_col).alias("__lo"),
+        F.max(value_col).alias("__hi"),
     )
     # one (group, p, k) row per requested percentile — a |groups|·|ps|
     # table, still keyed on the group
@@ -316,7 +282,7 @@ def grouped_kth_select_multi(
         .orderBy("__b")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    win1 = _pin(
+    win1 = (
         hist1.select(*g, "__b", "__c", F.sum("__c").over(w1).alias("__cum"))
         .join(ks.select(*g, "__p", F.col("__k").alias("__kk")), g)
         .filter((F.col("__cum") >= F.col("__kk")) & (F.col("__cum") - F.col("__c") < F.col("__kk")))
@@ -345,7 +311,7 @@ def grouped_kth_select_multi(
         .orderBy("__b")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    win2 = _pin(
+    win2 = (
         hist2.select(*gp, "__kk", "__b", "__c", F.sum("__c").over(w2).alias("__cum"))
         .filter((F.col("__cum") >= F.col("__kk")) & (F.col("__cum") - F.col("__c") < F.col("__kk")))
         .select(

@@ -15,8 +15,12 @@
                      Data-adaptive buckets (vs LSH's data-oblivious
                      hyperplanes) — better recall on clustered corpora.
 
-Dot products are built-in zip_with/aggregate expressions (functions.vector)
-— JVM-side, no Python per row.
+Exact cosine scoring is built-in zip_with/aggregate expressions
+(functions.vector), evaluated in the JVM.  Centroid assignment and
+probing (``ivf_topk``, ``ivf_topk_det``, ``semantic_dedup``) and the
+integer LSH sketches are Arrow kernels — one numpy matmul per batch in a
+Python worker; the centroid kernel is the dot top-n shared with
+``operators/clustering.py``.
 
 CACHE LIFETIME: several operators here (and in operators/dedup.py)
 ``.cache()`` an intermediate both sides of a self-join read — required,
@@ -37,6 +41,7 @@ from pyspark.sql import functions as F
 
 from amazon_kinesis_data_analytics_flinktableapi_spark.functions.text import half_up_round
 from amazon_kinesis_data_analytics_flinktableapi_spark.functions.vector import as_double, cosine, dot, norm
+from amazon_kinesis_data_analytics_flinktableapi_spark.operators.clustering import _codebook, _dot_topn_column
 
 
 def brute_topk(
@@ -253,121 +258,6 @@ def auto_nprobe(n_centroids: int, lo: int = 4) -> int:
     return min(n_centroids, max(lo, math.ceil(math.sqrt(max(n_centroids, 1)))))
 
 
-#: above this many centroids the per-centroid expression forest loses to
-#: one Arrow-batched matrix product — see _matrix_assign / _matrix_probes.
-#: Measured (sf0.1 embeddings, local[32], min-of-3): the matrix path wins
-#: at EVERY size above the cap — 16 centroids 1.03 s vs 1.65 s, 32: 0.84
-#: vs 3.17, 45: 0.62 vs 2.89 — because higher-order array expressions
-#: are INTERPRETED per row, not codegen'd.  r17 kept the cap at 16 so
-#: the registered 16-centroid queries stayed on the expression path
-#: ("plan stability"); r18 re-A/B'd AT the registered sizes (VERDICT r17
-#: item 6, interleaved alternating-arm min-of-4, parity-checked):
-#: ann_ivf_topk 1.39 → 0.86 s (1.62×), ann_recall_report 1.21 → 0.82
-#: (1.47×), semantic_dedup 2.90 → 2.48 (1.17×) — and a direct
-#: ivf_topk_det probe reads the crossover at n_centroids=4 (expr 0.87 vs
-#: matrix 0.89 — flat) / 8 (0.98 vs 0.85 — matrix wins).  Cap = 4:
-#: everything ≥ 5 lists takes the matrix path; plan-stability was not a
-#: perf argument and the dumps are re-committed (plans/r18).
-EXPR_CENTROID_CAP = 4
-
-
-def _matrix_assign(
-    vec_col,
-    cents: np.ndarray,
-    ids: np.ndarray | None = None,
-    null_assign: int | None = None,
-):
-    """Bucket assignment as ONE Arrow-batched matrix product: argmax of
-    X @ C^T per batch.  The expression path builds n_centroids
-    interpreted higher-order dots per row — fine to ~64 centroids, but an
-    auto-sized index at 1e9 vectors wants thousands of lists, where a
-    numpy matmul over a 10k-row Arrow batch is both faster and constant
-    plan size.  The centroid matrix ships once per executor inside the
-    UDF closure (≤2 MB at the auto cap).  Ties: argmax takes the FIRST
-    (lowest-position) centroid — for the det variants, whose centroid
-    rows arrive id-ascending with exact integer dots, this IS their
-    documented ties-toward-smaller-id rule; for float k-means dots exact
-    ties are measure-zero.  ``ids`` maps matrix positions to centroid
-    ids when they differ (det variants use vec_ids, not positions);
-    integer-quantized inputs stay exact end-to-end (|dot| ≤ ~2^46 per
-    term sum, well under 2^53, and int64 @ int64 stays int64)."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("long")
-    def assign(v: pd.Series) -> pd.Series:
-        return pd.Series(_assign_kernel(v.to_numpy(), cents, ids, null_assign))
-
-    return assign(vec_col)
-
-
-def _assign_kernel(vals: np.ndarray, cents: np.ndarray, ids, null_assign):
-    """Per-batch body of :func:`_matrix_assign`, module-level so the
-    empty-batch and NULL-handling invariants are directly unit-testable.
-
-    NULL embeddings: np.stack over a batch containing None would kill
-    the whole task (the _batch_sketches invariant, code-review r13) —
-    mask them and fill with null_assign.  The det callers pass the
-    smallest centroid id, which is EXACTLY the expression forest's
-    behavior (all-NULL dots tie, ties go to the smallest id —
-    oracle-attested on the adversarial fixture); the k-means caller
-    leaves None → NULL bucket → the row never ranks."""
-    # dtype=bool: on an EMPTY batch the comprehension infers float64
-    # and `~mask`/flatnonzero would TypeError (ADVICE r13)
-    mask = np.array([x is not None for x in vals], dtype=bool)
-    out = np.full(len(vals), null_assign, dtype=object)
-    if mask.any():
-        x = np.stack(vals[mask])
-        pos = (x @ cents.T).argmax(axis=1)
-        picked = pos if ids is None else ids[pos]
-        for j, val in zip(np.flatnonzero(mask), picked):
-            out[j] = int(val)
-    return out
-
-
-def _matrix_probes(
-    vec_col,
-    cents: np.ndarray,
-    nprobe: int,
-    ids: np.ndarray | None = None,
-    null_probes: list[int] | None = None,
-):
-    """Query-side top-``nprobe`` centroid ids, same Arrow-batched matrix
-    product.  Stable argsort on the negated dots ties toward the lower
-    matrix position = the lower centroid id (det ordering: s DESC, j ASC).
-    ``null_probes`` is the NULL-embedding fill — the det callers pass the
-    ``nprobe`` smallest centroid ids (the expression forest's all-NULL
-    tie order), k-means leaves None (row never probes)."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    fill = None if null_probes is None else np.array(null_probes, dtype="int64")
-
-    @pandas_udf("array<long>")
-    def probes(v: pd.Series) -> pd.Series:
-        return pd.Series(_probes_kernel(v.to_numpy(), cents, nprobe, ids, fill))
-
-    return probes(vec_col)
-
-
-def _probes_kernel(vals: np.ndarray, cents: np.ndarray, nprobe: int, ids, fill):
-    """Per-batch body of :func:`_matrix_probes` (module-level for direct
-    unit tests; NULL-tolerance mirrors :func:`_assign_kernel`)."""
-    # dtype=bool: empty-batch inference would make ~mask a TypeError
-    mask = np.array([x is not None for x in vals], dtype=bool)
-    out = np.full(len(vals), None, dtype=object)
-    if fill is not None:
-        for j in np.flatnonzero(~mask):
-            out[j] = fill
-    if mask.any():
-        x = np.stack(vals[mask])
-        pos = np.argsort(-(x @ cents.T), axis=1, kind="stable")[:, :nprobe]
-        picked = (pos if ids is None else ids[pos]).astype("int64")
-        for j, row in zip(np.flatnonzero(mask), picked):
-            out[j] = row
-    return out
-
-
 def _kmeans_centroids(sample: np.ndarray, n_centroids: int, seed: int, iters: int = 12) -> np.ndarray:
     """Lloyd's k-means on a driver-side sample, L2-normalized output.
 
@@ -386,18 +276,6 @@ def _kmeans_centroids(sample: np.ndarray, n_centroids: int, seed: int, iters: in
             if len(members):
                 cents[j] = members.mean(axis=0)
     return cents / np.maximum(np.linalg.norm(cents, axis=1, keepdims=True), 1e-12)
-
-
-def _centroid_sims(vec_col: str, cents: np.ndarray) -> list:
-    """One (dot-product, centroid-id) struct per centroid — ranking by the
-    struct ranks by similarity (struct comparison is field-ordered)."""
-    v = as_double(vec_col)
-    out = []
-    for j, c in enumerate(cents):
-        plane = _lit_darray(c)
-        d = F.aggregate(F.zip_with(v, plane, lambda x, y: x * y), F.lit(0.0), lambda a, x: a + x)
-        out.append(F.struct(d.alias("s"), F.lit(j).alias("j")))
-    return out
 
 
 def ivf_topk(
@@ -425,13 +303,14 @@ def ivf_topk(
     count via :func:`auto_n_centroids` (≈√n, clamped) — VERDICT r12 #6:
     a naive caller at 1e9 vectors previously got the fixture-scale 16
     lists and quadratic intra-list pair work.  Auto sizing costs one
-    ``corpus.count()`` (metadata-cheap on parquet).  Assignment strategy
-    switches with index size: ≤``EXPR_CENTROID_CAP`` lists use the
-    broadcast-literal expression forest; above it, one Arrow-batched
-    matrix product per batch (:func:`_matrix_assign`) — higher-order
-    array expressions are interpreted per row, so the matrix path is
-    3-5× faster from ~32 lists up (measured numbers at the cap's
-    definition) and constant plan size out to the 4096-list cap.
+    ``corpus.count()`` (metadata-cheap on parquet).
+
+    Eager snapshot: the training sample is collected and k-means runs on
+    the driver when this function is CALLED.  In the returned plan, list
+    assignment (top-1) and query probing (top-nprobe) are the shared
+    dot top-n Arrow kernel (``operators/clustering.py``): one float64
+    matmul per batch, constant plan size out to the 4096-list cap.  A
+    NULL vector gets a NULL bucket and no probes, so it never ranks.
     """
     n_rows: int | None = None
     if n_centroids is None:
@@ -468,8 +347,9 @@ def ivf_topk(
     if n_rows is None:
         n_rows = base.count()
     frac = min(1.0, train_limit / max(n_rows, 1))
+    # NULL vectors have no position to train on (they get a NULL bucket)
     sample = np.array(
-        [r[0] for r in base.sample(False, frac, seed).limit(train_limit).collect()],
+        [r[0] for r in base.sample(False, frac, seed).limit(train_limit).collect() if r[0] is not None],
         dtype=np.float64,
     )
     if sample.size == 0 and frac < 1.0:
@@ -477,39 +357,25 @@ def ivf_topk(
         # only happen with an explicit train_limit far below the corpus
         # size) — fall back to the head rather than failing the build
         sample = np.array(
-            [r[0] for r in base.limit(train_limit).collect()], dtype=np.float64
+            [r[0] for r in base.limit(train_limit).collect() if r[0] is not None], dtype=np.float64
         )
     if sample.size == 0:
         # an empty training sample would surface as an opaque numpy
         # AxisError inside _kmeans_centroids; name the actual problem
         raise ValueError("ivf_topk: corpus has no embeddings to train the index on")
-    cents = _kmeans_centroids(sample, n_centroids, seed)
-
-    use_matrix = len(cents) > EXPR_CENTROID_CAP
-    # corpus side: argmax centroid = max (sim, j) struct / matrix argmax
-    assign = (
-        _matrix_assign(as_double(vec_col), cents)
-        if use_matrix
-        else F.array_max(F.array(*_centroid_sims(vec_col, cents))).getField("j")
-    )
+    cb = _codebook(list(enumerate(_kmeans_centroids(sample, n_centroids, seed).tolist())), np.float64)
+    present = F.col(vec_col).isNotNull()
+    # corpus side: top-1 centroid; query side: top-nprobe centroids,
+    # exploded to one probe row each
     c = corpus.select(
         F.col(id_col).alias("c_id"),
         F.col(vec_col).alias("c_vec"),
-        assign.alias("bucket"),
-    )
-    # query side: top-nprobe centroids, exploded to one probe row each
-    probes = (
-        _matrix_probes(as_double(vec_col), cents, nprobe)
-        if use_matrix
-        else F.transform(
-            F.slice(F.sort_array(F.array(*_centroid_sims(vec_col, cents)), asc=False), 1, nprobe),
-            lambda s: s.getField("j"),
-        )
+        F.when(present, _dot_topn_column(as_double(vec_col), cb, 1)[0]).alias("bucket"),
     )
     q = queries.select(
         F.col(id_col).alias("q_id"),
         F.col(vec_col).alias("q_vec"),
-        F.explode(probes).alias("bucket"),
+        F.explode(F.when(present, _dot_topn_column(as_double(vec_col), cb, nprobe))).alias("bucket"),
     )
     scored = (
         c.join(F.broadcast(q), "bucket")
@@ -656,17 +522,6 @@ def quantized_sketches_all(qv_col: str, tables: list[list[list[int]]]) -> "F.Col
     return _sketches(F.col(qv_col))
 
 
-def _int_dot(qv_col: str, coeffs_ints: list[int]) -> "F.Column":
-    """Integer dot of a quantized vector column against literal integer
-    coefficients — exact (< 2⁵³) on any engine, same as the sketch dots."""
-    coeffs = F.expr("array(" + ",".join(f"{int(c)}L" for c in coeffs_ints) + ")")
-    return F.aggregate(
-        F.zip_with(F.col(qv_col), coeffs, lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda a, x: a + x,
-    )
-
-
 def _topk_tail(scored: DataFrame, k: int, scale: int) -> DataFrame:
     """(q_id, c_id, __sim) → ranked top-k with the shared output contract."""
     w = Window.partitionBy("q_id").orderBy(F.col("__sim").desc(), F.col("c_id"))
@@ -766,19 +621,22 @@ def ivf_topk_det(
     exact integer-quantized dot products with ties broken toward the
     smaller centroid id — every step reproducible by a SQL twin
     (``queries/llm._ann_ivf_oracle``).  The plan shape IS the production
-    IVF plan: one corpus scan to assign buckets (broadcast-literal
-    centroid expressions, codegen, no shuffle), queries probe their
-    ``nprobe`` best lists, candidate join equi on the bucket id.  Use
-    :func:`ivf_topk` (k-means-trained, recall-pinned in tests) when index
-    quality matters more than cross-engine determinism.
+    IVF plan: one corpus scan to assign buckets (no shuffle), queries
+    probe their ``nprobe`` best lists, candidate join equi on the bucket
+    id.  Use :func:`ivf_topk` (k-means-trained, recall-pinned in tests)
+    when index quality matters more than cross-engine determinism.
 
     ``n_centroids=None`` auto-sizes (:func:`auto_n_centroids`; an
     oracle-twinned caller passes the same explicit value to the oracle
-    generator).  Above ``EXPR_CENTROID_CAP`` the per-centroid expression
-    forest is replaced by the Arrow-batched matrix product — still
-    exactly deterministic: quantized dots are integers < 2^53 computed
-    as int64 @ int64, and first-wins argmax / stable argsort ARE the
-    ties-toward-smaller-id rule (centroid rows arrive id-ascending)."""
+    generator).
+
+    Eager snapshot: the centroid rows are collected when this function
+    is CALLED.  Assignment (top-1) and probing (top-nprobe) are the
+    shared dot top-n Arrow kernel (``operators/clustering.py``) — exactly
+    deterministic: quantized dots are int64 @ int64, stable argsort over
+    id-ascending centroid rows IS the ties-toward-smaller-id rule, and a
+    NULL or malformed row scores every dot 0, so it lands in the
+    smallest-id lists."""
     if n_centroids is None:
         n_centroids = auto_n_centroids(corpus.count())
     if nprobe is None:
@@ -791,36 +649,9 @@ def ivf_topk_det(
         .select(F.col(id_col).alias("j"), quantized(vec_col).alias("cqv"))
         .collect()
     )
-    # both strategies produce an assign expression and a probes expression
-    # over the quantized "qv" column; everything downstream (bucket join,
-    # self-pair filter, exact-cosine scoring, top-k tail) is shared — a
-    # fix to the tail applies to both paths by construction
-    if len(cents) > EXPR_CENTROID_CAP:
-        cmat = np.array([r["cqv"] for r in cents], dtype=np.int64)
-        cids = np.array([int(r["j"]) for r in cents], dtype=np.int64)
-        # null fills = the expression forest's all-NULL-dot tie behavior
-        # (centroid rows are id-ascending), so strategy equality holds
-        # even for NULL-embedding rows
-        assign = _matrix_assign(F.col("qv"), cmat, cids, null_assign=int(cids[0]))
-        probes = _matrix_probes(
-            F.col("qv"), cmat, nprobe, cids, null_probes=[int(x) for x in cids[:nprobe]]
-        )
-    else:
-        # struct(dot, -j): array_max picks the highest dot, ties toward the
-        # SMALLER centroid id (max of -j) — mirrored by the oracle's
-        # ORDER BY s DESC, j ASC
-        cdots = [
-            F.struct(
-                _int_dot("qv", r["cqv"]).alias("s"),
-                F.lit(-int(r["j"])).cast("long").alias("nj"),
-            )
-            for r in cents
-        ]
-        assign = -F.array_max(F.array(*cdots)).getField("nj")
-        probes = F.transform(
-            F.slice(F.sort_array(F.array(*cdots), asc=False), 1, nprobe),
-            lambda s: -s.getField("nj"),
-        )
+    cb = _codebook([(r["j"], r["cqv"]) for r in cents])
+    assign = _dot_topn_column(F.col("qv"), cb, 1)[0]
+    probes = _dot_topn_column(F.col("qv"), cb, nprobe)
 
     c = corpus.select(
         F.col(id_col).alias("c_id"), as_double(vec_col).alias("c_vec"), quantized(vec_col).alias("qv")
@@ -979,17 +810,22 @@ def semantic_dedup(
     dots, ties toward the smaller centroid id) and the drop rule uses exact
     double cosine with the id order as priority — no RNG, no k-means.
 
-    Scale shape: centroid assignment rides the corpus scan (broadcast
-    literal centroids, no shuffle); candidate pairs are generated ONLY
-    within a cluster via an ids+vectors equi self-join on the cluster id
-    (pair work ∝ Σ cluster² — n_centroids grows with the corpus exactly
-    like ivf lists); the drop set distincts ids only, and the final filter
-    is an anti join.  Nothing is ever pairwise across clusters.
+    Scale shape: centroid assignment rides the corpus scan (the shared
+    dot top-n Arrow kernel, no shuffle); candidate pairs are generated
+    ONLY within a cluster via an ids+vectors equi self-join on the
+    cluster id (pair work ∝ Σ cluster² — n_centroids grows with the
+    corpus exactly like ivf lists); the drop set distincts ids only, and
+    the final filter is an anti join.  Nothing is ever pairwise across
+    clusters.
 
     ``n_centroids=None`` auto-sizes (:func:`auto_n_centroids`, ≈√n) —
     SemDeDup's pair work is Σ cluster², so cluster count MUST grow with
-    the corpus; above ``EXPR_CENTROID_CAP`` assignment switches to the
-    exactly-deterministic Arrow matrix product (see :func:`ivf_topk_det`).
+    the corpus.
+
+    Eager snapshot: the centroid rows are collected when this function
+    is CALLED (see :func:`ivf_topk_det`).  A NULL embedding lands in the
+    smallest-id cluster (every dot 0) and can never form a candidate
+    pair (cosine(NULL, x) filters out), so it is always kept.
     """
     if n_centroids is None:
         n_centroids = auto_n_centroids(df.count())
@@ -999,22 +835,7 @@ def semantic_dedup(
         .select(F.col(id_col).alias("j"), quantized(vec_col).alias("cqv"))
         .collect()
     )
-    if len(cents) > EXPR_CENTROID_CAP:
-        cmat = np.array([r["cqv"] for r in cents], dtype=np.int64)
-        cids = np.array([int(r["j"]) for r in cents], dtype=np.int64)
-        # NULL embeddings land in the smallest-id cluster, exactly like
-        # the expression forest's all-NULL tie (oracle-attested); they can
-        # never form a candidate pair (cosine(NULL, x) filters out)
-        cluster = _matrix_assign(F.col("qv"), cmat, cids, null_assign=int(cids[0]))
-    else:
-        cdots = [
-            F.struct(
-                _int_dot("qv", r["cqv"]).alias("s"),
-                F.lit(-int(r["j"])).cast("long").alias("nj"),
-            )
-            for r in cents
-        ]
-        cluster = -F.array_max(F.array(*cdots)).getField("nj")
+    cluster = _dot_topn_column(F.col("qv"), _codebook([(r["j"], r["cqv"]) for r in cents]), 1)[0]
     base = (
         df.select(F.col(id_col).alias("id"), as_double(vec_col).alias("vd"), quantized(vec_col).alias("qv"))
         .select("id", "vd", cluster.alias("cluster"))

@@ -167,10 +167,10 @@ _PRIORITY: list[str] = [
     #   7-10  the four r12-stale names capacity-deferred by the r17 window,
     #   11-25 every query whose execution path this round's optimization
     #         changes touched (clustering Arrow kernels: kmeans/PQ/RQ/IVFPQ
-    #         family; EXPR_CENTROID_CAP 16→4: ann_ivf_topk, semantic_dedup,
-    #         ann_recall_report; selection-operator materialize knob:
-    #         grouped_median/percentiles, rfm_segmentation; pin() knob:
-    #         pagerank_dup_graph, prefix_filter_setjoin),
+    #         family; the IVF centroid kernel: ann_ivf_topk, semantic_dedup,
+    #         ann_recall_report; selection-operator materialize knob, since
+    #         removed: grouped_median/percentiles, rfm_segmentation; pin()
+    #         knob: pagerank_dup_graph, prefix_filter_setjoin),
     #   26-50 r13-stale fill, current relative order kept (25 of the 58
     #         r13-stale names; the remainder leads the r19+ rotation).
     "ann_lsh_topk",

@@ -2311,8 +2311,8 @@ def _kmeans_oracle(k: int = 8, n_iters: int = 2) -> str:
       FROM embeddings WHERE embedding IS NOT NULL
     )""",
         f"""c0 AS (
-      SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INTEGER) AS cluster, qv AS cv
-      FROM q QUALIFY row_number() OVER (ORDER BY vec_id) <= {k}
+      SELECT CAST(row_number() OVER (ORDER BY vec_id, qv) - 1 AS INTEGER) AS cluster, qv AS cv
+      FROM q QUALIFY row_number() OVER (ORDER BY vec_id, qv) <= {k}
     )""",
     ]
     for it in range(1, n_iters + 1):
@@ -2391,8 +2391,8 @@ def _pq_oracle(m: int = 4, n_codes: int = 8) -> str:
       FROM embeddings WHERE embedding IS NOT NULL
     ),
     cb AS (
-      SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INTEGER) AS j, qv AS cv
-      FROM q QUALIFY row_number() OVER (ORDER BY vec_id) <= {n_codes}
+      SELECT CAST(row_number() OVER (ORDER BY vec_id, qv) - 1 AS INTEGER) AS j, qv AS cv
+      FROM q QUALIFY row_number() OVER (ORDER BY vec_id, qv) <= {n_codes}
     ),
     vsub AS (
       {vsub}
@@ -2456,8 +2456,8 @@ def _pq_adc_oracle(m: int = 4, n_codes: int = 8, k: int = 10, n_queries: int = 5
       FROM embeddings WHERE embedding IS NOT NULL
     ),
     cb AS (
-      SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INTEGER) AS j, qv AS cv
-      FROM q QUALIFY row_number() OVER (ORDER BY vec_id) <= {n_codes}
+      SELECT CAST(row_number() OVER (ORDER BY vec_id, qv) - 1 AS INTEGER) AS j, qv AS cv
+      FROM q QUALIFY row_number() OVER (ORDER BY vec_id, qv) <= {n_codes}
     ),
     vsub AS (
       {vsub}
@@ -2539,8 +2539,8 @@ def _ivfpq_oracle(n_centroids: int = 16, nprobe: int = 4, m: int = 4,
       FROM embeddings WHERE embedding IS NOT NULL
     ),
     cent AS (
-      SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INTEGER) AS cluster, qv AS cv
-      FROM q QUALIFY row_number() OVER (ORDER BY vec_id) <= {n_centroids}
+      SELECT CAST(row_number() OVER (ORDER BY vec_id, qv) - 1 AS INTEGER) AS cluster, qv AS cv
+      FROM q QUALIFY row_number() OVER (ORDER BY vec_id, qv) <= {n_centroids}
     ),
     dots AS (
       SELECT q.vec_id, c.cluster,
@@ -2560,8 +2560,8 @@ def _ivfpq_oracle(n_centroids: int = 16, nprobe: int = 4, m: int = 4,
       SELECT q_id, c_id FROM buck JOIN probes USING (bucket) WHERE q_id <> c_id
     ),
     cb AS (
-      SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INTEGER) AS j, qv AS cv
-      FROM q QUALIFY row_number() OVER (ORDER BY vec_id) <= {n_codes}
+      SELECT CAST(row_number() OVER (ORDER BY vec_id, qv) - 1 AS INTEGER) AS j, qv AS cv
+      FROM q QUALIFY row_number() OVER (ORDER BY vec_id, qv) <= {n_codes}
     ),
     vsub AS (
       {vsub}
@@ -2969,8 +2969,8 @@ def q_tvd_drift_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM embeddings WHERE embedding IS NOT NULL
     ),
     c1 AS (
-      SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INTEGER) AS code1, qv AS cv1
-      FROM q QUALIFY row_number() OVER (ORDER BY vec_id) <= 8
+      SELECT CAST(row_number() OVER (ORDER BY vec_id, qv) - 1 AS INTEGER) AS code1, qv AS cv1
+      FROM q QUALIFY row_number() OVER (ORDER BY vec_id, qv) <= 8
     ),
     a1 AS (
       SELECT vec_id, qv, code1, cv1, dist AS err1 FROM (
@@ -2981,7 +2981,7 @@ def q_tvd_drift_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
       ) QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY dist, code1) = 1
     ),
     res AS (
-      SELECT vec_id, code1, err1,
+      SELECT vec_id, qv, code1, err1,
              list_transform(range(1, len(qv) + 1), i -> qv[i] - cv1[i]) AS rv
       FROM a1
     ),
@@ -2989,8 +2989,8 @@ def q_tvd_drift_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT 0 AS code2, list_transform(cv1, x -> CAST(0 AS BIGINT)) AS cv2
       FROM c1 WHERE code1 = 0
       UNION ALL
-      SELECT CAST(row_number() OVER (ORDER BY vec_id) - 8 AS INTEGER) AS code2, rv AS cv2
-      FROM res QUALIFY row_number() OVER (ORDER BY vec_id) BETWEEN 9 AND 15
+      SELECT CAST(row_number() OVER (ORDER BY vec_id, qv) - 8 AS INTEGER) AS code2, rv AS cv2
+      FROM res QUALIFY row_number() OVER (ORDER BY vec_id, qv) BETWEEN 9 AND 15
     ),
     a2 AS (
       SELECT vec_id, code2, dist AS err2 FROM (

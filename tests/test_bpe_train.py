@@ -158,3 +158,45 @@ def test_bpe_train_checkpoint_every_validated(spark):
 
     with _pytest.raises(ValueError, match="checkpoint_every"):
         bpe_train(_words(spark, [("ab", 1)]), 1, checkpoint_every=0)
+
+
+def test_bpe_encode_oracle_agrees_on_early_exhaustion(spark):
+    """code-review r13 #2: a vocabulary that exhausts before round k made
+    the oracle's cross-join chain empty while Spark applied the shorter
+    merge list.  Pin both sides equal on an exhausting corpus (all words
+    fully merge within 2 of the 8 rounds)."""
+    import os
+    import tempfile
+
+    import duckdb
+    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from amazon_kinesis_data_analytics_flinktableapi_spark.queries import REGISTRY
+    from tests.oracle_util import compare
+
+    d = tempfile.mkdtemp(prefix="bpe_exhaust_")
+    texts = ["ab ab a", "ab b a", "a b", None]
+    pdf = pd.DataFrame(
+        {
+            "doc_id": pd.array(range(len(texts)), dtype="int64"),
+            "text": texts,
+            "lang": ["en"] * len(texts),
+            "source": ["s0"] * len(texts),
+            "n_chars": pd.array([len(t) if t else 0 for t in texts], dtype="int64"),
+        }
+    )
+    pq.write_table(pa.Table.from_pandas(pdf, preserve_index=False),
+                   os.path.join(d, "documents.parquet"))
+    spec = REGISTRY["bpe_encode_token_counts"]
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{d}/documents.parquet'")
+    sdf = spec.fn(spark, d)
+    assert sdf.count() > 0  # Spark side emits rows after the early break
+    compare(sdf, con, spec.oracle)
+    # and the train table itself stops early, in agreement with the oracle
+    train = REGISTRY["bpe_train_merges"]
+    tdf = train.fn(spark, d)
+    assert tdf.count() < 8
+    compare(tdf, con, train.oracle)

@@ -29,11 +29,42 @@ QUANT = 1_000_000
 
 
 def _quantize(vec):
-    return [math.floor(float(x) * QUANT + 0.5) for x in vec]
+    return [None if x is None else math.floor(float(x) * QUANT + 0.5) for x in vec]
+
+
+def _zip_with_ok(a, b) -> bool:
+    """The ``zip_with`` + ``coalesce`` rule every vector operator scores
+    by: a length mismatch or any NULL element makes the distance/dot 0."""
+    return len(a) == len(b) and None not in a and None not in b
 
 
 def _d2(a, b):
-    return sum((x - y) ** 2 for x, y in zip(a, b))
+    return sum((x - y) ** 2 for x, y in zip(a, b)) if _zip_with_ok(a, b) else 0
+
+
+def _dot(a, b):
+    return sum(x * y for x, y in zip(a, b)) if _zip_with_ok(a, b) else 0
+
+
+def _nearest(v, cb: dict):
+    """(dist, code) of the nearest codebook entry, ties to the smaller code."""
+    return min((_d2(v, cv), j) for j, cv in cb.items())
+
+
+def _lloyd_mean(members, old):
+    """The update's per-position mean: sum of the non-NULL elements floor-
+    divided by the number of members that HAVE the position (NULL when
+    all of them are NULL); a cluster whose members have no positions at
+    all keeps its centroid."""
+    width = max(len(m) for m in members)
+    if width == 0:
+        return old
+    out = []
+    for j in range(width):
+        col = [m[j] for m in members if j < len(m)]
+        vals = [x for x in col if x is not None]
+        out.append(sum(vals) // len(col) if vals else None)
+    return out
 
 
 def ref_kmeans(vecs: dict, k: int, n_iters: int) -> dict:
@@ -51,13 +82,7 @@ def ref_kmeans(vecs: dict, k: int, n_iters: int) -> dict:
             new = {}
             for c, cv in cents.items():
                 members = [q[i] for i in ids if assign[i] == c]
-                if members:
-                    new[c] = [
-                        sum(m[j] for m in members) // len(members)
-                        for j in range(len(members[0]))
-                    ]
-                else:
-                    new[c] = cv
+                new[c] = _lloyd_mean(members, cv) if members else cv
             cents = new
     return {i: (assign[i], _d2(q[i], cents[assign[i]])) for i in ids}
 
@@ -103,7 +128,8 @@ def _emb_df(spark, vecs: dict):
         ]
     )
     return spark.createDataFrame(
-        [(int(i), None if v is None else [float(x) for x in v]) for i, v in sorted(vecs.items())],
+        [(int(i), None if v is None else [None if x is None else float(x) for x in v])
+         for i, v in sorted(vecs.items())],
         schema,
     )
 
@@ -284,12 +310,8 @@ def ref_ivfpq(vecs: dict, query_ids: list, n_centroids: int, nprobe: int,
     q = {i: _quantize(v) for i, v in sorted(vecs.items()) if v is not None}
     ids = sorted(q)
     cents = {c: q[i] for c, i in enumerate(ids[:n_centroids])}
-
-    def dot(a, b):
-        return sum(x * y for x, y in zip(a, b))
-
     bucket = {
-        i: max(((dot(q[i], cv), -c) for c, cv in cents.items()))[1] * -1 for i in ids
+        i: max(((_dot(q[i], cv), -c) for c, cv in cents.items()))[1] * -1 for i in ids
     }
     cb = {j: q[i] for j, i in enumerate(ids[:n_codes])}
 
@@ -307,7 +329,7 @@ def ref_ivfpq(vecs: dict, query_ids: list, n_centroids: int, nprobe: int,
         if qi not in q:
             continue
         probed = [c for _, c in sorted(
-            ((-dot(q[qi], cv), c) for c, cv in cents.items()))[:nprobe]]
+            ((-_dot(q[qi], cv), c) for c, cv in cents.items()))[:nprobe]]
         cand = [c for c in ids if c != qi and bucket[c] in probed]
         dt = {(s, j): _d2(sub(q[qi], s), sub(cv, s)) for s in range(m) for j, cv in cb.items()}
         scored = sorted((sum(dt[(s, codes[c][s])] for s in range(m)), c) for c in cand)
@@ -545,3 +567,215 @@ def test_rq_encode_err2_never_exceeds_err1(spark):
     assert any(r.err2_q < r.err1_q for r in rows), "stage 2 never improved — dead codebook"
     # the next-head codebook rows reconstruct their own residual exactly
     assert any(r.err2_q == 0 and r.err1_q > 0 for r in rows)
+
+
+# --- RQ and deterministic-IVF straight-line references -----------------------
+
+
+def _residual(v, cv):
+    """``zip_with(v, cv, x − y)``: NULL-padded to the longer side."""
+    return [
+        None if i >= len(v) or i >= len(cv) or v[i] is None or cv[i] is None else v[i] - cv[i]
+        for i in range(max(len(v), len(cv)))
+    ]
+
+
+def ref_rq(vecs: dict, n_codes1: int, n_codes2: int) -> dict:
+    """Straight-line two-stage RQ under the operator's contract: stage-1
+    codebook = the n_codes1 lowest-id vectors; codebook 2 = the zero
+    residual (code 0, code 0's width) + the residuals of the next
+    n_codes2 − 1 lowest-id vectors; (dist, code) ties."""
+    q = {i: _quantize(v) for i, v in sorted(vecs.items()) if v is not None}
+    ids = sorted(q)
+    cb1 = {j: q[i] for j, i in enumerate(ids[:n_codes1])}
+    stage1 = {}
+    for i in ids:
+        err1, c1 = _nearest(q[i], cb1)
+        stage1[i] = (c1, err1, _residual(q[i], cb1[c1]))
+    cb2 = {0: [0] * len(cb1[0])} if cb1 else {}
+    for j, i in enumerate(ids[n_codes1 : n_codes1 + n_codes2 - 1]):
+        cb2[j + 1] = stage1[i][2]
+    out = {}
+    for i, (c1, err1, rv) in stage1.items():
+        err2, c2 = _nearest(rv, cb2)
+        out[i] = (c1, c2, err1, err2)
+    return out
+
+
+def _det_quantize(vec):
+    """``similarity.quantized``: FLOOR(x·10⁶), no half-up."""
+    return None if vec is None else [None if x is None else math.floor(float(x) * 1_000_000) for x in vec]
+
+
+def _cosine(a, b):
+    """``functions.vector.cosine`` in the same left-to-right double order;
+    NULL for a NULL or zero-norm side."""
+    if a is None or b is None or len(a) != len(b):
+        return None
+    dot = na = nb = 0.0
+    for x, y in zip(a, b):
+        dot += x * y
+    for x in a:
+        na += x * x
+    for y in b:
+        nb += y * y
+    denom = math.sqrt(na) * math.sqrt(nb)
+    return dot / denom if denom != 0.0 else None
+
+
+def ref_ivf_buckets(vecs: dict, n_centroids: int, n: int) -> dict:
+    """Deterministic IVF lists (``ivf_topk_det`` / ``semantic_dedup``):
+    centroids are the n_centroids lowest-id rows (NULL embeddings
+    included), and each row's top-``n`` lists rank by (dot DESC, id ASC)
+    with the zip_with rule — a NULL row scores every dot 0, so it lands in
+    the smallest-id lists."""
+    qv = {i: _det_quantize(v) for i, v in vecs.items()}
+    cents = sorted(qv.items())[:n_centroids]
+    out = {}
+    for i, v in qv.items():
+        scored = sorted((-(_dot(v, cv) if v is not None and cv is not None else 0), j) for j, cv in cents)
+        out[i] = [j for _, j in scored[:n]]
+    return out
+
+
+def ref_ivf_topk_det(vecs: dict, query_ids: list, k: int, n_centroids: int, nprobe: int) -> set:
+    """(q_id, c_id, rn) of ``ivf_topk_det``: candidates share a probed
+    list, rank by (exact cosine DESC, c_id ASC); NULL similarities rank
+    last."""
+    bucket = ref_ivf_buckets(vecs, n_centroids, 1)
+    probes = ref_ivf_buckets(vecs, n_centroids, nprobe)
+    out = set()
+    for qi in query_ids:
+        cand = [c for c in vecs if c != qi and bucket[c][0] in probes[qi]]
+        sims = [(_cosine(vecs[qi], vecs[c]), c) for c in cand]
+        ranked = sorted(sims, key=lambda t: (t[0] is None, -(t[0] or 0.0), t[1]))
+        out |= {(qi, c, rn + 1) for rn, (_, c) in enumerate(ranked[:k])}
+    return out
+
+
+def ref_semantic_dedup(vecs: dict, threshold: float, n_centroids: int) -> set:
+    """(vec_id, cluster) kept by ``semantic_dedup``: drop a vector when a
+    smaller id in its cluster has cosine ≥ threshold with it."""
+    cluster = {i: b[0] for i, b in ref_ivf_buckets(vecs, n_centroids, 1).items()}
+    dropped = {
+        b
+        for a in vecs
+        for b in vecs
+        if a < b and cluster[a] == cluster[b] and (_cosine(vecs[a], vecs[b]) or -2.0) >= threshold
+    }
+    return {(i, cluster[i]) for i in vecs if i not in dropped}
+
+
+# --- every vector operator vs its reference on hostile rows ------------------
+
+
+def _hostile_tail(n: int = 30, dim: int = 8) -> dict:
+    """Clean head (the codebook source) whose tail carries every edge the
+    ``zip_with`` rule defines: ragged, NULL-element, empty and NULL
+    vectors."""
+    vecs = {i: [((i * 13 + j * 7) % 19 - 9) / 3.0 for j in range(dim)] for i in range(n)}
+    vecs[90] = [1.0, 2.0, 3.0]
+    vecs[91] = [0.5, None, 1.5, 2.0, -1.0, 0.25, 3.0, -2.0]
+    vecs[92] = []
+    vecs[93] = None
+    return vecs
+
+
+def _hostile_codebook() -> dict:
+    """The same corpus with a ragged and a NULL-element vector among the
+    lowest ids, so the codebook itself is not a clean rectangle and every
+    row takes the exact per-row fallback."""
+    vecs = _hostile_tail()
+    vecs[1] = [0.25, -1.5, 2.0, 1.0, -0.5]
+    vecs[2] = [1.0, -2.0, None, 0.75, 0.5, -1.0, 2.5, 0.0]
+    return vecs
+
+
+def _by_query(rows) -> dict:
+    got = {}
+    for r in sorted(rows, key=lambda r: (r["q_id"], r["rn"])):
+        got.setdefault(r["q_id"], []).append((r["c_id"], r["adc_dist"], r["rn"]))
+    return got
+
+
+def _check_against_references(spark, vecs: dict):
+    from amazon_kinesis_data_analytics_flinktableapi_spark.operators.clustering import (
+        ivfpq_topk,
+        pq_adc_topk,
+        rq_encode,
+    )
+
+    df = _emb_df(spark, vecs)
+    queries = df.filter("vec_id < 3")
+    qids = [0, 1, 2]
+    got = {
+        r["vec_id"]: (r["cluster"], r["dist_q"])
+        for r in kmeans_lloyd(df, k=4, n_iters=3).collect()
+    }
+    assert got == ref_kmeans(vecs, k=4, n_iters=3), "kmeans_lloyd"
+    got = {
+        r["vec_id"]: ([r[f"code_s{s}"] for s in range(4)], r["err_q"])
+        for r in pq_encode(df, n_subspaces=4, n_codes=4).collect()
+    }
+    assert got == ref_pq(vecs, m=4, n_codes=4), "pq_encode"
+    rows = pq_adc_topk(df, queries, k=5, n_subspaces=4, n_codes=4).collect()
+    want = {q_: v for q_, v in ref_adc(vecs, qids, m=4, n_codes=4, k=5).items() if v}
+    assert _by_query(rows) == want, "pq_adc_topk"
+    rows = ivfpq_topk(
+        df, queries, k=5, n_centroids=6, nprobe=2, n_subspaces=4, n_codes=4
+    ).collect()
+    want = ref_ivfpq(vecs, qids, n_centroids=6, nprobe=2, m=4, n_codes=4, k=5)
+    assert _by_query(rows) == want and want, "ivfpq_topk"
+    got = {
+        r["vec_id"]: (r["code1"], r["code2"], r["err1_q"], r["err2_q"])
+        for r in rq_encode(df, n_codes1=4, n_codes2=4).collect()
+    }
+    assert got == ref_rq(vecs, n_codes1=4, n_codes2=4), "rq_encode"
+
+
+def test_vector_operators_match_references_on_hostile_rows(spark):
+    """The Arrow kernels' per-row fallback must give ragged, NULL-element
+    and empty rows the ``zip_with`` semantics the references (and the
+    DuckDB twins) define: distance/dot 0, ties to the smallest code."""
+    _check_against_references(spark, _hostile_tail())
+
+
+def test_vector_operators_match_references_on_hostile_codebook(spark):
+    """A ragged and a NULL-element vector among the lowest ids make the
+    codebook non-rectangular: no matmul, every row scores through the
+    exact per-row fallback, and the results still equal the references."""
+    _check_against_references(spark, _hostile_codebook())
+
+
+def test_codebooks_deterministic_when_vec_id_repeats(spark):
+    """Repeated vec_ids among the lowest ids: ``qv`` breaks the tie in the
+    head collect and in ``init_centroids``, so builds over differently
+    ordered and partitioned copies of the corpus return identical rows."""
+    from pyspark.sql.types import ArrayType, DoubleType, LongType, StructField, StructType
+
+    from amazon_kinesis_data_analytics_flinktableapi_spark.operators.clustering import (
+        ivfpq_topk,
+        rq_encode,
+    )
+
+    rows = [(0, [float(j), -1.0, 2.0, 0.5]) for j in range(4)]  # vec_id 0 four times
+    rows += [(1, [0.5, 0.5, -0.5, 1.0]), (1, [-2.0, 1.0, 0.0, 0.25])]
+    rows += [(i, [((i * 7 + j * 5) % 11 - 5) / 2.0 for j in range(4)]) for i in range(2, 40)]
+    schema = StructType(
+        [StructField("vec_id", LongType()), StructField("embedding", ArrayType(DoubleType()))]
+    )
+    copies = [
+        spark.createDataFrame(rows, schema).coalesce(1),
+        spark.createDataFrame(list(reversed(rows)), schema).repartition(3),
+    ]
+    ops = {
+        "kmeans": lambda df: kmeans_lloyd(df, k=3, n_iters=2),
+        "pq": lambda df: pq_encode(df, n_subspaces=2, n_codes=3),
+        "ivfpq": lambda df: ivfpq_topk(
+            df, df.filter("vec_id = 3"), k=5, n_centroids=3, nprobe=2, n_subspaces=2, n_codes=3
+        ),
+        "rq": lambda df: rq_encode(df, n_codes1=3, n_codes2=3),
+    }
+    for name, op in ops.items():
+        a, b = (sorted(tuple(r) for r in op(df).collect()) for df in copies)
+        assert a == b and a, name

@@ -46,3 +46,22 @@ def test_lower_median_odd_even_and_duplicates(spark):
 def test_degenerate_all_equal_values(spark):
     out = _run_on(spark, [4.25] * 9)
     assert out[0]["median_value"] == 4.25 and out[0]["k"] == 5
+
+
+def test_robust_mad_select_final_join_is_broadcast(spark):
+    """robust_mad_select's final med ⋈ mad ⋈ n join chain is
+    broadcast-hinted (all sides are one-row-per-group frames; the
+    checkpointed med side's LogicalRDD has no size estimate, so the
+    unhinted planner kept that join a SortMergeJoin even in the AQE-final
+    plan).  Pin: the output joins — the first two join nodes of the
+    static physical plan, which the hint controls directly (AQE
+    conversion of the operator-internal estimate-based SMJs is runtime-
+    and size-dependent, so the executed sf0.1 dump in plans/r18/ carries
+    that half of the evidence) — are BroadcastHashJoin."""
+    from tests.conftest import SF_SMOKE
+
+    df = REGISTRY["robust_mad_select"].fn(spark, SF_SMOKE)
+    plan = df._jdf.queryExecution().sparkPlan().toString()
+    joins = [l for l in plan.splitlines() if "Join" in l]
+    assert len(joins) >= 2
+    assert all("BroadcastHashJoin" in l for l in joins[:2]), joins[:2]

@@ -306,21 +306,27 @@ def test_auto_nprobe_rule_two_corpus_sizes():
 def test_matrix_kernels_empty_batch_and_nulls():
     """ADVICE r13: an empty Arrow batch made the None-mask comprehension
     infer dtype float64, so `~mask` raised TypeError inside the task.
-    The kernels are module-level now — pin empty, all-NULL, and mixed
-    batches directly."""
-    cents = np.array([[1.0, 0.0], [0.0, 1.0]])
-    ids = np.array([7, 9], dtype=np.int64)
+    Pin empty, all-NULL, and mixed batches on the shared kernels
+    directly: a NULL row scores every dot/distance 0, so it takes the
+    smallest ids (callers needing a NULL bucket mask the row)."""
+    from amazon_kinesis_data_analytics_flinktableapi_spark.operators.clustering import (
+        _codebook,
+        _dot_topn_batch,
+        _sq_argmin_batch,
+    )
+
+    cb = _codebook([(7, [1.0, 0.0]), (9, [0.0, 1.0])], np.float64)
     empty = np.array([], dtype=object)
-    assert list(S._assign_kernel(empty, cents, None, None)) == []
-    assert list(S._probes_kernel(empty, cents, 2, None, None)) == []
+    assert list(_dot_topn_batch(empty, cb, 1)) == []
+    assert list(_dot_topn_batch(empty, cb, 2)) == []
+    assert _sq_argmin_batch(empty, _codebook([(0, [1, 0])]))[0].shape == (1, 0)
     allnull = np.array([None, None], dtype=object)
-    assert list(S._assign_kernel(allnull, cents, ids, 7)) == [7, 7]
-    fills = np.array([7, 9], dtype=np.int64)
-    probed = S._probes_kernel(allnull, cents, 2, ids, fills)
-    assert [list(p) for p in probed] == [[7, 9], [7, 9]]
-    mixed = np.array([None, np.array([2.0, 1.0])], dtype=object)
-    got = S._assign_kernel(mixed, cents, ids, None)
-    assert got[0] is None and got[1] == 7  # argmax dot -> first centroid (id 7)
+    assert [list(p) for p in _dot_topn_batch(allnull, cb, 1)] == [[7], [7]]
+    assert [list(p) for p in _dot_topn_batch(allnull, cb, 2)] == [[7, 9], [7, 9]]
+    pos, dist = _sq_argmin_batch(allnull, _codebook([(0, [1, 0]), (1, [0, 1])]))
+    assert pos.tolist() == [[0, 0]] and dist.tolist() == [[0, 0]]
+    mixed = np.array([None, np.array([2.0, 1.0]), np.array([0.5, 3.0])], dtype=object)
+    assert [list(p) for p in _dot_topn_batch(mixed, cb, 1)] == [[7], [7], [9]]
 
 
 def _make_clusters(spark, n, seed):
@@ -398,43 +404,62 @@ def test_pq_adc_autosized_recall_two_corpus_sizes(spark):
     )
 
 
-def test_ivf_topk_det_matrix_path_equals_expression_path(vectors):
-    """Above EXPR_CENTROID_CAP the det variant switches to the Arrow
-    matrix product; determinism demands the two strategies agree EXACTLY
-    (integer dots < 2^53, first-wins argmax == ties-toward-smaller-id).
-    Forcing n_centroids just past the cap on the same corpus must
-    reproduce the expression path's output bit-for-bit."""
+def _rows(df) -> dict:
+    return {r.vec_id: None if r.embedding is None else list(r.embedding) for r in df.collect()}
+
+
+def test_ivf_topk_det_matches_reference(vectors):
+    """Assignment and probing through the shared dot top-n kernel must
+    reproduce the straight-line det-IVF definition exactly (integer dots,
+    ties toward the smaller centroid id), cosine to the 6th decimal."""
+    from tests.test_clustering import _cosine, ref_ivf_topk_det
+
     queries = vectors.filter(F.col("vec_id") < 5)
-    n = S.EXPR_CENTROID_CAP + 8
-    expr_cap = S.EXPR_CENTROID_CAP
-    try:
-        S.EXPR_CENTROID_CAP = 10**9  # force expression path at n centroids
-        a = sorted(
-            (r.q_id, r.c_id, r.cos_sim, r.rn)
-            for r in S.ivf_topk_det(vectors, queries, k=10, n_centroids=n, nprobe=3).collect()
-        )
-    finally:
-        S.EXPR_CENTROID_CAP = expr_cap
-    b = sorted(
-        (r.q_id, r.c_id, r.cos_sim, r.rn)
-        for r in S.ivf_topk_det(vectors, queries, k=10, n_centroids=n, nprobe=3).collect()
+    got = S.ivf_topk_det(vectors, queries, k=10, n_centroids=12, nprobe=3).collect()
+    vecs = _rows(vectors)
+    assert {(r.q_id, r.c_id, r.rn) for r in got} == ref_ivf_topk_det(
+        vecs, list(range(5)), k=10, n_centroids=12, nprobe=3
     )
-    assert a == b and len(b) > 0
+    for r in got:
+        assert r.cos_sim == pytest.approx(_cosine(vecs[r.q_id], vecs[r.c_id]), abs=1e-6)
 
 
-def test_semantic_dedup_matrix_path_equals_expression_path(spark):
-    from amazon_kinesis_data_analytics_flinktableapi_spark.operators.similarity import semantic_dedup
+def test_semantic_dedup_matches_reference(spark):
+    from tests.test_clustering import ref_semantic_dedup
 
     vectors = _make_clusters(spark, 300, seed=23)
-    n = S.EXPR_CENTROID_CAP + 8
-    expr_cap = S.EXPR_CENTROID_CAP
-    try:
-        S.EXPR_CENTROID_CAP = 10**9
-        a = sorted((r.vec_id, r.cluster) for r in semantic_dedup(vectors, n_centroids=n).collect())
-    finally:
-        S.EXPR_CENTROID_CAP = expr_cap
-    b = sorted((r.vec_id, r.cluster) for r in semantic_dedup(vectors, n_centroids=n).collect())
-    assert a == b and len(b) > 0
+    got = {(r.vec_id, r.cluster) for r in S.semantic_dedup(vectors, n_centroids=12).collect()}
+    assert got == ref_semantic_dedup(_rows(vectors), threshold=0.35, n_centroids=12) and got
+
+
+def _vectors_with_null(spark, n=120, dim=8):
+    rng = np.random.RandomState(3)
+    rows = [(i, [float(x) for x in rng.randn(dim)]) for i in range(n)]
+    rows.append((n, None))  # the hostile row
+    schema = StructType(
+        [StructField("vec_id", LongType()), StructField("embedding", ArrayType(FloatType()))]
+    )
+    return spark.createDataFrame(rows, schema)
+
+
+def test_ivf_kernels_tolerate_null_embeddings(spark):
+    """code-review r13 #1: np.stack over a batch containing None killed the
+    task.  A NULL embedding must keep each caller's contract: the det
+    variants put it in the smallest-id list (it can never rank, its
+    cosine is NULL), ``semantic_dedup`` keeps it in the smallest-id
+    cluster, and the k-means ``ivf_topk`` gives it a NULL bucket."""
+    from tests.test_clustering import ref_semantic_dedup
+
+    vecs = _vectors_with_null(spark)
+    queries = vecs.filter(F.col("vec_id") < 3)
+    out = S.ivf_topk_det(vecs, queries, k=5, n_centroids=12, nprobe=3).collect()
+    assert out and all(r.c_id != 120 and r.q_id != 120 for r in out)
+    kept = {(r.vec_id, r.cluster) for r in S.semantic_dedup(vecs, threshold=0.99, n_centroids=12).collect()}
+    assert kept == ref_semantic_dedup(_rows(vecs), threshold=0.99, n_centroids=12)
+    assert (120, 0) in kept
+    with_null_query = vecs.filter((F.col("vec_id") < 3) | (F.col("vec_id") == 120))
+    out = S.ivf_topk(vecs, with_null_query, k=5, n_centroids=8, nprobe=3).collect()
+    assert out and all(r.c_id != 120 and r.q_id != 120 for r in out)
 
 
 def test_ann_int8_topk_overlap_vs_exact_dot(spark):

@@ -2,9 +2,12 @@
 
 Writes ``plans/<tag>/<query>_<suffix>.txt`` — the optimization-round
 evidence files (``_before`` / ``_after``): each query is EXECUTED first
-(noop-equivalent ``count()``, the bench's timed action) so the formatted
-output carries the ``== Final Plan ==`` AQE result, not the initial
-estimate-based plan.
+through ``queryExecution().toRdd().count()`` so the formatted output
+carries the ``== Final Plan ==`` AQE result, not the initial
+estimate-based plan.  That action runs the DataFrame's own physical plan
+in full; a ``DataFrame.count()`` would not — Catalyst re-plans it and
+prunes every column (Python UDFs included) that cannot change the row
+count.
 
 Usage::
 
