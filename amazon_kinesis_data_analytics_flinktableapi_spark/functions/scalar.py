@@ -110,12 +110,11 @@ def finite_or_null(col: Column | str) -> Column:
     value deserialized fine and aggregates/joins treat it by SQL
     semantics on both engines.
 
-    Implementation note (r15 A/B, tools/ab_nonfinite.py): one
-    ``abs(x) <= DBL_MAX`` comparison — NaN fails every comparison and
-    ±inf exceeds DBL_MAX, so this is value-identical to the spelled-out
-    ``NOT isnan AND abs != inf`` form while dropping two branches from
-    the codegen'd scan predicate (measured ~25% cheaper on a bare
-    events-scan count at sf0.1)."""
+    Implementation note (r15 A/B): one ``abs(x) <= DBL_MAX`` comparison
+    — NaN fails every comparison and ±inf exceeds DBL_MAX, so this is
+    value-identical to the spelled-out ``NOT isnan AND abs != inf`` form
+    while dropping two branches from the codegen'd scan predicate
+    (measured ~25% cheaper on a bare events-scan count at sf0.1)."""
     c = F.col(col) if isinstance(col, str) else col
     return c.isNull() | (F.abs(c) <= F.lit(_DBL_MAX))
 
@@ -133,10 +132,10 @@ def finite_embedding(col: Column | str) -> Column:
     null fills, neardup NULL tests).  An empty array passes (forall
     over empty is TRUE on both engines).
 
-    Implementation note (r15 A/B, tools/ab_nonfinite.py): higher-order
-    array lambdas run INTERPRETED per element, so every check in the
-    lambda is paid dim times per row outside codegen — the original
-    3-check lambda cost ~10 µs/vector on a bare embeddings-scan count.
+    Implementation note (r15 A/B): higher-order array lambdas run
+    INTERPRETED per element, so every check in the lambda is paid dim
+    times per row outside codegen — the original 3-check lambda cost
+    ~10 µs/vector on a bare embeddings-scan count.
     One ``abs(x) <= DBL_MAX`` comparison halves that: NaN fails every
     comparison, ±inf exceeds DBL_MAX, and a NULL element NULL-evaluates
     — ``coalesce(.., false)`` restores the exact three-valued contract

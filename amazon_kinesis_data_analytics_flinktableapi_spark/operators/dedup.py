@@ -919,8 +919,10 @@ def survivorship_merge(
       key, so no engine-order dependence);
     * ``modal_lang`` — most frequent member language, ties broken
       (count desc, lang asc);
-    * ``provenance`` — the sorted distinct source set (sorted AFTER
-      ``collect_set`` so aggregation order cannot leak into the value).
+    * ``provenance`` — the sorted distinct source set joined with ``,``
+      (sorted AFTER ``collect_set`` so aggregation order cannot leak into
+      the value; a string, not an array, so every result compare can
+      canonicalize it).
 
     Scale shape: ONE hash aggregate keyed by cluster (min / max / max_by /
     min_by / collect_set — all map-side-combinable partials), plus a small
@@ -941,7 +943,7 @@ def survivorship_merge(
         F.max_by(F.col(id_col), composite).alias("longest_doc_id"),
         F.max(len_col).alias("golden_n_chars"),
         F.min_by(F.col(source_col), F.col(id_col)).alias("golden_source"),
-        F.array_sort(F.collect_set(source_col)).alias("provenance"),
+        F.array_join(F.array_sort(F.collect_set(source_col)), ",").alias("provenance"),
     )
     lc = members.groupBy(cluster_col, lang_col).agg(F.count(F.lit(1)).alias("cnt"))
     w = Window.partitionBy(cluster_col).orderBy(

@@ -3,7 +3,7 @@
 The engine's malformed-vector swallow (``functions.scalar.finite_embedding``)
 is a higher-order array lambda, which Spark evaluates INTERPRETED per
 element — ~7.6 µs/vector even after the r15 single-comparison cheapening
-(tools/ab_nonfinite.py --micro).  One scan absorbs that; a curation
+(measured on a bare embeddings scan).  One scan absorbs that; a curation
 pipeline that scans the same corpus dozens of times (dedup, ANN, drift,
 recall audits) pays it dozens of times.
 

@@ -24,7 +24,6 @@ from amazon_kinesis_data_analytics_flinktableapi_spark.operators import multimod
 from amazon_kinesis_data_analytics_flinktableapi_spark.operators import similarity as S
 from amazon_kinesis_data_analytics_flinktableapi_spark.queries import DUCK_TOKS, load, nse_oracle, query
 from amazon_kinesis_data_analytics_flinktableapi_spark.functions.scalar import (
-    finite_embedding,  # noqa: F401 — module attribute is tools/ab_nonfinite.py's patch point
     swallow_malformed_embeddings,
 )
 

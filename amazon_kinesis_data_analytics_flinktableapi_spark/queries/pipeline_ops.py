@@ -1806,7 +1806,7 @@ def q_embedding_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
                AS longest_doc_id,
              max(n_chars) AS golden_n_chars,
              arg_min(source, doc_id) AS golden_source,
-             list_sort(list_distinct(list(source))) AS provenance
+             array_to_string(list_sort(list_distinct(list(source))), ',') AS provenance
       FROM members GROUP BY cluster_id
     )
     SELECT a.cluster_id, a.golden_doc_id, a.n_members, a.longest_doc_id,

@@ -1,9 +1,13 @@
-"""Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
+"""Headline benchmark CLI: runs the headline queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-JSON line {"metric", "value", "unit", "queries", "sf"}.
+JSON line {"metric", "value", "unit", "queries", "sf", "action", ...}.
 
-Timing = full pipeline per query (plan + execute + row-count materialize),
-after one untimed warmup of a trivial job to amortize JVM/session startup.
+Every timed action computes the whole result.  A headline query is timed
+from ``spec.fn`` (plan, plus any build-time collects) to the end of
+``perfbench.batch.full_result``, a noop write; never ``.count()``, which
+lets Catalyst prune every column the count does not need, Python UDFs
+included.  The benchmark of record is ``perfbench/run.py``: judge a change
+by its paired parent/change runs, not by comparing this line across runs.
 """
 
 from __future__ import annotations
@@ -13,307 +17,20 @@ import os
 import sys
 import time
 
+from perfbench.batch import full_result
 
-def _canary_samples() -> list[float]:
-    """Host-noise canary (VERDICT r8 #7): a FIXED CPU-bound workload —
-    pinned-seed 3000x3000 float64 matmul, ~54 GFLOP — timed min-of-3.
-    The work is identical every round, so the number moves only with host
-    speed: r8's +9.8% headline drift was attributable to a uniformly slow
-    host window only by cross-referencing which files the diff touched;
-    with canary_sec in the artifact, a slow window is visible in-band and
-    the verdict can normalize round-over-round comparisons."""
-    import numpy as np
+#: samples per timed number.  Shared hosts have multi-second slow
+#: windows; three back-to-back samples spread across one and the min reads
+#: the steady-state cost.  A query's first sample doubles as its warm-up: its
+#: first execution at the target SF compiles the AQE-final generated
+#: classes (AQE re-plans per data size, so warming at another SF compiles
+#: different ones).
+RUNS = 3
 
-    a = np.random.RandomState(0).rand(3000, 3000)
-    (a @ a).sum()  # warm BLAS dispatch/threads once, untimed
-    samples = []
-    # min-of-5 (VERDICT r11 #7): the r11 serial readings swung 0.08 →
-    # 0.216 s while the parallel canary was FLAT, i.e. three samples can
-    # all land inside one scheduler/frequency hiccup; five samples at
-    # ~0.3 s each widen the window coverage for free.  (Core pinning via
-    # sched_setaffinity was rejected: BLAS may still fan out, and a
-    # pinned core's frequency is EXACTLY the unstable quantity.)
-    for _ in range(5):
-        t = time.perf_counter()  # monotonic: NTP steps must not corrupt the reference
-        (a @ a).sum()
-        samples.append(round(time.perf_counter() - t, 4))
-    return samples
-
-
-def _parallel_canary_samples(spark) -> list[float]:
-    """All-cores companion to the BLAS canary: a FIXED CPU-bound Spark
-    job (sum of id % 1000 over 6e9 rows, one partition per core,
-    whole-stage codegen — no IO, no shuffle) timed min-of-3.  The
-    single-threaded canary corrects uniform host slowdowns but is BLIND
-    to multi-core contention (measured: throughput metrics dipped ~30%
-    in windows where the BLAS canary was flat); this one runs through
-    the same 32-way task scheduling the queries use, so a contended
-    window moves it the same way it moves them."""
-    df = spark.range(0, 6_000_000_000, 1, spark.sparkContext.defaultParallelism)
-    df.selectExpr("sum(id % 1000)").collect()  # warm codegen, untimed
-    samples = []
-    for _ in range(3):
-        t = time.perf_counter()
-        df.selectExpr("sum(id % 1000)").collect()
-        samples.append(round(time.perf_counter() - t, 4))
-    return samples
-
-
-def _sched_canary_samples(spark) -> list[float]:
-    """Scheduling-latency companion to the two compute canaries: a FIXED
-    job of 1,024 near-empty tasks (count over a pre-materialized 1024-
-    partition range), timed min-of-3.  Motivation (r12 forensics): the
-    r12 bench depressed exactly the three latency-bound metrics —
-    micro-batch streaming replay and both 16-way small-task kinesis
-    scans — by 25-45% simultaneously, while every long-running batch
-    query was normal and BOTH canaries (single-thread BLAS, 32-way
-    whole-stage codegen) were only ~16% slower; all three metrics then
-    recovered to best-ever in r13 with zero code change on their paths.
-    The common substrate of the affected metrics is many small
-    scheduling quanta (task dispatch, micro-batch planning, Python
-    worker reuse), which a throughput-bound canary cannot see.  This
-    probe times 1,024 task dispatches doing ~no work, so a host window
-    that taxes scheduling/process churn moves it the way it moved the
-    r12 numbers — making that third noise mode visible in-band."""
-    df = spark.range(0, 1024, 1, 1024)
-    df.count()  # warm task-dispatch path, untimed
-    samples = []
-    for _ in range(3):
-        t = time.perf_counter()
-        df.count()
-        samples.append(round(time.perf_counter() - t, 4))
-    return samples
-
-
-def _bench_dir() -> str:
-    """Directory holding BENCH_r*.json / BENCH_SELF_r*.json artifacts.
-    Overridable (``SPARK_GRAFT_BENCH_DIR``) so tests can point the
-    prev-recovery logic at a fixture directory."""
-    return os.environ.get(
-        "SPARK_GRAFT_BENCH_DIR", os.path.dirname(os.path.abspath(__file__))
-    )
-
-
-def _current_round() -> int | None:
-    """Round being benched.  ``SPARK_GRAFT_BENCH_ROUND=<N>`` pins it;
-    otherwise inferred as max(existing BENCH_r*.json index) + 1 — the
-    driver writes round N's envelope only AFTER round N's bench run, so
-    while round N runs, files ≤ N−1 exist.  The inference keeps a
-    same-session re-run (which has already written BENCH_SELF_r{N}.json)
-    from comparing against its own prior output.
-
-    Sidecar indices count too (ADVICE r12), but differently: an
-    ENVELOPE for round N is written by the driver AFTER round N's bench
-    (→ current ≥ N+1), while a SIDECAR labeled N means a bench run
-    executed *as* round N — round N is in progress or being re-run
-    (→ current ≥ N, not N+1; +1 here would drift every later round's
-    label whenever a dev run pre-wrote the current round's sidecar).
-    ``max(max_envelope+1, max_sidecar)`` therefore (a) labels a
-    sidecar-only dev dir with the sidecar's own round, so the n ≥ cur
-    exclusion in :func:`_prev_bench` drops it and the run can't compare
-    against its own prior output, and (b) leaves the driver's inference
-    unchanged when a same-round dev sidecar already exists."""
-    import glob
-    import re
-
-    cur = os.environ.get("SPARK_GRAFT_BENCH_ROUND")
-    if cur and cur.isdigit():
-        return int(cur)
-    env_seen, self_seen = [], []
-    for p in glob.glob(os.path.join(_bench_dir(), "BENCH_r*.json")) + glob.glob(
-        os.path.join(_bench_dir(), "BENCH_SELF_r*.json")
-    ):
-        m = re.fullmatch(r"BENCH(_SELF)?_r(\d+)\.json", os.path.basename(p))
-        if m:
-            (self_seen if m.group(1) else env_seen).append(int(m.group(2)))
-    cands = ([max(env_seen) + 1] if env_seen else []) + (
-        [max(self_seen)] if self_seen else []
-    )
-    return max(cands) if cands else None
-
-
-def _prev_bench(sf: float | None = None) -> tuple[str, dict, str] | tuple[None, None, str]:
-    """Previous round's full bench JSON, with an explicit miss reason.
-
-    Returns ``(artifact_name, parsed_output, source)`` or
-    ``(None, None, reason)``.  Recovery order per candidate round N
-    (newest first):
-
-    1. ``BENCH_SELF_r{N}.json`` — the full output line this script
-       persists itself (truncation-proof; VERDICT r11 #2: the driver
-       envelope truncates ``tail`` to 2,000 chars, which cut r10's JSON
-       head and silently dropped a whole round of normalized deltas).
-    2. The driver envelope's ``parsed`` field (full dict when the tail
-       survived truncation).
-    3. Tail-line recovery (legacy fallback).
-
-    When ``sf`` is given, a candidate at a DIFFERENT sf is skipped and
-    the ladder continues (same round's envelope, then older rounds) —
-    so one dev-sf sidecar cannot mask the round's valid envelope and
-    kill normalization (cross-SF deltas are meaningless; the caller
-    passes the sf it is benching)."""
-    import glob
-    import re
-
-    cur_n = _current_round()
-    here = _bench_dir()
-    rounds: dict[int, dict[str, str]] = {}
-    for pat, kind in [("BENCH_SELF_r*.json", "self"), ("BENCH_r*.json", "envelope")]:
-        for p in glob.glob(os.path.join(here, pat)):
-            m = re.fullmatch(r"BENCH(_SELF)?_r(\d+)\.json", os.path.basename(p))
-            if not m:
-                continue
-            n = int(m.group(2))
-            if cur_n is not None and n >= cur_n:
-                continue
-            rounds.setdefault(n, {})[kind] = p
-
-    def _usable(d) -> bool:
-        return (
-            isinstance(d, dict)
-            and bool(d.get("canary_sec"))
-            and isinstance(d.get("queries"), dict)
-            and (sf is None or d.get("sf") == sf)
-        )
-
-    if not rounds:
-        return None, None, "no prior BENCH_r*/BENCH_SELF_r* artifact found"
-    for n in sorted(rounds, reverse=True):
-        paths = rounds[n]
-        if "self" in paths:  # 1. truncation-proof sidecar
-            try:
-                with open(paths["self"]) as f:
-                    prev = json.load(f)
-                if _usable(prev):
-                    return os.path.basename(paths["self"]), prev, "self_sidecar"
-            except (OSError, json.JSONDecodeError):
-                pass
-        if "envelope" in paths:
-            try:
-                with open(paths["envelope"]) as f:
-                    env = json.load(f)
-            except (OSError, json.JSONDecodeError):
-                continue
-            if _usable(env):  # pre-envelope era: the file IS the output
-                return os.path.basename(paths["envelope"]), env, "bare"
-            if _usable(env.get("parsed")):  # 2. driver-parsed full dict
-                return os.path.basename(paths["envelope"]), env["parsed"], "envelope_parsed"
-            if isinstance(env.get("tail"), str):  # 3. tail-line recovery
-                for line in reversed(env["tail"].splitlines()):
-                    line = line.strip()
-                    if line.startswith("{") and '"metric"' in line:
-                        try:
-                            prev = json.loads(line)
-                        except json.JSONDecodeError:
-                            break
-                        if _usable(prev):
-                            return (
-                                os.path.basename(paths["envelope"]),
-                                prev,
-                                "envelope_tail",
-                            )
-                        break
-    return None, None, (
-        "prior artifacts exist but none recoverable"
-        + (f" at sf={sf}" if sf is not None else "")
-        + " (no usable sidecar; envelope parsed/tail unusable — wrong sf or tail truncation)"
-    )
-
-
-def _persist_self(out: dict) -> None:
-    """Write this run's full output JSON to ``BENCH_SELF_r{N}.json`` so
-    the NEXT round's normalization never depends on the driver envelope's
-    2,000-char tail surviving truncation.  Committed by
-    ``tools/round_end.py`` alongside the driver artifacts.
-
-    A re-run AFTER the round's envelope lands infers N+1 and labels the
-    sidecar with the next round — accepted residual: the recovery ladder
-    is sf-aware and per-round multi-candidate, so a mislabeled or dev-sf
-    sidecar is skipped in favor of the round's envelope rather than
-    masking it (pin ``SPARK_GRAFT_BENCH_ROUND`` to avoid the mislabel
-    entirely)."""
-    n = _current_round()
-    if n is None:
-        # ADVICE r12: never skip silently — a dev dir with no artifacts
-        # at all is the only way to get here now, but the operator should
-        # still learn the sidecar wasn't written (next round's
-        # normalization will report prev_missing_reason).
-        print(
-            "# warn: round unknown (no BENCH_r*/BENCH_SELF_r* artifacts and "
-            "SPARK_GRAFT_BENCH_ROUND unset) — BENCH_SELF sidecar not written",
-            file=sys.stderr,
-        )
-        return
-    try:
-        with open(os.path.join(_bench_dir(), f"BENCH_SELF_r{n}.json"), "w") as f:
-            json.dump(out, f, indent=1)
-            f.write("\n")
-    except OSError as e:
-        print(f"# warn: could not persist BENCH_SELF_r{n}.json: {e}", file=sys.stderr)
-
-
-#: canary-vs-prev ratio above which the window counts as contended.  1.2
-#: sits above the quiet-window canary jitter (±10% across r13-r15 traces)
-#: and below every dirty-window reading that actually distorted deltas
-#: (r12 sched 0.41-0.58 inverse, r14 parallel 1.31, r15 serial 1.29).
-_CONTENTION_RATIO = 1.2
-
-#: headliners faster than this (per the PREVIOUS artifact) are the ones a
-#: dirty window distorts beyond the ±15% A/B noise floor — their runtime
-#: is comparable to one scheduling hiccup — so they get min-of-5 samples
-#: when the gate trips (VERDICT r15 #2: agg_pricing_summary 0.267 s read
-#: 2.34× in a window the canaries flagged 1.29-1.51×).  1.5 s covers the
-#: entire r15-flagged family: the first live trip (r16 dev run) showed a
-#: 1.0 s cutoff leaving shipping_priority (1.14 s prev) unescalated, and
-#: it promptly read +96% on 3 samples in the flagged window while every
-#: escalated sibling stayed attributable.  Cost: two extra ~1.3 s samples
-#: for ~5 queries ≈ +13 s of bench wall only in already-flagged windows.
-_SUBSECOND = 1.5
-
-
-def _contention_gate(
-    prev_out: dict | None,
-    canary: list[float],
-    pcanary: list[float],
-    scanary: list[float],
-) -> tuple[dict | None, set[str]]:
-    """Compare this run's canary readings against the previous artifact's;
-    return (flag, queries-to-escalate).  Pure function — unit-testable
-    without a bench run.  ``flag`` is None on a clean window, else
-    ``{"start_ratios": {substrate: ratio}}``; the escalation set is the
-    prev artifact's sub-second headliners (empty when the window is clean
-    or there is no usable prev)."""
-    if not prev_out:
-        return None, set()
-    ratios = {}
-    for key, samples in [
-        ("serial", canary),
-        ("parallel", pcanary),
-        ("sched", scanary),
-    ]:
-        prev_key = {"serial": "canary_sec", "parallel": "canary_parallel_sec",
-                    "sched": "canary_sched_sec"}[key]
-        if samples and prev_out.get(prev_key):
-            ratios[key] = round(min(samples) / prev_out[prev_key], 4)
-    if not ratios or max(ratios.values()) <= _CONTENTION_RATIO:
-        return None, set()
-    escalated = {
-        q for q, t in (prev_out.get("queries") or {}).items() if t < _SUBSECOND
-    }
-    return {"start_ratios": ratios}, escalated
-
-
-#: PINNED headline execution order (VERDICT r16 #1): the loop used to
-#: iterate registry order, which the per-round attestation-window
-#: rotation reshuffles — duplicate_span_removal ran 8th (r13/r14), 13th
-#: (r15), then FIRST (r16), and tools/order_probe.py measured a
-#: +57..113% session-position tax on a session-head min-of-5 (at
-#: r13-equivalent warmth it reads 0.323 s, the r13/r14 band, on
-#: byte-identical code; SCALING.md "r17: duplicate_span_removal creep
-#: attribution").  Position must be a CONSTANT across rounds for
-#: round-over-round deltas to mean anything: this is the r13 artifact
-#: order (the band most history cites); future headliners APPEND after
-#: the pinned prefix, never reshuffling it.
+#: Pinned headline execution order.  Position in the session changes a
+#: query's time (a session-head duplicate_span_removal read +57..113% over
+#: the same code at position 8; SCALING.md), so the order is a constant,
+#: not registry order.  New headliners append after the pinned prefix.
 PINNED_HEADLINE_ORDER = [
     "embedding_neardup", "interval_join", "currency_conversion",
     "neardup_jaccard", "dedup_clusters", "dedup_exact",
@@ -321,6 +38,15 @@ PINNED_HEADLINE_ORDER = [
     "embedding_gram_matrix", "agg_pricing_summary",
     "join_revenue_by_nation", "nation_pair_revenue",
     "tumbling_window_events", "shipping_priority",
+]
+
+#: stateful streaming queries whose per-batch state size the line reports
+STATE_QUERIES = [
+    "streaming_running_aggregate",
+    "streaming_cms_sketch",
+    "streaming_topk_complete",
+    "streaming_dedup",
+    "streaming_incremental_dedup",
 ]
 
 
@@ -338,464 +64,167 @@ def _pinned_headline(headline: dict) -> dict:
     }
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+def time_query(spark, spec, sf_dir: str) -> float:
+    """One timed run of a headline query, caches dropped first."""
+    spark.catalog.clearCache()
+    t = time.perf_counter()
+    full_result(spec.fn(spark, sf_dir))
+    return round(time.perf_counter() - t, 3)
 
-    canary_start = _canary_samples()
-    t0 = time.time()
-    from amazon_kinesis_data_analytics_flinktableapi_spark.engine import build_spark
-    from amazon_kinesis_data_analytics_flinktableapi_spark.queries import all_specs
 
-    spark = build_spark(app_name="bench", master=f"local[{cpus}]")
-    spark.sparkContext.setLogLevel("ERROR")
-    # startup_sec floor (~8.5-10 s), measured decomposition on this host:
-    # engine+queries imports 0.7 s; JVM spawn + SparkContext/session 5.3-5.5 s;
-    # then the warm job pays the one-time JVM class-loading tail — first SQL
-    # statement (Catalyst/analyzer init, zero tasks) 2.3 s, first scheduled
-    # job (task infra) 1.4 s, first whole-stage codegen (janino) 0.7 s,
-    # ~3.1 s overlapped.  All of it is class loading inside a cold JVM —
-    # row count is irrelevant (range(1k) costs the same 3.1 s as range(1M))
-    # — so the shaveable remainder is ~0.  Deliberately kept INSIDE
-    # startup_sec rather than pushed into the queries' discarded run-1
-    # samples, where it would vanish from the report without getting faster.
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    startup = time.time() - t0
-    pcanary_start = _parallel_canary_samples(spark)
-    scanary_start = _sched_canary_samples(spark)
+def _min_of_runs(label: str, one_run) -> float:
+    samples = [one_run() for _ in range(RUNS)]
+    print(f"# {label}: {min(samples)}s samples={samples}", file=sys.stderr)
+    return min(samples)
 
-    sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
-    # prev artifact fetched BEFORE the query loop (VERDICT r15 #2): the
-    # start-canary-vs-prev ratios gate a contended-window escalation —
-    # r14 and r15 both landed in dirty driver windows where the UNCHANGED
-    # sub-second TPC-H family regressed +10..78% normalized, beyond the
-    # ±15% noise floor the interleaved A/B methodology established, and
-    # the artifact of record could not attribute it.  When any start
-    # canary reads >1.2× the previous round's, every sub-second headliner
-    # (per the prev artifact) escalates to min-of-5 samples and the
-    # artifact carries an explicit contended_window flag so normalized
-    # deltas ship with an honest error bar.
-    prev_name, prev_out, prev_source = _prev_bench(sf=sf)
-    contended, escalated = _contention_gate(
-        prev_out, canary_start, pcanary_start, scanary_start
-    )
-    if contended:
-        print(f"# contended window at start: {contended['start_ratios']} — "
-              f"escalating {len(escalated)} sub-second headliners to min-of-5",
-              file=sys.stderr)
-    timings: dict[str, float] = {}
-    headline = _pinned_headline({n: s for n, s in all_specs().items() if s.headline})
-    # min of 3 back-to-back runs per query (caches dropped in between):
-    # run 1 doubles as the query's warmup — its first execution at the
-    # target SF compiles the AQE-final generated classes (warming at a
-    # smaller SF compiles DIFFERENT classes: AQE re-plans per data size),
-    # and running OTHER queries in between deoptimizes them again
-    # (measured 12s vs 3.2s for the identical plan in one session).  The
-    # min therefore reads run 2's sustained, steady-state cost while
-    # still paying the full data path (caches dropped) — the number a
-    # long-running cluster job actually experiences.
-    raw_samples: dict[str, list[float]] = {}
-    # min-of-5 overrides (VERDICT r10 #3): queries whose r10 sample traces
-    # showed first-batch spread wide enough that even three samples can sit
-    # inside one host slow window (duplicate_span_removal: [2.64, 0.801,
-    # 0.719] — max/min 3.7×, the worst of all 15; its plan is unchanged and
-    # the sf0.1 scaling probe reads it FASTER than the r10 bench min, so
-    # the +32.5% normalized delta was sampling variance, not a code cost —
-    # two extra samples make the min robust to a window spanning three).
-    # r12 additions: the two corpus-memo headliners' run-1 sample pays the
-    # memo build and their spreads stayed the widest of the set across the
-    # r12 dev runs (neardup_jaccard [8.77, 4.18, 2.75]; dedup_clusters
-    # [8.96, 4.99, 2.68, 3.05]) — three samples can leave the min a full
-    # batch above steady state, which is exactly the r10-vs-r11 ambiguity
-    # the regression forensics had to untangle
-    min5 = {"duplicate_span_removal", "neardup_jaccard", "dedup_clusters"}
-    # contended-window escalation (VERDICT r15 #2): see _contention_gate
-    min5 |= escalated
-    for name, spec in headline.items():
-        samples, n_rows = [], 0
 
-        def one_run():
-            spark.catalog.clearCache()
-            t = time.time()
-            n = spec.fn(spark, sf_dir).count()
-            samples.append(round(time.time() - t, 3))
-            return n
-
-        # min-of-3, unconditionally (VERDICT r6 #3/#8): this host has
-        # random multi-second slow windows that can tax BOTH of two
-        # back-to-back samples equally — a disagreement-triggered resample
-        # never fires in that case (measured: embedding_neardup
-        # [14.4, 16.8] inside a window vs [12.1, 4.9] outside it).  Three
-        # samples spread ~3× further across the window; min reads the
-        # steady-state cost.  A fourth is taken only when even the best
-        # two of three still disagree >1.8× (the window outlasted all
-        # three).  Full traces land in the output JSON as query_samples.
-        for _ in range(5 if name in min5 else 3):
-            n_rows = one_run()
-        if sorted(samples)[1] > 1.8 * min(samples):
-            n_rows = one_run()
-        timings[name] = min(samples)
-        raw_samples[name] = samples  # full trace → BENCH_r{N} (sample counts + spread)
-        print(f"# {name}: {timings[name]}s ({n_rows} rows) samples={samples}", file=sys.stderr)
-
-    # streaming throughput: records/sec through the watermarked
-    # stream-stream interval join (BASELINE.md floor: ≥100 rec/s).
-    # Fixture generation (driver-side JSON dump of the replay files) is
-    # untimed — the number measures the streaming pipeline, not the harness.
+def _streaming_join_rps(spark, sf_dir: str) -> float:
+    """Records/sec through the watermarked stream-stream interval join
+    (BASELINE.md floor: ≥100 rec/s).  Writing the replay files is untimed;
+    the memory sink stores every output column."""
     from amazon_kinesis_data_analytics_flinktableapi_spark.queries.advanced import (
         prepare_streaming_interval_join,
     )
     from amazon_kinesis_data_analytics_flinktableapi_spark.streaming.replay import run_to_memory
 
-    # drop the batch phase's cached intermediates (near-dup corpora, sketch
-    # bases) before timing the stream: leftover storage memory inflates GC
-    # during micro-batches and was measured to halve the rec/s number
+    # leftover storage memory from the batch phase (near-dup corpora,
+    # sketch bases) inflates GC during micro-batches: measured to halve rec/s
     spark.catalog.clearCache()
-    # Size STATE partitions to the workload: every stateful operator opens
-    # and commits one state store per shuffle partition per micro-batch, a
-    # fixed ~100ms-class overhead that dwarfs the row work when partitions
-    # outnumber the throughput (measured on this 100k-event replay:
-    # 32 partitions → ~8.5k rec/s, 8 → ~31k, 4 → ~35k).  At cluster scale
-    # the same knob goes UP with state volume; the principle is sizing to
-    # rows-per-partition-per-batch, never the batch default.
+    # every stateful operator commits one state store per shuffle partition
+    # per micro-batch, a fixed cost that dwarfs the row work when partitions
+    # outnumber the throughput (100k-event replay: 32 partitions ~8.5k
+    # rec/s, 8 ~31k)
     spark.conf.set("spark.sql.shuffle.partitions", "8")
-    # best of 5 replays (min-of-3 r7-r10; widened per VERDICT r10 #6: the
-    # throughput probes were the only metrics still drifting past ±5%
-    # normalized with no code cause — r10's sdk scan −11.4% — and unlike
-    # the batch queries they have no adaptive fourth sample, so a slow
-    # window spanning all three left no clean reading.  Two extra ~5s
-    # replays cost ~10s wall and bound the min against windows that long.)
-    stream_samples, stream_rows = [], 0
-    for _ in range(5):
+
+    def one_run() -> float:
         joined = prepare_streaming_interval_join(spark, sf_dir)
-        t = time.time()
-        stream_rows = run_to_memory(joined, spark, timeout_sec=240).count()
-        stream_samples.append(round(time.time() - t, 3))
-    stream_sec = min(stream_samples)
+        t = time.perf_counter()
+        run_to_memory(joined, spark, timeout_sec=240)
+        return round(time.perf_counter() - t, 3)
+
+    sec = _min_of_runs("streaming_interval_join", one_run)
     n_events = spark.read.parquet(f"{sf_dir}/events.parquet").count()
-    streaming_rps = round(n_events / stream_sec, 1)
-    print(f"# streaming_interval_join: {stream_rows} rows, {n_events} events in "
-          f"{round(stream_sec, 2)}s = {streaming_rps} rec/s samples={stream_samples}",
-          file=sys.stderr)
+    return round(n_events / sec, 1)
 
-    # kinesis_sim connector scan throughput: the Python Data Source API path
-    # (record generation + serde in Python workers) measured on a 200k-record
-    # 16-shard batch read; one small untimed read warms the Python workers,
-    # which the first read otherwise pays ~3-4 s for
-    from amazon_kinesis_data_analytics_flinktableapi_spark.sources.kinesis_sim import (
-        KinesisSimDataSource,
-    )
 
-    spark.dataSource.register(KinesisSimDataSource)
-    def ks_read(n, shards, **extra):
+def _kinesis_scan_rps(spark, label: str, **extra) -> float:
+    """Batch scan rate of the ``kinesis_sim`` Python data source over 200k
+    records in 16 shards.  One small untimed read first warms the Python
+    workers, which the first read otherwise pays ~3-4 s for."""
+    shards, per_shard = 16, 200_000 // 16
+
+    def read(n_shards: int, n_per_shard: int):
         return (
             spark.read.format("kinesis_sim")
-            .option("stream", "orders").option("shards", shards)
-            .option("records_per_shard", n // shards)
-            .options(**extra).load().count()
+            .option("stream", "orders").option("shards", n_shards)
+            .option("records_per_shard", n_per_shard)
+            .options(**extra).load()
         )
-    # min-of-5 (single-sample → min-of-3 per VERDICT r7 #3; widened with
-    # the streaming replay above per VERDICT r10 #6 — the scans share its
-    # noise mode: Python-worker-heavy, ~1s per sample, so two extra
-    # samples are nearly free and bound the min against multi-second
-    # host windows that can tax three consecutive samples)
-    def ks_bench(label, **extra):
-        ks_read(1000, 4, **extra)  # warm the Python workers / imports
-        samples = []
-        n = 0
-        for _ in range(5):
-            t = time.time()
-            n = ks_read(200_000, 16, **extra)
-            samples.append(round(time.time() - t, 3))
-        rps = round(n / min(samples), 1)
-        print(f"# {label}: {n} records = {rps} rec/s samples={samples}", file=sys.stderr)
-        return rps, samples
 
-    ks_rps, ks_samples = ks_bench("kinesis_sim_scan")
-    # same scan through the boto3-shaped KinesisClient seam (client_mode=sdk):
-    # quantifies the per-record cost of the SDK response envelope the real
-    # AWS path will pay (dict records, bytes payloads, iterator pagination)
-    sdk_rps, sdk_samples = ks_bench("kinesis_sim_sdk_scan", client_mode="sdk")
+    full_result(read(4, 250))
 
-    # streaming STATE evidence (VERDICT r16 #5): the stateful streaming
-    # queries attest correctness, but the artifact carried no state-size /
-    # watermark numbers.  Each query below runs once with the engine's
-    # StreamingQueryListener attached; the artifact records per-batch
-    # state growth (max + final rows), batch count, and the final
-    # watermark.  What "bounded" means per query: the watermarked ones
-    # (running_aggregate, cms_sketch, dedup family) evict state as the
-    # watermark passes, so max_state_rows tracks the windows/keys IN
-    # FLIGHT, not the stream length; topk_complete is COMPLETE-mode by
-    # design — its state is one row per (status, priority) group, bounded
-    # by the key domain (~15 here), NOT by stream length; a complete-mode
-    # agg over an unbounded key domain would be the anti-pattern, which
-    # is exactly what the artifact row makes visible.
+    def one_run() -> float:
+        t = time.perf_counter()
+        full_result(read(shards, per_shard))
+        return round(time.perf_counter() - t, 3)
+
+    return round(shards * per_shard / _min_of_runs(label, one_run), 1)
+
+
+def _streaming_state_max_rows(spark, sf_dir: str, specs: dict) -> dict[str, int]:
+    """Max state rows per stateful streaming query, from the engine's
+    StreamingQueryListener.  Watermarked queries evict state as the
+    watermark passes, so the max tracks windows/keys in flight, not stream
+    length; ``streaming_topk_complete`` is complete-mode, bounded by its
+    ~15-group key domain."""
     from amazon_kinesis_data_analytics_flinktableapi_spark.streaming.metrics import (
         EngineQueryListener,
     )
 
-    state_queries = [
-        "streaming_running_aggregate",
-        "streaming_cms_sketch",
-        "streaming_topk_complete",
-        "streaming_dedup",
-        "streaming_incremental_dedup",
-    ]
-    streaming_state: dict[str, dict] = {}
-    specs = all_specs()
-    for name in state_queries:
-        if name not in specs:
-            continue
+    out = {}
+    for name in STATE_QUERIES:
         listener = EngineQueryListener()
         spark.streams.addListener(listener)
         try:
-            t = time.time()
-            n = specs[name].fn(spark, sf_dir).count()
-            run_sec = round(time.time() - t, 3)
-            # listener delivery is async; give the terminated query's last
-            # progress event a moment to drain before reading the collector
+            specs[name].fn(spark, sf_dir)
+            # listener delivery is async; let the terminated query's last
+            # progress event drain before reading the collector
             deadline = time.time() + 5
             while not listener.collector.batches and time.time() < deadline:
                 time.sleep(0.2)
         finally:
             spark.streams.removeListener(listener)
         c = listener.collector
-        series = [b.state_rows for b in sorted(c.batches, key=lambda b: b.batch_id)]
-        streaming_state[name] = {
-            "result_rows": n,
-            "run_sec": run_sec,
-            "n_batches": len(c.batches),
-            "input_rows": c.total_input_rows(),
-            "max_state_rows": c.max_state_rows(),
-            "final_state_rows": series[-1] if series else 0,
-            "state_rows_per_batch": series,
-            "final_watermark": c.batches[-1].watermark if c.batches else None,
-        }
-        print(f"# streaming_state {name}: max={streaming_state[name]['max_state_rows']} "
-              f"final={streaming_state[name]['final_state_rows']} "
-              f"batches={len(c.batches)} wm={streaming_state[name]['final_watermark']}",
-              file=sys.stderr)
+        out[name] = c.max_state_rows()
+        print(f"# streaming_state {name}: max={out[name]} batches={len(c.batches)} "
+              f"wm={c.batches[-1].watermark if c.batches else None}", file=sys.stderr)
+    return out
 
-    # second canary reading at the end: a slow window that opened mid-run
-    # shows as end >> start; both traces land in the JSON
-    canary_end = _canary_samples()
-    pcanary_end = _parallel_canary_samples(spark)
-    scanary_end = _sched_canary_samples(spark)
-    print(f"# canary: start={canary_start} end={canary_end}", file=sys.stderr)
-    print(
-        f"# parallel_canary: start={pcanary_start} end={pcanary_end}",
-        file=sys.stderr,
-    )
 
-    total = round(sum(timings.values()), 3)
-    # the headline set GREW in round 5 (+dedup_clusters, +embedding_neardup);
-    # report the round-1..3 10-query subset total alongside so round-over-
-    # round trend comparisons stay apples-to-apples
-    r3_set = [
-        "neardup_jaccard", "dedup_exact", "ann_cosine_topk", "interval_join",
-        "currency_conversion", "agg_pricing_summary", "join_revenue_by_nation",
-        "nation_pair_revenue", "tumbling_window_events", "shipping_priority",
-    ]
-    out = {
+def result_line(
+    timings: dict[str, float],
+    sf: float,
+    startup: float,
+    rates: dict[str, float],
+    state_max_rows: dict[str, int],
+) -> str:
+    """The one JSON line a caller parses.  Callers keep only the last
+    2,000 chars of stdout, so the line carries no per-sample traces."""
+    return json.dumps({
         "metric": "headline_queries_total_runtime",
-        "value": total,
+        "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "queries": timings,
         "sf": sf,
+        "action": "noop_write",
         "n_queries": len(timings),
         "startup_sec": round(startup, 3),
-        "streaming_interval_join_recs_per_sec": streaming_rps,
-        "kinesis_sim_scan_recs_per_sec": ks_rps,
-        "kinesis_sim_sdk_scan_recs_per_sec": sdk_rps,
-        "canary_sec": min(min(canary_start), min(canary_end)),
-        "canary_samples_sec": {"start": canary_start, "end": canary_end},
-        "canary_parallel_sec": min(min(pcanary_start), min(pcanary_end)),
-        "canary_parallel_samples_sec": {"start": pcanary_start, "end": pcanary_end},
-        "canary_sched_sec": min(min(scanary_start), min(scanary_end)),
-        "canary_sched_samples_sec": {"start": scanary_start, "end": scanary_end},
-        "query_samples": raw_samples,
-        "streaming_state": streaming_state,
-        # compact twin that survives _slim_for_stdout: max state rows per
-        # stateful query — the one number the bounded-state claim needs
-        "streaming_state_max_rows": {
-            n: s["max_state_rows"] for n, s in streaming_state.items()
-        },
-        "throughput_samples_sec": {
-            "streaming_interval_join": stream_samples,
-            "kinesis_sim_scan": ks_samples,
-            "kinesis_sim_sdk_scan": sdk_samples,
-        },
+        **rates,
+        "streaming_state_max_rows": state_max_rows,
+    })
+
+
+def main() -> None:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+
+    t0 = time.time()
+    from amazon_kinesis_data_analytics_flinktableapi_spark.engine import build_spark
+    from amazon_kinesis_data_analytics_flinktableapi_spark.queries import all_specs
+    from amazon_kinesis_data_analytics_flinktableapi_spark.sources.kinesis_sim import (
+        KinesisSimDataSource,
+    )
+
+    spark = build_spark(app_name="bench", master=f"local[{cpus}]")
+    spark.sparkContext.setLogLevel("ERROR")
+    # the first SQL statement, scheduled job and whole-stage codegen pay the
+    # cold JVM's class loading (~3 s whatever the row count); it is part of
+    # startup_sec, not hidden in a query's first sample
+    spark.range(1_000_000).selectExpr("sum(id)").collect()
+    startup = time.time() - t0
+
+    sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
+    specs = all_specs()
+    headline = _pinned_headline({n: s for n, s in specs.items() if s.headline})
+    timings = {
+        name: _min_of_runs(name, lambda spec=spec: time_query(spark, spec, sf_dir))
+        for name, spec in headline.items()
     }
-    if all(q in timings for q in r3_set):
-        out["r3_comparable_subset_total"] = round(sum(timings[q] for q in r3_set), 3)
-    # canary-normalized round-over-round deltas (VERDICT r9 #5): divide
-    # this run's canary by the previous artifact's to get the host-speed
-    # correction, then report each query's delta with that correction
-    # applied — a +89% interval_join on a 1.9× slower host normalizes to
-    # ~0 and is attributable IN-ARTIFACT instead of by forensics.  The
-    # canary is CPU-bound single-threaded BLAS while queries are
-    # multi-core Spark jobs, so this corrects uniform host slowdowns
-    # (shared-tenancy windows), not per-query plan changes — which is the
-    # point: what survives normalization is a real regression.
-    # sf-aware recovery: wrong-sf candidates (e.g. a dev-sf sidecar) are
-    # skipped INSIDE the ladder, falling through to the same round's
-    # envelope or older rounds, instead of masking them.  (prev fetched
-    # before the query loop — the contention gate needs it.)
-    _attach_prev_deltas(out, timings, prev_name, prev_out, prev_source)
-    # end-of-run contention re-check: a window that opened MID-run is
-    # invisible to the start gate (samples already taken at 3), but the
-    # flag must still ship so the verdict reads the deltas with an error
-    # bar instead of doing forensics
-    end_flag, _ = _contention_gate(prev_out, canary_end, pcanary_end, scanary_end)
-    if contended or end_flag:
-        out["contended_window"] = {
-            "detected_at_start": bool(contended),
-            "detected_at_end": bool(end_flag),
-            "start_ratios": (contended or {}).get("start_ratios"),
-            "end_ratios": (end_flag or {}).get("start_ratios"),
-            "escalated_to_min5": sorted(escalated),
-            "note": "canary(s) read >1.2x the previous round's — sub-second"
-            " headline deltas carry at least the canary ratio as error bar",
-        }
-    _persist_self(out)
-    print(json.dumps(_slim_for_stdout(out)))
+
+    streaming_rps = _streaming_join_rps(spark, sf_dir)
+    spark.dataSource.register(KinesisSimDataSource)
+    rates = {
+        "streaming_interval_join_recs_per_sec": streaming_rps,
+        "kinesis_sim_scan_recs_per_sec": _kinesis_scan_rps(spark, "kinesis_sim_scan"),
+        # the same scan through the boto3-shaped KinesisClient seam: the
+        # per-record cost of the SDK response envelope the AWS path pays
+        "kinesis_sim_sdk_scan_recs_per_sec": _kinesis_scan_rps(
+            spark, "kinesis_sim_sdk_scan", client_mode="sdk"
+        ),
+    }
+    state = _streaming_state_max_rows(spark, sf_dir, specs)
+    print(result_line(timings, sf, startup, rates, state))
     spark.stop()
-
-
-def _attach_prev_deltas(out, timings, prev_name, prev_out, prev_source) -> None:
-    """Round-over-round normalization block (pure dict-in/dict-out so
-    tests can pin the emitted fields without a bench run)."""
-    if prev_out is None:
-        # VERDICT r11 #2: never omit the normalization block silently —
-        # an explicit reason in-artifact distinguishes "no prior data"
-        # from "machinery broke"
-        out["prev_bench_file"] = None
-        out["prev_missing_reason"] = prev_source
-    else:
-        ratio = round(out["canary_sec"] / prev_out["canary_sec"], 4)
-        out["canary_ratio_vs_prev"] = ratio
-        out["prev_bench_file"] = prev_name
-        out["prev_bench_source"] = prev_source
-        if prev_out.get("canary_sched_sec"):
-            # reporting-only (no normalization applied): a big sched ratio
-            # with flat compute canaries is the r12 signature — a host
-            # window taxing task dispatch / micro-batch planning, which
-            # depresses the throughput metrics without any code cause
-            out["canary_sched_ratio_vs_prev"] = round(
-                out["canary_sched_sec"] / prev_out["canary_sched_sec"], 4
-            )
-        if prev_out.get("canary_parallel_sec"):
-            # first present r10; captures multi-core contention the
-            # single-threaded ratio above cannot (see _parallel_canary_samples)
-            pratio = round(out["canary_parallel_sec"] / prev_out["canary_parallel_sec"], 4)
-            out["canary_parallel_ratio_vs_prev"] = pratio
-            # r12: the serial BLAS canary has twice produced readings
-            # decoupled from the actual workload substrate (r11: 2.7×
-            # slower while the parallel canary was flat; r12 dev: 2.7×
-            # slower while every query beat its all-round-best raw min).
-            # The queries ARE 32-way parallel Spark jobs, so the parallel
-            # canary is the better normalizer for them — report BOTH
-            # normalizations and let the disagreement itself flag an
-            # untrustworthy serial reading.
-            out["normalized_delta_vs_prev_parallel"] = {
-                q: round((timings[q] / pratio) / pt - 1, 4)
-                for q, pt in prev_out["queries"].items()
-                if q in timings and pt > 0
-            }
-        out["normalized_delta_vs_prev"] = {
-            q: round((timings[q] / ratio) / pt - 1, 4)
-            for q, pt in prev_out["queries"].items()
-            if q in timings and pt > 0
-        }
-        for label, key in [
-            ("streaming_interval_join", "streaming_interval_join_recs_per_sec"),
-            ("kinesis_sim_scan", "kinesis_sim_scan_recs_per_sec"),
-            ("kinesis_sim_sdk_scan", "kinesis_sim_sdk_scan_recs_per_sec"),
-        ]:
-            if prev_out.get(key):
-                # throughputs: higher is better, so normalization MULTIPLIES
-                out.setdefault("normalized_throughput_delta_vs_prev", {})[label] = round(
-                    (out[key] * ratio) / prev_out[key] - 1, 4
-                )
-                if out.get("canary_parallel_ratio_vs_prev"):
-                    # the scans/replays are 16-32-way parallel Python-worker
-                    # jobs — the parallel canary tracks their substrate (the
-                    # r11 case: throughput dipped ~30% while the serial BLAS
-                    # canary was flat), so they get the dual normalization
-                    # the query deltas carry
-                    out.setdefault("normalized_throughput_delta_vs_prev_parallel", {})[
-                        label
-                    ] = round(
-                        (out[key] * out["canary_parallel_ratio_vs_prev"]) / prev_out[key] - 1,
-                        4,
-                    )
-                if out.get("canary_sched_ratio_vs_prev"):
-                    # VERDICT r13 #4: the r12 throughput dip was a host window
-                    # taxing task DISPATCH, invisible to both compute canaries
-                    # (serial flat, parallel 1.43× while sched ran 0.58/0.41)
-                    # — and the throughput probes are dispatch-bound streaming
-                    # micro-batch loops, so the sched canary is their best
-                    # substrate proxy.  Third normalization reported alongside
-                    # the other two; a delta that survives ALL three is a real
-                    # regression, one that only one normalizer removes names
-                    # which substrate moved.
-                    out.setdefault("normalized_throughput_delta_vs_prev_sched", {})[
-                        label
-                    ] = round(
-                        (out[key] * out["canary_sched_ratio_vs_prev"]) / prev_out[key] - 1,
-                        4,
-                    )
-
-
-# Bulky trace fields live in the BENCH_SELF sidecar only; dropped from the
-# stdout line largest-first until it fits the driver's tail window.
-_SLIM_DROP_ORDER = [
-    "streaming_state",  # full per-batch series; the max-rows twin stays
-    "query_samples",
-    "canary_samples_sec",
-    "canary_parallel_samples_sec",
-    "canary_sched_samples_sec",
-    "throughput_samples_sec",
-    "normalized_delta_vs_prev",  # serial-canary variant; parallel kept (r12: better normalizer)
-    "normalized_throughput_delta_vs_prev",
-    # r17: a CONTENDED run carries contended_window (~500 chars with the
-    # escalated-name list) + streaming_state_max_rows — measured 2,128
-    # chars after the drops above, i.e. parsed:null at the driver.  The
-    # sched/parallel throughput-delta blocks are sidecar-recoverable:
-    "normalized_throughput_delta_vs_prev_sched",
-    "normalized_throughput_delta_vs_prev_parallel",
-    "normalized_delta_vs_prev_parallel",  # last resort — sidecar still has it
-]
-_STDOUT_BUDGET = 1900  # driver envelope keeps the LAST 2,000 chars of stdout
-
-
-def _slim_for_stdout(out: dict) -> dict:
-    """The driver's bench envelope stores only the last 2,000 chars of
-    stdout ("tail") and json-parses it; r10 and r12 both shipped
-    ``"parsed": null`` because the full output line outgrew that window
-    and lost its head (VERDICT r12 #4).  The full record is already
-    truncation-proof in ``BENCH_SELF_r{N}.json``, so the stdout line
-    only needs the headline metrics + normalized deltas — drop trace
-    arrays (and, if still oversized, the redundant serial-canary delta
-    blocks) until the line fits with margin."""
-    slim = dict(out)
-    for key in _SLIM_DROP_ORDER:
-        if len(json.dumps(slim)) <= _STDOUT_BUDGET:
-            break
-        slim.pop(key, None)
-    if len(json.dumps(slim)) > _STDOUT_BUDGET and isinstance(
-        slim.get("contended_window"), dict
-    ):
-        # keep the flag + ratios (the in-band honesty signal) but swap the
-        # escalated-name list and prose note for a count — both fully
-        # recorded in the sidecar
-        cw = dict(slim["contended_window"])
-        esc = cw.pop("escalated_to_min5", None)
-        cw.pop("note", None)
-        if esc is not None:
-            cw["n_escalated_to_min5"] = len(esc)
-        slim["contended_window"] = cw
-    return slim
 
 
 if __name__ == "__main__":

@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from amazon_kinesis_data_analytics_flinktableapi_spark.operators import dedup as D
+from amazon_kinesis_data_analytics_flinktableapi_spark.operators.dedup import survivorship_merge
 
 def make_doc(i: int, n: int = 40) -> str:
     # deterministic word sequence, distinct per doc (500-word vocab keeps
@@ -265,3 +266,62 @@ def test_contamination_counts_keeps_docs_too_short_to_shingle(spark):
     assert set(out) == {1, 2}
     assert out[2].n_shingles == 0 and out[2].n_shared == 0
     assert out[1].n_shingles > 0 and out[1].n_shared > 0
+
+
+def _members(spark, rows):
+    return spark.createDataFrame(
+        rows, "doc_id long, cluster_id long, n_chars long, source string, lang string"
+    )
+
+
+def test_survivorship_field_rules(spark):
+    """Field-wise merge on one cluster: golden id = min id, longest text
+    wins with min-id tie-break, source follows the min id, lang is modal
+    with (count desc, lang asc) tie-break, provenance is the sorted
+    distinct source set, comma-joined."""
+    m = _members(
+        spark,
+        [
+            (10, 1, 50, "web", "de"),
+            (11, 1, 80, "crawl", "en"),
+            (12, 1, 80, "web", "en"),
+            (13, 1, 20, "pdf", "fr"),
+        ],
+    )
+    rec = survivorship_merge(m).collect()
+    assert len(rec) == 1
+    r = rec[0]
+    assert r["golden_doc_id"] == 10
+    assert r["n_members"] == 4
+    # two docs tie at n_chars=80 → the SMALLER doc_id (11) wins
+    assert r["longest_doc_id"] == 11
+    assert r["golden_n_chars"] == 80
+    assert r["golden_source"] == "web"  # source of doc 10, the min id
+    assert r["modal_lang"] == "en"  # en ×2 beats de/fr ×1
+    assert r["provenance"] == "crawl,pdf,web"
+
+
+def test_survivorship_modal_lang_tie_breaks_alphabetically(spark):
+    m = _members(spark, [(1, 7, 5, "s", "fr"), (2, 7, 6, "s", "de")])
+    r = survivorship_merge(m).collect()[0]
+    assert r["modal_lang"] == "de"  # 1-1 tie → lexicographically smallest
+
+
+def test_survivorship_null_lengths_cluster(spark):
+    """A cluster whose every member has NULL n_chars (NULL-text docs)
+    still picks a deterministic longest_doc_id — the coalesce(n_chars, 0)
+    composite makes the ordering key total, so the min id wins — and
+    reports golden_n_chars NULL (max over all-NULL)."""
+    m = _members(spark, [(5, 3, None, "a", "xx"), (6, 3, None, "b", "xx")])
+    r = survivorship_merge(m).collect()[0]
+    assert r["longest_doc_id"] == 5
+    assert r["golden_n_chars"] is None
+    assert r["golden_doc_id"] == 5
+    assert r["provenance"] == "a,b"
+
+
+def test_survivorship_singletons_pass_through(spark):
+    m = _members(spark, [(1, 1, 10, "a", "en"), (2, 2, 20, "b", "de")])
+    out = {r["cluster_id"]: r for r in survivorship_merge(m).collect()}
+    assert out[1]["golden_doc_id"] == 1 and out[1]["n_members"] == 1
+    assert out[2]["longest_doc_id"] == 2 and out[2]["modal_lang"] == "de"

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql.types import IntegerType, StringType
 
 from tests.conftest import SF_SMOKE
@@ -118,3 +120,44 @@ def test_read_table_never_yields_ntz(spark):
         schema = read_table(spark, "/root/testdata/sf0.001", t).schema
         bad = [f.name for f in schema.fields if f.dataType.typeName() == "timestamp_ntz"]
         assert not bad, f"{t}: NTZ columns leaked through the source boundary: {bad}"
+
+
+def test_vectorized_timestamp_to_string_matches_row_path_elementwise():
+    """The r17-vectorized ``timestamp_to_string_pandas`` body
+    (``s.dt.strftime`` + Series string ops, guide §4.2) must agree with
+    the row-at-a-time ``timestamp_to_string_py`` on every element of a
+    randomized micros distribution — including NaT, whole seconds
+    (fraction '.0'), and trailing-zero micros ('.12' not '.120000')."""
+    from amazon_kinesis_data_analytics_flinktableapi_spark.functions.scalar import (
+        timestamp_to_string_pandas,
+        timestamp_to_string_py,
+    )
+
+    rng = np.random.RandomState(7)
+    base = pd.Timestamp("2024-01-01")
+    micros = rng.randint(0, 90 * 86_400 * 1_000_000, 5_000, dtype=np.int64)
+    # force the edge classes in: whole seconds, single-digit fraction,
+    # trailing-zero fraction, max fraction
+    micros[:4] = [0, 500_000, 120_000, 999_999]
+    s = pd.Series(base + pd.to_timedelta(micros, unit="us"))
+    s[::97] = pd.NaT
+
+    got = timestamp_to_string_pandas(s)
+    want = s.map(timestamp_to_string_py, na_action="ignore").astype(object)
+    want[s.isna()] = None
+
+    assert got.dtype == object  # Arrow-convertible even when all-NaT slices exist
+    assert list(got) == list(want)
+
+
+def test_vectorized_timestamp_to_string_all_nat_stays_object():
+    """An all-NaT batch must come back all-None with object dtype (the
+    datetime64 dtype would fail the Arrow string conversion)."""
+    from amazon_kinesis_data_analytics_flinktableapi_spark.functions.scalar import (
+        timestamp_to_string_pandas,
+    )
+
+    s = pd.Series([pd.NaT, pd.NaT], dtype="datetime64[ns]")
+    out = timestamp_to_string_pandas(s)
+    assert out.dtype == object
+    assert list(out) == [None, None]

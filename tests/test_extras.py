@@ -2,8 +2,11 @@
 
 from __future__ import annotations
 
+from collections import Counter, defaultdict
 from datetime import datetime, timedelta
 
+import pandas as pd
+import pyarrow.parquet as papq
 import pytest
 from pyspark.sql import functions as F
 
@@ -297,3 +300,43 @@ def test_read_parquet_evolved_requires_exactly_one_mode(spark, tmp_path):
         read_parquet_evolved(spark, str(tmp_path), schema=None, merge_schema=False)
     with pytest.raises(ValueError, match="exactly one mode"):
         read_parquet_evolved(spark, str(tmp_path), schema=cur, merge_schema=True)
+
+
+def _docs():
+    return papq.read_table(f"{SF_SMOKE}/documents.parquet").to_pandas()
+
+
+def test_tvd_drift_matches_straightline(spark):
+    df = _docs()
+    # pd.notna, not `is not None`: pandas surfaces parquet NULLs in
+    # numeric columns as NaN, which passes `is not None` and then blows
+    # up in int() — the reference must tolerate the NULLs the query
+    # contract covers (ADVICE r15)
+    rows = [
+        (r.source, min(max(int(r.n_chars), 0) // 64, 31))
+        for r in df.itertuples()
+        if pd.notna(r.source) and pd.notna(r.n_chars)
+    ]
+    n = len(rows)
+    per = defaultdict(Counter)
+    glob = Counter()
+    for s, b in rows:
+        per[s][b] += 1
+        glob[b] += 1
+    want = {}
+    for s, cnt in per.items():
+        n_a = sum(cnt.values())
+        n_b = n - n_a
+        if n_b <= 0:
+            continue
+        num = sum(
+            abs(cnt.get(b, 0) * n_b - (glob[b] - cnt.get(b, 0)) * n_a) for b in glob
+        )
+        want[s] = (n_a, n_b, num, num * 1_000_000 // (2 * n_a * n_b))
+    got = {
+        r.source: (r.n_a, r.n_b, r.tvd_num, r.tvd_micro)
+        for r in REGISTRY["tvd_drift_by_source"].fn(spark, SF_SMOKE).collect()
+    }
+    assert got == want
+    # sanity: TVD is a [0, 1] metric
+    assert all(0 <= t[3] <= 1_000_000 for t in got.values())

@@ -61,3 +61,25 @@ def test_triangle_participation_normalizes_dirty_edges(spark):
     got = sorted(tuple(r) for r in triangle_participation(dirty).collect())
     assert got == want
     assert want == [(1, 2, 1), (2, 2, 1), (3, 3, 1), (4, 1, 0)]
+
+
+def test_pagerank_iterations_run_on_materialized_edges(spark):
+    """The r17 cut on ``q_pagerank_dup_graph``: the static ``edges ⋈ deg``
+    block is localCheckpoint-ed once, so the 5 rank iterations join a
+    materialized LogicalRDD instead of re-expanding the degree groupBy
+    and the whole jaccard edge pipeline per level (before: 705 parquet
+    scans in the final plan; after: 0).  Value parity is pinned by the
+    DuckDB oracle (unrolled integer PageRank twin); this pins the plan
+    shape so a refactor cannot silently reintroduce the re-execution."""
+    from amazon_kinesis_data_analytics_flinktableapi_spark.queries import REGISTRY
+
+    df = REGISTRY["pagerank_dup_graph"].fn(spark, "/root/testdata/sf0.001")
+    optimized = df._jdf.queryExecution().optimizedPlan().toString()
+    assert "LogicalRDD" in optimized, (
+        "edges+degree block no longer materialized — the jaccard edge "
+        "pipeline re-executes inside every rank iteration"
+    )
+    # and no parquet relation may survive into the iterative plan
+    assert "parquet" not in optimized.lower(), (
+        "iterations re-read the base tables instead of the checkpointed block"
+    )

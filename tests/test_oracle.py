@@ -27,3 +27,17 @@ def test_query_matches_oracle(spark, duck, name):
         assert df.count() >= 0  # rows-only check, mirrors driver's weak gate
     else:
         compare(df, duck, spec.oracle)
+
+
+def test_no_batch_query_outputs_a_nested_or_binary_column(spark):
+    """Result compares canonicalize scalar values only: an array,
+    map, struct or binary output column cannot be attested."""
+    from pyspark.sql.types import ArrayType, BinaryType, MapType, StructType
+
+    bad = {
+        name: [f.name for f in spec.fn(spark, SF_ORACLE).schema.fields
+               if isinstance(f.dataType, (ArrayType, BinaryType, MapType, StructType))]
+        for name, spec in sorted(SPECS.items())
+        if not name.startswith("streaming_")
+    }
+    assert {n: cols for n, cols in bad.items() if cols} == {}

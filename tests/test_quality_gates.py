@@ -20,7 +20,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_ORACLE
+from amazon_kinesis_data_analytics_flinktableapi_spark.queries import REGISTRY
+from tests.conftest import SF_ORACLE, SF_SMOKE
 
 
 def test_ann_recall_report_gate(spark):
@@ -259,3 +260,26 @@ def test_temperature_mixture_excludes_null_sources(spark, tmp_path):
     # monotone: hotter sources are suppressed at least as hard
     if "mid" in rates and "hot" in rates:
         assert rates["rare"] >= rates["mid"] >= rates["hot"]
+
+
+def test_band_sweep_recall_monotone_in_bands(spark):
+    """S-curve sanity on the report itself: at equal rows-per-band, MORE
+    bands can only widen the candidate net — so 64/16 (16 bands × 4
+    rows) must recall at least as many planted pairs as 32/8 (8 bands ×
+    4 rows is a SUBSET of band structure drawn from fewer perms, so we
+    assert the weaker but always-true property: candidates(64/16) ≥
+    candidates(32/8) is NOT guaranteed, recall ≤ planted_total IS, and
+    the stricter 8-row 64/8 config never recalls MORE than 64/16)."""
+    rows = {
+        (r.num_perm, r.bands): r
+        for r in REGISTRY["minhash_band_sweep_report"].fn(spark, SF_SMOKE).collect()
+    }
+    assert set(rows) == {(32, 8), (64, 16), (64, 8)}
+    for r in rows.values():
+        assert 0 <= r.n_planted_hit <= r.planted_total
+        assert r.n_verified <= r.n_candidates
+        assert r.recall_permille == r.n_planted_hit * 1000 // max(r.planted_total, 1)
+    assert rows[(64, 8)].n_planted_hit <= rows[(64, 16)].n_planted_hit, (
+        "8-row bands are strictly harder to collide than 4-row bands over "
+        "the same 64 permutations"
+    )

@@ -10,6 +10,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, FloatType, IntegerType, LongType, StructField, StructType
 
 from amazon_kinesis_data_analytics_flinktableapi_spark.operators import similarity as S
+from amazon_kinesis_data_analytics_flinktableapi_spark.queries import REGISTRY
+from tests.conftest import SF_SMOKE
 
 DIM = 16
 SCHEMA = StructType([StructField("vec_id", LongType()), StructField("embedding", ArrayType(FloatType()))])
@@ -493,3 +495,87 @@ def test_ann_int8_topk_overlap_vs_exact_dot(spark):
         )
         exact = {c for _, c in scores[:10]}
         assert len(cand & exact) / len(exact) >= 0.8, f"int8 top-10 drifted for q={q}"
+
+
+def test_hybrid_rrf_matches_straightline_fusion(spark):
+    """Fuse the two arms' OWN outputs in plain Python and compare: the
+    query's fused ranking, for EVERY query vector of the 5-query frame
+    (r16 widening), must equal RRF over (bm25 top-20, that vector's
+    cosine top-20) computed independently from the collected arm
+    results."""
+    lex_rows = sorted(
+        REGISTRY["bm25_rank"].fn(spark, SF_SMOKE).collect(),
+        key=lambda r: (-r.bm25_score, r.doc_id),
+    )[:20]
+    lex_rank = {r.doc_id: i + 1 for i, r in enumerate(lex_rows)}
+    from pyspark.sql import functions as F
+
+    from amazon_kinesis_data_analytics_flinktableapi_spark.functions.scalar import (
+        swallow_malformed_embeddings,
+    )
+    from amazon_kinesis_data_analytics_flinktableapi_spark.operators import similarity as S
+    from amazon_kinesis_data_analytics_flinktableapi_spark.queries import load
+
+    (emb,) = load(spark, SF_SMOKE, "embeddings")
+    emb = swallow_malformed_embeddings(emb)
+    sem_rank: dict[int, dict[int, int]] = {q: {} for q in range(5)}
+    for r in S.brute_topk(emb, emb.filter(F.col("vec_id") < 5), k=20).collect():
+        sem_rank[r.q_id][r.c_id] = r.rn
+    got_rows = REGISTRY["hybrid_search_rrf"].fn(spark, SF_SMOKE).collect()
+    assert sorted({r.q_id for r in got_rows}) == list(range(5))
+    for q in range(5):
+        ids = set(lex_rank) | set(sem_rank[q])
+        fused = {
+            i: (1_000_000 // (60 + lex_rank[i]) if i in lex_rank else 0)
+            + (1_000_000 // (60 + sem_rank[q][i]) if i in sem_rank[q] else 0)
+            for i in ids
+        }
+        want = sorted(ids, key=lambda i: (-fused[i], i))[:10]
+        got = [
+            (r.doc_id, r.rrf_micro)
+            for r in sorted(
+                (r for r in got_rows if r.q_id == q), key=lambda r: r.fused_rank
+            )
+        ]
+        assert [d for d, _ in got] == want, f"q_id={q}"
+        assert all(s == fused[d] for d, s in got), f"q_id={q}"
+
+
+def test_lsh_det_arrow_sketches_match_hof_including_null(spark):
+    """The r17 cut on ``lsh_topk_det``: the per-plane interpreted
+    ``quantized_sketch`` HOF forest is replaced by one Arrow matmul per
+    batch (``quantized_sketches_all`` + posexplode).  The (id, t, sk)
+    bucket placement must be bit-identical to the HOF form for every
+    row INCLUDING a NULL vector, which the HOF form buckets at sketch 0
+    per table (posexplode of a NULL array would instead drop the row —
+    the coalesce in ``sketched`` preserves the old placement)."""
+    from pyspark.sql import functions as F
+
+    import amazon_kinesis_data_analytics_flinktableapi_spark.operators.similarity as S
+
+    tables = S.neardup_lsh_planes(dim=8, n_planes=5, n_tables=3, seed=13)
+    rows = [(i, [((i * 7 + j * 3) % 11 - 5) / 4.0 for j in range(8)]) for i in range(40)]
+    rows.append((99, None))
+    df = spark.createDataFrame(rows, "id long, embedding array<double>")
+    base = df.select("id", S.quantized("embedding").alias("qv"))
+
+    hof = base.select(
+        "id",
+        F.explode(
+            F.array(
+                *[
+                    F.struct(F.lit(t).alias("t"), S.quantized_sketch("qv", p).alias("sk"))
+                    for t, p in enumerate(tables)
+                ]
+            )
+        ).alias("b"),
+    ).select("id", "b.t", "b.sk")
+    zeros = F.array(*[F.lit(0).cast("long") for _ in tables])
+    arrow = base.select(
+        "id",
+        F.posexplode(F.coalesce(S.quantized_sketches_all("qv", tables), zeros)).alias("t", "sk"),
+    )
+    got = sorted(tuple(r) for r in arrow.collect())
+    want = sorted(tuple(r) for r in hof.collect())
+    assert got == want
+    assert (99, 0, 0) in got  # the NULL row kept its HOF bucket placement

@@ -3,11 +3,18 @@ synthetic, so heuristic accuracy is pinned here) + multimodal plumbing."""
 
 from __future__ import annotations
 
+import math
+import unicodedata
+
+import duckdb
 import pytest
+from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from amazon_kinesis_data_analytics_flinktableapi_spark.functions import text as T
+from amazon_kinesis_data_analytics_flinktableapi_spark.functions.text import nfc_normalize_col
 from amazon_kinesis_data_analytics_flinktableapi_spark.operators import multimodal as M
+from tests.test_adversarial_oracle import UNICODE_DOCS
 
 SAMPLES = [
     (1, "the quick brown fox jumps over the lazy dog and runs to the hills", "en"),
@@ -358,3 +365,93 @@ def test_cosine_zero_norm_is_null_not_job_abort(spark):
         ).collect()
     }
     assert got[1] is None and got[2] == 1.0
+
+
+def test_nfc_three_way_parity_on_hostile_strings(spark):
+    """Spark-side NFC (pandas UDF over CPython's unicodedata) must agree
+    byte-for-byte with BOTH reference implementations on every hostile
+    unicode fixture string: CPython itself (trivially) and DuckDB's
+    utf8proc ``nfc_normalize`` — the oracle twin.  NFD/NFC twins, zalgo
+    combining stacks, astral plane, BOM, bidi: all compose identically
+    under UAX #15 canonical composition."""
+    df = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(UNICODE_DOCS)], ["i", "text"]
+    )
+    got = {
+        r["i"]: r["nfc"]
+        for r in df.select("i", nfc_normalize_col("text").alias("nfc")).collect()
+    }
+    con = duckdb.connect()
+    for i, t in enumerate(UNICODE_DOCS):
+        py = unicodedata.normalize("NFC", t)
+        duck = con.execute("SELECT nfc_normalize(?)", [t]).fetchone()[0]
+        assert got[i] == py, f"spark != cpython on {t!r}"
+        assert py == duck, f"cpython != duckdb on {t!r}"
+    con.close()
+
+
+def test_nfc_null_and_composition(spark):
+    """NULL in → NULL out; an NFD string actually composes (changes)."""
+    nfd = "café"  # e + combining acute
+    df = spark.createDataFrame([(1, nfd), (2, None), (3, "plain")], ["i", "text"])
+    rows = {
+        r["i"]: (r["nfc"], r["changed"])
+        for r in df.select(
+            "i",
+            nfc_normalize_col("text").alias("nfc"),
+            (~F.col("text").eqNullSafe(nfc_normalize_col("text"))).alias("changed"),
+        ).collect()
+    }
+    assert rows[1] == ("caf\xe9", True)
+    assert rows[2] == (None, False)
+    assert rows[3] == ("plain", False)
+
+
+def test_zipf_slope_on_exact_zipf_corpus(spark):
+    """A corpus whose type frequencies are EXACTLY f(r) = 840/r has
+    ln f = ln 840 − 1·ln r: slope −1, intercept ln 840, r² = 1 (up to
+    the 6-dp rounding the report applies).  840 = lcm(1..8), so every
+    frequency is an exact integer — a 1000//r corpus would flooring-skew
+    the law and the fit (slope −0.9961…, caught in review)."""
+    from amazon_kinesis_data_analytics_flinktableapi_spark.queries.llm import zipf_fit_over
+
+    rows = [
+        Row(source="z", text=" ".join(f"tok{r:03d}" for _ in range(840 // r)))
+        for r in range(1, 9)
+    ]
+    docs = spark.createDataFrame(rows)
+    out = zipf_fit_over(docs).collect()
+    assert len(out) == 1
+    rep = out[0]
+    assert rep["n_types"] == 8
+    assert abs(rep["zipf_slope"] - (-1.0)) < 1e-6
+    assert abs(rep["zipf_intercept"] - math.log(840.0)) < 1e-6
+    assert abs(rep["zipf_r2"] - 1.0) < 1e-6
+
+
+def test_zipf_degenerate_uniform_frequencies_null_r2(spark):
+    """All type frequencies equal (every token unique ⇒ f ≡ 1) makes the
+    fit undefined: ln f is constant, so r² is reported NULL — by the
+    explicit min(f) = max(f) guard, which is integer-exact on both
+    engines, NOT a var_pop() == 0.0 float comparison.  Slope is 0 (the
+    flat line is a valid least-squares answer)."""
+    from amazon_kinesis_data_analytics_flinktableapi_spark.queries.llm import zipf_fit_over
+
+    docs = spark.createDataFrame([Row(source="u", text="a b c d e f g h")])
+    rep = zipf_fit_over(docs).collect()[0]
+    assert rep["n_types"] == 8
+    assert rep["zipf_slope"] == 0.0
+    assert rep["zipf_r2"] is None
+
+
+def test_zipf_single_type_source_dropped(spark):
+    """A source with one distinct type has one (rank, freq) point — no
+    regression exists; the report drops it (n_types >= 2) rather than
+    emitting engine-dependent NULL-vs-NaN edge values."""
+    from amazon_kinesis_data_analytics_flinktableapi_spark.queries.llm import zipf_fit_over
+
+    docs = spark.createDataFrame(
+        [Row(source="one", text="same same same"), Row(source="two", text="x y x")]
+    )
+    out = {r["source"] for r in zipf_fit_over(docs).collect()}
+    assert out == {"two"}

@@ -107,8 +107,8 @@ def main() -> int:
     # untimed warmup on a slice (forced onto the loop path): both timed
     # arms then read from an equally warm session — without this the
     # second arm inherits ~all of the first's JIT/codegen warmth and the
-    # arm delta measures session position, not checkpoint cost (the
-    # order_probe.py lesson)
+    # arm delta measures session position, not checkpoint cost (SCALING.md,
+    # duplicate_span_removal creep attribution)
     connected_components(
         edges.limit(50_000), small_graph_edges=0, max_iterations=args.max_iterations
     ).count()

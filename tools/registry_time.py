@@ -4,7 +4,9 @@ The correctness gate runs query+oracle per registry entry; this tool
 isolates the Spark-side cost so the slowest registry paths (the
 optimization targets the headline set doesn't cover) are visible with
 one number each.  Single session, one timed run per query (gate-like:
-cold per query, caches dropped), sorted report.
+cold per query, caches dropped), sorted report.  A run is timed from
+``spec.fn`` to the end of ``perfbench.batch.full_result``, so every
+output column is computed.
 
 Usage::
 
@@ -19,6 +21,8 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from perfbench.batch import full_result  # noqa: E402
 
 
 def main() -> int:
@@ -50,7 +54,7 @@ def main() -> int:
         spark.sparkContext.setJobDescription(f"registry_time: {name}")
         t = time.perf_counter()
         try:
-            spec.fn(spark, sf_dir).count()
+            full_result(spec.fn(spark, sf_dir))
             times[name] = round(time.perf_counter() - t, 3)
         except Exception as e:  # keep profiling; report at the end
             errs[name] = repr(e)[:200]

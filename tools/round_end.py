@@ -47,7 +47,6 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 #: driver-owned droppings this script is allowed to stage blindly
 ARTIFACT_GLOBS = [
     "BENCH_r*.json",
-    "BENCH_SELF_r*.json",
     "CORRECTNESS_r*.json",
     "VERDICT.md",
     "ADVICE.md",

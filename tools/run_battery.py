@@ -1,17 +1,18 @@
 """Round-close verification battery, one command.
 
 Runs, in order, the checks every round's COVERAGE "FINAL state" table
-reports — full pytest, the full-registry DuckDB replica at the driver's
-gate scale (sf0.01) and at 10× it (sf0.1), all four hostile-fixture
-sweeps, and the PLANS.md staleness regen — and prints a markdown table
-of the outcomes ready to paste into COVERAGE.md.  Each step is a
-subprocess so one crash cannot take down the battery; a failed step is
-reported and the battery continues (the table must show what failed,
-not stop at it).
+reports — full pytest, the benchmark's own guards (``perfbench/tests``:
+its timed action computes the full result), the full-registry DuckDB
+replica at the gate scale (sf0.01) and at 10× it (sf0.1), all
+four hostile-fixture sweeps, and the PLANS.md staleness regen — and
+prints a markdown table of the outcomes ready to paste into COVERAGE.md.
+Each step is a subprocess so one crash cannot take down the battery; a
+failed step is reported and the battery continues (the table must show
+what failed, not stop at it).
 
 Usage::
 
-    python tools/run_battery.py [--skip pytest,replica01,replica1,sweeps,plans]
+    python tools/run_battery.py [--skip pytest,perfbench,replica01,replica1,sweeps,plans]
 
 Wall-clock on this host: pytest ~25 min, each replica ~10-25 min, each
 sweep ~8-15 min — run it in the background and read the table at the
@@ -31,6 +32,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 STEPS: list[tuple[str, list[str]]] = [
     ("pytest", [sys.executable, "-m", "pytest", "tests/", "-x", "-q"]),
+    ("perfbench", [sys.executable, "-m", "pytest", "perfbench/tests", "-q"]),
     ("replica01", [sys.executable, "tools/driver_replica.py", "/root/testdata/sf0.01"]),
     ("replica1", [sys.executable, "tools/driver_replica.py", "/root/testdata/sf0.1"]),
     ("sweep_adv", [sys.executable, "tools/adversarial_sweep.py", "--fixture", "adv"]),
@@ -43,6 +45,7 @@ STEPS: list[tuple[str, list[str]]] = [
 #: step groups the --skip flag understands
 SKIP_GROUPS = {
     "pytest": {"pytest"},
+    "perfbench": {"perfbench"},
     "replica01": {"replica01"},
     "replica1": {"replica1"},
     "sweeps": {"sweep_adv", "sweep_skew", "sweep_nonfinite", "sweep_unicode"},

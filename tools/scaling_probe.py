@@ -11,8 +11,9 @@ is still partly absorbed by fixed costs (job setup, exchange latency),
 i.e. the operator has headroom before data cost even dominates.
 
 Methodology matches bench.py: min-of-3 back-to-back runs per (query,
-SF), caches dropped between runs, run 1 doubling as the AQE/codegen
-warmup for that data size (AQE re-plans per size, so warming at another
+SF), each timed to the end of ``perfbench.batch.full_result`` (every
+output column computed), caches dropped between runs, run 1 doubling
+as the AQE/codegen warmup for that data size (AQE re-plans per size, so warming at another
 SF compiles different classes).  Output: a markdown table on stdout,
 ready to paste into SCALING.md's "Measured scaling" section.
 
@@ -54,6 +55,7 @@ def main() -> int:
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from amazon_kinesis_data_analytics_flinktableapi_spark.engine import build_spark
     from amazon_kinesis_data_analytics_flinktableapi_spark.queries import all_specs
+    from perfbench.batch import full_result
 
     spark = build_spark(app_name="scaling_probe", master="local[32]")
     spark.sparkContext.setLogLevel("ERROR")
@@ -79,7 +81,7 @@ def main() -> int:
             for _ in range(args.runs):
                 spark.catalog.clearCache()
                 t = time.time()
-                spec.fn(spark, sf_dir).count()
+                full_result(spec.fn(spark, sf_dir))
                 samples.append(time.time() - t)
             results[name][sf] = min(samples)
             print(f"# {name} sf{sf}: {min(samples):.3f}s samples="
