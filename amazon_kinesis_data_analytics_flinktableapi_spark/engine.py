@@ -16,20 +16,25 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "*")
 
 
 def build_spark(
     app_name: str = "flinktableapi-spark",
     master: str | None = None,
-    shuffle_partitions: int = DEFAULT_SHUFFLE_PARTITIONS,
+    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Bootstrap a SparkSession tuned for this engine.
 
     Scale-relevant defaults (tested on local[N]; sized for a real cluster):
 
+    - shuffle partitions = the session's task slots
+      (``sparkContext.defaultParallelism``) unless ``shuffle_partitions``
+      is given: a stateful streaming operator opens and commits one state
+      store per partition per micro-batch, and one partition per slot runs
+      each batch in one task wave.  A stateful query pins the value in its
+      checkpoint when it first starts.
     - AQE on: runtime coalescing of shuffle partitions, skew-join splitting,
       and dynamic broadcast conversion — the 100 TB safety net.
     - session timezone UTC: timestamps behave like the reference's
@@ -38,7 +43,6 @@ def build_spark(
     """
     builder = (
         SparkSession.builder.appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -59,7 +63,11 @@ def build_spark(
         builder = builder.master(f"local[{DEFAULT_CPUS}]")
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    if shuffle_partitions is None:
+        shuffle_partitions = spark.sparkContext.defaultParallelism
+    spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
+    return spark
 
 
 class TableEngine:

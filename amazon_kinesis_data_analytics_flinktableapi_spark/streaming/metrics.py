@@ -1,7 +1,7 @@
 """Streaming observability (SURVEY.md §7 phase 5): per-batch throughput,
-state size, and watermark tracking via StreamingQueryListener — the
-engine-side replacement for the metrics the reference delegated to the
-Kinesis Data Analytics console.
+state size and store cost, watermark and late-row drops via
+StreamingQueryListener — the engine-side replacement for the metrics the
+reference delegated to the Kinesis Data Analytics console.
 """
 
 from __future__ import annotations
@@ -19,6 +19,13 @@ class BatchMetrics:
     rows_per_second: float
     state_rows: int
     watermark: str | None
+    #: the state layer, each summed over ``stateOperators``: stores opened
+    #: and committed this batch (one per shuffle partition per store kind
+    #: of each operator), time spent committing them, and input rows
+    #: discarded as later than the watermark
+    state_store_instances: int
+    state_commit_ms: int
+    rows_dropped_by_watermark: int
 
 
 @dataclass
@@ -50,14 +57,17 @@ class EngineQueryListener(StreamingQueryListener):
 
     def onQueryProgress(self, event) -> None:  # noqa: N802
         p = event.progress
-        state_rows = sum(op.numRowsTotal for op in p.stateOperators) if p.stateOperators else 0
+        ops = p.stateOperators or []
         watermark = p.eventTime.get("watermark") if p.eventTime else None
         m = BatchMetrics(
             batch_id=p.batchId,
             input_rows=p.numInputRows,
             rows_per_second=p.processedRowsPerSecond or 0.0,
-            state_rows=state_rows,
+            state_rows=sum(op.numRowsTotal for op in ops),
             watermark=watermark,
+            state_store_instances=sum(op.numStateStoreInstances for op in ops),
+            state_commit_ms=sum(op.commitTimeMs for op in ops),
+            rows_dropped_by_watermark=sum(op.numRowsDroppedByWatermark for op in ops),
         )
         # an idle query RE-REPORTS its last batch every
         # noDataProgressEventInterval; appending each re-report would count

@@ -109,51 +109,6 @@ def dump_json_parts(dfs: list[DataFrame], out_dir: str) -> str:
     return out_dir
 
 
-#: shuffle/state partition count a replayed stream starts with.  Every
-#: stateful operator opens and commits ONE state store per shuffle
-#: partition per micro-batch — a fixed ~100 ms-class overhead that
-#: dwarfs the row work when partitions outnumber the rows-per-batch
-#: (bench.py measured the same 100k-event replay at 32 partitions →
-#: ~8.5k rec/s, 8 → ~31k, 4 → ~35k).  The engine session default (32,
-#: sized for the BATCH queries) is therefore the wrong number for every
-#: bounded replay, and r17 profiling showed the 40 streaming registry
-#: queries paying for it (OPTIMIZATION_r17.md: 12 of the 25 slowest
-#: registry paths were micro-batch replays).  Env-tunable
-#: (``SPARK_GRAFT_STREAM_STATE_PARTITIONS``); at production state
-#: volumes this number goes UP with rows-per-partition-per-batch — the
-#: principle is sizing to the micro-batch workload, never inheriting a
-#: batch-query constant.
-_STREAM_PARTS_ENV = "SPARK_GRAFT_STREAM_STATE_PARTITIONS"
-_STREAM_PARTS_DEFAULT = 8
-
-
-class _stream_shuffle_partitions:
-    """Scoped ``spark.sql.shuffle.partitions`` override for one streaming
-    query: the value is captured into the query's offset metadata at
-    ``start()`` and pins its state partitioning for life, so the
-    override only needs to span start→termination; the session's batch
-    value is restored afterward."""
-
-    def __init__(self, spark: SparkSession):
-        self.spark = spark
-
-    def __enter__(self):
-        raw = os.environ.get(_STREAM_PARTS_ENV)
-        n = int(raw) if raw and raw.strip().isdigit() else _STREAM_PARTS_DEFAULT
-        try:
-            self.prev = self.spark.conf.get("spark.sql.shuffle.partitions")
-        except Exception:
-            self.prev = None
-        if n > 0:
-            self.spark.conf.set("spark.sql.shuffle.partitions", str(n))
-        return self
-
-    def __exit__(self, *exc):
-        if self.prev is not None:
-            self.spark.conf.set("spark.sql.shuffle.partitions", self.prev)
-        return False
-
-
 def run_to_memory(
     stream_df: DataFrame,
     spark: SparkSession,
@@ -165,23 +120,22 @@ def run_to_memory(
     collected result as a batch DataFrame.  ``output_mode="update"`` for
     stateful operators that can't run in append mode."""
     name = name or f"replay_{uuid.uuid4().hex[:8]}"
-    with _stream_shuffle_partitions(spark):
-        q = (
-            stream_df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
+    q = (
+        stream_df.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(output_mode)
+        .trigger(availableNow=True)
+        .start()
+    )
+    # awaitTermination(timeout) RETURNS False on timeout rather than
+    # raising — swallowing that would hand back a silently-truncated
+    # memory table while the query keeps appending behind the caller
+    if not q.awaitTermination(timeout_sec):
+        q.stop()
+        raise TimeoutError(
+            f"streaming query {name!r} still running after {timeout_sec}s "
+            "(availableNow did not finish; partial results discarded)"
         )
-        # awaitTermination(timeout) RETURNS False on timeout rather than
-        # raising — swallowing that would hand back a silently-truncated
-        # memory table while the query keeps appending behind the caller
-        if not q.awaitTermination(timeout_sec):
-            q.stop()
-            raise TimeoutError(
-                f"streaming query {name!r} still running after {timeout_sec}s "
-                "(availableNow did not finish; partial results discarded)"
-            )
     return spark.table(name)
 
 
@@ -232,8 +186,6 @@ def run_to_memory_drain(
     # unchanged (still idle_batches consecutive zero reports).
     spark.conf.set(_conf_key, "250ms")
     name = name or f"drain_{uuid.uuid4().hex[:8]}"
-    parts_scope = _stream_shuffle_partitions(spark)
-    parts_scope.__enter__()
     q = (
         stream_df.writeStream.format("memory")
         .queryName(name)
@@ -258,7 +210,6 @@ def run_to_memory_drain(
     finally:
         q.stop()
         q.awaitTermination(60)
-        parts_scope.__exit__()
         if _prev_interval is not None:
             spark.conf.set(_conf_key, _prev_interval)
         else:

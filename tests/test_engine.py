@@ -161,3 +161,29 @@ def test_vectorized_timestamp_to_string_all_nat_stays_object():
     out = timestamp_to_string_pandas(s)
     assert out.dtype == object
     assert list(out) == [None, None]
+
+
+def test_shuffle_partitions_follow_task_slots(tmp_path):
+    """``build_spark`` sizes shuffle partitions to the session's task slots:
+    ``local[3]`` gives 3, so the reference interval join (4 state stores
+    per partition) opens 12 stores per micro-batch, and an explicit
+    ``shuffle_partitions`` still wins.  Runs in a SUBPROCESS
+    (tests/partition_rule_runner.py): the rule reads the SparkContext's
+    parallelism, fixed when a process builds its first session."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    proc = subprocess.run(
+        [sys.executable, "-m", "tests.partition_rule_runner", str(tmp_path)],
+        capture_output=True,
+        text=True,
+        timeout=420,
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    )
+    assert proc.returncode == 0, f"runner failed:\n{proc.stdout}\n{proc.stderr}"
+    result = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert result["default"] == "3", result
+    assert result["reference"] == {"num_shuffle_partitions": 3, "num_state_store_instances": 12}
+    assert result["explicit"] == "5", result

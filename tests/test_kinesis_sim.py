@@ -463,6 +463,114 @@ def test_stream_restart_from_checkpoint_no_gaps_no_dupes(spark, tmp_path):
     )
 
 
+def test_reference_restart_keeps_checkpointed_state_partitions(spark, tmp_path):
+    """A stateful query pins its shuffle partition count in the checkpoint
+    when it first starts: the reference join started at 32 partitions,
+    stopped mid-stream and restarted from the same checkpoint on a session
+    now sized to 4 still opens 128 state stores (32 partitions x 4 join
+    stores), and the sink holds, exactly once, every row of the batch twin
+    for the orders below the final watermark."""
+    import glob
+    import json
+    import os
+    from collections import Counter
+
+    from amazon_kinesis_data_analytics_flinktableapi_spark.schemas import (
+        EXCHANGE_RATE_SCHEMA,
+        ORDER_SCHEMA,
+    )
+    from amazon_kinesis_data_analytics_flinktableapi_spark.sinks import serialize_json
+    from amazon_kinesis_data_analytics_flinktableapi_spark.sources.streaming import parse_json_stream
+    from amazon_kinesis_data_analytics_flinktableapi_spark.streaming.pipeline import (
+        build_reference_query,
+    )
+
+    register(spark)
+    # 3 data micro-batches per stream, event times 0 .. 3.56 s (orders)
+    # and 0 .. 3.2 s (rates)
+    o_opts = {"shards": 2, "records_per_shard": 90, "batch_records": 30,
+              "template": "orders", "interval_ms": 40, "seed": 11}
+    r_opts = {"shards": 1, "records_per_shard": 9, "batch_records": 3,
+              "template": "rates", "interval_ms": 400, "seed": 12}
+    total = 2 * 90 + 9
+    ckpt, out = str(tmp_path / "ckpt"), str(tmp_path / "puts")
+
+    def src(opts, streaming, schema):
+        reader = spark.readStream if streaming else spark.read
+        raw = reader.format("kinesis_sim").options(**opts).load()
+        return parse_json_stream(raw, schema, value_col="data")
+
+    ob, rb = src(o_opts, False, ORDER_SCHEMA), src(r_opts, False, EXCHANGE_RATE_SCHEMA)
+    iso = "yyyy-MM-dd'T'HH:mm:ss.SSS'Z'"
+    final_wm = min(
+        ob.select(F.date_format(F.max("orderTime"), iso)).first()[0],
+        rb.select(F.date_format(F.max("exchangeRateTime"), iso)).first()[0],
+    )
+
+    def start(trigger):
+        streamed = build_reference_query(
+            spark, src(o_opts, True, ORDER_SCHEMA), src(r_opts, True, EXCHANGE_RATE_SCHEMA)
+        )
+        return (
+            serialize_json(streamed)
+            .writeStream.format("kinesis_sim")
+            .option("path", out)
+            .option("partition_key", "0")
+            .option("checkpointLocation", ckpt)
+            .trigger(processingTime=trigger)
+            .start()
+        )
+
+    def wait_for(q, done, timeout=240):
+        deadline = time.time() + timeout
+        while not done(q):
+            if q.exception() is not None:
+                raise q.exception()
+            assert time.time() < deadline, "query did not reach its stop point"
+            time.sleep(0.2)
+        q.stop()
+        q.awaitTermination(60)
+
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        spark.conf.set("spark.sql.shuffle.partitions", "32")
+        q = start("5 seconds")  # paced, so the stop lands after batch 0
+        wait_for(q, lambda q: len(q.recentProgress) >= 1)
+        first = q.recentProgress
+        assert first[0]["stateOperators"][0]["numStateStoreInstances"] == 128
+        assert sum(p["numInputRows"] for p in first) < total, "want a mid-stream stop"
+
+        spark.conf.set("spark.sql.shuffle.partitions", "4")
+        q = start("100 milliseconds")
+        wait_for(q, lambda q: (q.lastProgress or {}).get("eventTime", {}).get(
+            "watermark", "") >= final_wm)
+        last = q.lastProgress
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+    ops = last["stateOperators"][0]
+    assert (ops["numShufflePartitions"], ops["numStateStoreInstances"]) == (32, 128)
+    wm = last["eventTime"]["watermark"]
+    below = {
+        r["id"] for r in ob.where(F.col("orderTime") < F.to_timestamp(F.lit(wm))).collect()
+    }
+    batch = build_reference_query(spark, ob, rb)
+    expected = Counter(tuple(r) for r in batch.collect() if r["id"] in below)
+    assert any(e[3] is None for e in expected) and any(e[3] is not None for e in expected), (
+        "fixture must hold matched and NULL-extended orders below the watermark"
+    )
+    got = Counter()
+    for mpath in glob.glob(os.path.join(out, "batch=*", "_manifest.json")):
+        for m in json.load(open(mpath)):
+            for line in open(m["file"]):
+                if line.strip():
+                    rec = json.loads(json.loads(line)["value"])
+                    if rec["id"] in below:
+                        got[(rec["id"], rec["orderTime"], rec["originalAmount"],
+                             rec.get("convertedAmount"))] += 1
+    assert got == expected
+
+
 def test_at_timestamp_initial_position(spark):
     """AT_TIMESTAMP (FlinkKinesisConsumer's third STREAM_INITIAL_POSITION;
     the reference uses LATEST): the stream starts at the first record whose

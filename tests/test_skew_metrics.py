@@ -109,6 +109,31 @@ def test_late_rows_dropped_by_watermark(spark, tmp_path):
     """§7 watermark semantics: a row older than the advanced watermark is
     dropped from a streaming aggregation (documented divergence from
     Flink's per-subtask max−1ms extractor is about *when*, not *whether*)."""
+    out = run_to_memory(_late_row_aggregation(spark, tmp_path), spark)
+    counts = {(r["window"]["start"].hour): r["n"] for r in (row.asDict(True) for row in out.collect())}
+    assert counts.get(10) == 1, f"late row must be dropped, got {counts}"
+
+
+def test_listener_counts_watermark_drops_and_state_stores(spark, tmp_path):
+    """The listener reports the state layer: the one planted late row shows
+    up in the drop counter, and every batch opens one store per shuffle
+    partition (the session's 4) for the aggregation's single store kind."""
+    listener = metrics.attach(spark)
+    try:
+        run_to_memory(_late_row_aggregation(spark, tmp_path), spark)
+        deadline = time.time() + 30  # listener events are async
+        while len(listener.collector.batches) < 3 and time.time() < deadline:
+            time.sleep(0.2)
+        batches = listener.collector.batches
+        assert sum(b.rows_dropped_by_watermark for b in batches) == 1
+        assert {b.state_store_instances for b in batches} == {4}
+    finally:
+        spark.streams.removeListener(listener)
+
+
+def _late_row_aggregation(spark, tmp_path):
+    """A watermarked hourly count over three one-file micro-batches whose
+    last row (10:30) arrives after the watermark has passed 12:00."""
     import os
 
     d = tmp_path / "late"
@@ -131,12 +156,9 @@ def test_late_rows_dropped_by_watermark(spark, tmp_path):
         os.utime(p, (1_700_000_000 + i * 100, 1_700_000_000 + i * 100))
 
     stream = file_replay(spark, str(d), "id long, ts timestamp, k string", max_files_per_trigger=1)
-    agg = stream.withWatermark("ts", "0 seconds").groupBy(F.window("ts", "1 hour")).agg(
+    return stream.withWatermark("ts", "0 seconds").groupBy(F.window("ts", "1 hour")).agg(
         F.count(F.lit(1)).alias("n")
     )
-    out = run_to_memory(agg, spark)
-    counts = {(r["window"]["start"].hour): r["n"] for r in (row.asDict(True) for row in out.collect())}
-    assert counts.get(10) == 1, f"late row must be dropped, got {counts}"
 
 
 def test_salted_join_equals_plain_join(spark):

@@ -45,6 +45,9 @@ def main() -> int:
 
     spark = build_spark(app_name="registry_time", master=f"local[{cpus}]")
     spark.sparkContext.setLogLevel("ERROR")
+    # the partition count follows the session's task slots; record it so
+    # readings taken under different engine defaults stay comparable
+    shuffle_partitions = spark.conf.get("spark.sql.shuffle.partitions")
     spark.range(1_000_000).selectExpr("sum(id)").collect()  # warm JVM, untimed
 
     times: dict[str, float] = {}
@@ -62,7 +65,11 @@ def main() -> int:
     spark.stop()
 
     with open(out_path, "w") as f:
-        json.dump({"sf_dir": sf_dir, "cpus": cpus, "times": times, "errs": errs}, f, indent=1)
+        json.dump(
+            {"sf_dir": sf_dir, "cpus": cpus, "shuffle_partitions": shuffle_partitions,
+             "times": times, "errs": errs},
+            f, indent=1,
+        )
     total = sum(times.values())
     print(f"total {round(total, 1)}s over {len(times)} queries; errs={len(errs)}")
     for name, sec in sorted(times.items(), key=lambda kv: -kv[1])[:40]:
