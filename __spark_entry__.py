@@ -17,7 +17,12 @@ SMOKE_SF_DIR = "/root/testdata/sf0.001"
 
 
 def _configure(spark: SparkSession) -> SparkSession:
-    """Apply engine session conf to a driver-provided SparkSession."""
+    """Apply engine session conf to a driver-provided SparkSession,
+    including the engine's partition rule (a partition count the driver
+    set explicitly is kept)."""
+    from amazon_kinesis_data_analytics_flinktableapi_spark.engine import size_shuffle_partitions
+
+    size_shuffle_partitions(spark)
     for k, v in [
         ("spark.sql.session.timeZone", "UTC"),
         ("spark.sql.legacy.parquet.nanosAsLong", "true"),

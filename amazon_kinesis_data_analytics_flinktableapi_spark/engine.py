@@ -29,12 +29,9 @@ def build_spark(
 
     Scale-relevant defaults (tested on local[N]; sized for a real cluster):
 
-    - shuffle partitions = the session's task slots
-      (``sparkContext.defaultParallelism``) unless ``shuffle_partitions``
-      is given: a stateful streaming operator opens and commits one state
-      store per partition per micro-batch, and one partition per slot runs
-      each batch in one task wave.  A stateful query pins the value in its
-      checkpoint when it first starts.
+    - shuffle partitions by ``size_shuffle_partitions``: ``shuffle_partitions``
+      if given, else a value ``extra_conf`` or the deployment already set,
+      else the session's task slots.
     - AQE on: runtime coalescing of shuffle partitions, skew-join splitting,
       and dynamic broadcast conversion — the 100 TB safety net.
     - session timezone UTC: timestamps behave like the reference's
@@ -63,10 +60,35 @@ def build_spark(
         builder = builder.master(f"local[{DEFAULT_CPUS}]")
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    spark = builder.getOrCreate()
-    if shuffle_partitions is None:
-        shuffle_partitions = spark.sparkContext.defaultParallelism
-    spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
+    return size_shuffle_partitions(builder.getOrCreate(), shuffle_partitions)
+
+
+def size_shuffle_partitions(spark: SparkSession, n: int | None = None) -> SparkSession:
+    """The engine's one partition rule: set ``spark.sql.shuffle.partitions``
+    to ``n``, or, when ``n`` is None and nothing set it explicitly, to the
+    session's task slots (``sparkContext.defaultParallelism``).
+
+    A stateful streaming operator opens and commits one state store per
+    partition per micro-batch, and one partition per slot runs each batch
+    in one task wave.  A stateful query pins the value in its checkpoint
+    when it first starts.  Task slots are known up front only on a
+    ``local[N]`` master or when ``spark.default.parallelism`` is set;
+    elsewhere executors may not have registered yet, so Spark's own value
+    is left in place.  Measured on 4-core hosts only.
+    """
+    key = "spark.sql.shuffle.partitions"
+    if n is None:
+        if spark.conf.get(key, None) is not None:
+            return spark
+        sc = spark.sparkContext
+        if not (
+            sc.master == "local"
+            or sc.master.startswith("local[")
+            or sc.getConf().contains("spark.default.parallelism")
+        ):
+            return spark
+        n = sc.defaultParallelism
+    spark.conf.set(key, str(n))
     return spark
 
 

@@ -90,11 +90,6 @@ def _streaming_join_rps(spark, sf_dir: str) -> float:
     # leftover storage memory from the batch phase (near-dup corpora,
     # sketch bases) inflates GC during micro-batches: measured to halve rec/s
     spark.catalog.clearCache()
-    # every stateful operator commits one state store per shuffle partition
-    # per micro-batch, a fixed cost that dwarfs the row work when partitions
-    # outnumber the throughput (100k-event replay: 32 partitions ~8.5k
-    # rec/s, 8 ~31k)
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
 
     def one_run() -> float:
         joined = prepare_streaming_interval_join(spark, sf_dir)

@@ -1,11 +1,13 @@
-"""Subprocess body for the partition-rule test (tests/test_engine.py).
+"""Subprocess body for the partition-rule tests (tests/test_engine.py).
 
-``build_spark`` sizes ``spark.sql.shuffle.partitions`` from the session's
-task slots, which exist only once a SparkContext starts, so the rule is
-observable only in a process whose FIRST session is built here.  Invoked
-via ``python -m tests.partition_rule_runner <workdir>``; prints one JSON
-line with the evidence the host test asserts on, or exits nonzero with a
-traceback.
+``size_shuffle_partitions`` sizes ``spark.sql.shuffle.partitions`` from
+the session's task slots, which exist only once a SparkContext starts, so
+the rule is observable only in a process whose FIRST session is built
+here.  Invoked via ``python -m tests.partition_rule_runner <workdir>
+[engine|driver]``: ``engine`` builds the session with ``build_spark``,
+``driver`` hands a bare ``SparkSession`` to ``__spark_entry__`` the way an
+external driver does.  Prints one JSON line with the evidence the host
+test asserts on, or exits nonzero with a traceback.
 """
 
 from __future__ import annotations
@@ -13,9 +15,12 @@ from __future__ import annotations
 import json
 import os
 import sys
+import time
+
+SF_SMOKE = "/root/testdata/sf0.001"
 
 
-def main(workdir: str) -> dict:
+def engine(workdir: str) -> dict:
     from amazon_kinesis_data_analytics_flinktableapi_spark.engine import build_spark
     from amazon_kinesis_data_analytics_flinktableapi_spark.schemas import (
         EXCHANGE_RATE_SCHEMA,
@@ -65,9 +70,49 @@ def main(workdir: str) -> dict:
     out["explicit"] = build_spark(shuffle_partitions=5).conf.get(
         "spark.sql.shuffle.partitions"
     )
+    # so does a value passed through extra_conf
+    out["extra_conf"] = build_spark(
+        extra_conf={"spark.sql.shuffle.partitions": "7"}
+    ).conf.get("spark.sql.shuffle.partitions")
+    spark.stop()
+    return out
+
+
+def driver(workdir: str) -> dict:
+    from pyspark.sql import SparkSession
+
+    import __spark_entry__
+    from amazon_kinesis_data_analytics_flinktableapi_spark.streaming.metrics import attach
+
+    spark = (
+        SparkSession.builder.appName("partition-rule-driver")
+        .master("local[2]")
+        .config("spark.ui.enabled", "false")
+        .config("spark.sql.warehouse.dir", os.path.join(workdir, "warehouse"))
+        .getOrCreate()
+    )
+    spark.sparkContext.setLogLevel("ERROR")
+    out: dict = {"bare": spark.conf.get("spark.sql.shuffle.partitions")}
+    listener = attach(spark)
+    rows = __spark_entry__.queries()["streaming_interval_join"](spark, SF_SMOKE).count()
+    out["configured"] = spark.conf.get("spark.sql.shuffle.partitions")
+    # listener events arrive on the listener bus after the query returns
+    deadline = time.monotonic() + 30
+    while not listener.collector.batches and time.monotonic() < deadline:
+        time.sleep(0.2)
+    out["rows"] = rows
+    out["state_store_instances"] = sorted(
+        {b.state_store_instances for b in listener.collector.batches}
+    )
+
+    # a partition count the driver set itself is kept
+    spark.conf.set("spark.sql.shuffle.partitions", "6")
+    __spark_entry__.queries()["tumbling_window_events"](spark, SF_SMOKE)
+    out["driver_set"] = spark.conf.get("spark.sql.shuffle.partitions")
     spark.stop()
     return out
 
 
 if __name__ == "__main__":
-    print(json.dumps(main(sys.argv[1])))
+    mode = sys.argv[2] if len(sys.argv) > 2 else "engine"
+    print(json.dumps({"engine": engine, "driver": driver}[mode](sys.argv[1])))

@@ -163,27 +163,46 @@ def test_vectorized_timestamp_to_string_all_nat_stays_object():
     assert list(out) == [None, None]
 
 
-def test_shuffle_partitions_follow_task_slots(tmp_path):
-    """``build_spark`` sizes shuffle partitions to the session's task slots:
-    ``local[3]`` gives 3, so the reference interval join (4 state stores
-    per partition) opens 12 stores per micro-batch, and an explicit
-    ``shuffle_partitions`` still wins.  Runs in a SUBPROCESS
-    (tests/partition_rule_runner.py): the rule reads the SparkContext's
-    parallelism, fixed when a process builds its first session."""
+def _partition_runner(tmp_path, mode: str) -> dict:
     import json
     import os
     import subprocess
     import sys
 
     proc = subprocess.run(
-        [sys.executable, "-m", "tests.partition_rule_runner", str(tmp_path)],
+        [sys.executable, "-m", "tests.partition_rule_runner", str(tmp_path), mode],
         capture_output=True,
         text=True,
         timeout=420,
         cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
     )
     assert proc.returncode == 0, f"runner failed:\n{proc.stdout}\n{proc.stderr}"
-    result = json.loads(proc.stdout.strip().splitlines()[-1])
+    return json.loads(proc.stdout.strip().splitlines()[-1])
+
+
+def test_shuffle_partitions_follow_task_slots(tmp_path):
+    """``build_spark`` sizes shuffle partitions to the session's task slots:
+    ``local[3]`` gives 3, so the reference interval join (4 state stores
+    per partition) opens 12 stores per micro-batch, and an explicit
+    ``shuffle_partitions`` or ``extra_conf`` value still wins.  Runs in a SUBPROCESS
+    (tests/partition_rule_runner.py): the rule reads the SparkContext's
+    parallelism, fixed when a process builds its first session."""
+    result = _partition_runner(tmp_path, "engine")
     assert result["default"] == "3", result
     assert result["reference"] == {"num_shuffle_partitions": 3, "num_state_store_instances": 12}
     assert result["explicit"] == "5", result
+    assert result["extra_conf"] == "7", result
+
+
+def test_driver_session_gets_partition_rule(tmp_path):
+    """A bare ``SparkSession`` handed to ``__spark_entry__`` (Spark's
+    default of 200 partitions, never set) gets the same rule: the
+    replayed ``streaming_interval_join`` runs on ``local[2]``'s 2 slots,
+    so every micro-batch opens 2 x 4 state stores, not 800.  A count the
+    driver set itself is kept."""
+    result = _partition_runner(tmp_path, "driver")
+    assert result["bare"] == "200", result
+    assert result["configured"] == "2", result
+    assert result["rows"] > 0, result
+    assert result["state_store_instances"] == [8], result
+    assert result["driver_set"] == "6", result

@@ -522,8 +522,10 @@ def test_reference_restart_keeps_checkpointed_state_partitions(spark, tmp_path):
         )
 
     def wait_for(q, done, timeout=240):
+        # stop only between triggers: a stop that interrupts a running
+        # batch can surface from the Python source as a query failure
         deadline = time.time() + timeout
-        while not done(q):
+        while not done(q) or q.status["isTriggerActive"]:
             if q.exception() is not None:
                 raise q.exception()
             assert time.time() < deadline, "query did not reach its stop point"
@@ -534,7 +536,7 @@ def test_reference_restart_keeps_checkpointed_state_partitions(spark, tmp_path):
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         spark.conf.set("spark.sql.shuffle.partitions", "32")
-        q = start("5 seconds")  # paced, so the stop lands after batch 0
+        q = start("60 seconds")  # paced, so the stop lands after batch 0
         wait_for(q, lambda q: len(q.recentProgress) >= 1)
         first = q.recentProgress
         assert first[0]["stateOperators"][0]["numStateStoreInstances"] == 128
