@@ -18,11 +18,14 @@ SMOKE_SF_DIR = "/root/testdata/sf0.001"
 
 def _configure(spark: SparkSession) -> SparkSession:
     """Apply engine session conf to a driver-provided SparkSession,
-    including the engine's partition rule (a partition count the driver
-    set explicitly is kept)."""
-    from amazon_kinesis_data_analytics_flinktableapi_spark.engine import size_shuffle_partitions
+    including the engine's partition and checkpoint rules (a value the
+    driver set explicitly is kept)."""
+    from amazon_kinesis_data_analytics_flinktableapi_spark.engine import (
+        size_shuffle_partitions,
+        use_filesystem_checkpoints,
+    )
 
-    size_shuffle_partitions(spark)
+    size_shuffle_partitions(use_filesystem_checkpoints(spark))
     for k, v in [
         ("spark.sql.session.timeZone", "UTC"),
         ("spark.sql.legacy.parquet.nanosAsLong", "true"),

@@ -27,11 +27,15 @@ def build_spark(
 ) -> SparkSession:
     """Bootstrap a SparkSession tuned for this engine.
 
-    Scale-relevant defaults (tested on local[N]; sized for a real cluster):
+    Scale-relevant defaults (measured on 4-core ``local[N]`` hosts only):
 
     - shuffle partitions by ``size_shuffle_partitions``: ``shuffle_partitions``
       if given, else a value ``extra_conf`` or the deployment already set,
-      else the session's task slots.
+      else the session's task slots.  Sized only on a local master or when
+      ``spark.default.parallelism`` is set.
+    - checkpoint files through Hadoop's FileSystem API by
+      ``use_filesystem_checkpoints``, on a local master only and unless
+      ``extra_conf`` or the deployment set the manager class.
     - AQE on: runtime coalescing of shuffle partitions, skew-join splitting,
       and dynamic broadcast conversion — the 100 TB safety net.
     - session timezone UTC: timestamps behave like the reference's
@@ -60,7 +64,12 @@ def build_spark(
         builder = builder.master(f"local[{DEFAULT_CPUS}]")
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    return size_shuffle_partitions(builder.getOrCreate(), shuffle_partitions)
+    spark = use_filesystem_checkpoints(builder.getOrCreate())
+    return size_shuffle_partitions(spark, shuffle_partitions)
+
+
+def _local_master(sc) -> bool:
+    return sc.master == "local" or sc.master.startswith("local[")
 
 
 def size_shuffle_partitions(spark: SparkSession, n: int | None = None) -> SparkSession:
@@ -81,14 +90,43 @@ def size_shuffle_partitions(spark: SparkSession, n: int | None = None) -> SparkS
         if spark.conf.get(key, None) is not None:
             return spark
         sc = spark.sparkContext
-        if not (
-            sc.master == "local"
-            or sc.master.startswith("local[")
-            or sc.getConf().contains("spark.default.parallelism")
-        ):
+        if not (_local_master(sc) or sc.getConf().contains("spark.default.parallelism")):
             return spark
         n = sc.defaultParallelism
     spark.conf.set(key, str(n))
+    return spark
+
+
+#: Spark's checkpoint file manager over Hadoop's ``FileSystem`` API
+FILESYSTEM_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
+)
+
+
+def use_filesystem_checkpoints(spark: SparkSession) -> SparkSession:
+    """The engine's checkpoint rule: on a local master, unless
+    ``spark.sql.streaming.checkpointFileManagerClass`` was set explicitly,
+    set it to :data:`FILESYSTEM_CHECKPOINT_MANAGER`.
+
+    Every streaming checkpoint file (offset and commit log entries, state
+    store deltas and snapshots, and their checksum files) is written to a
+    temp file and renamed into place.  Without Hadoop's native library the
+    local file system shells out for both steps: a ``chmod`` process per
+    created file, and, through Spark's default ``FileContext`` manager, a
+    ``readlink`` process per rename.  The ``FileSystem`` manager renames
+    with ``File.renameTo``, an atomic POSIX rename, so only the ``chmod``
+    forks remain: 12-15 ms per checkpoint file instead of 43-46 ms (200
+    files, 4-core host).  Spark's checkpoint checksums still wrap it and
+    Hadoop's ``.crc`` files are still written and verified.
+
+    Local masters only: a local session is taken to checkpoint to a local
+    directory; one that checkpoints to an object store sets the key
+    itself.  Other masters keep Spark's default.  The key is a runtime
+    SQL conf, so it also applies on a running session, from the next
+    query start."""
+    key = "spark.sql.streaming.checkpointFileManagerClass"
+    if spark.conf.get(key, None) is None and _local_master(spark.sparkContext):
+        spark.conf.set(key, FILESYSTEM_CHECKPOINT_MANAGER)
     return spark
 
 

@@ -5,15 +5,19 @@ The reference defines ``TimestampToString extends ScalarFunction``
 ``java.sql.Timestamp.toString()``, registered by name and called from the
 SELECT list (StreamingJob.java:88,93).
 
-Three implementations, fastest first:
+One expression, :data:`TIMESTAMP_TO_STRING_SQL`, defines the format; it
+runs JVM-side inside whole-stage codegen:
 
-1. ``timestamp_to_string_col`` — pure built-in expression (JVM-side, inside
-   whole-stage codegen).  The hot path; what the query library uses.
+1. ``timestamp_to_string_col`` — the expression as a Column.
 2. ``register_timestamp_to_string`` — registers a *SQL-callable* function by
    the reference's name so user SQL written against the reference
-   (``TimestampToString(o.eventtime)``) runs unchanged.
-3. ``timestamp_to_string_pandas`` — Arrow-vectorized pandas_udf, kept as the
-   template for UDFs whose logic genuinely can't be expressed with builtins.
+   (``TimestampToString(o.eventtime)``) runs unchanged.  By default a
+   SQL-bodied temporary function over the same expression, which Spark
+   inlines into the calling plan; ``impl="pandas"`` / ``impl="python"``
+   register the Python UDF paths instead.
+3. ``timestamp_to_string_pandas`` — Arrow-vectorized pandas_udf body, kept as
+   the template for UDFs whose logic genuinely can't be expressed with
+   builtins; ``timestamp_to_string_py`` is its row-at-a-time twin.
 
 ``java.sql.Timestamp.toString()`` format: ``yyyy-MM-dd HH:mm:ss.f…`` with
 1-9 fractional digits, trailing zeros stripped but always ≥1 digit
@@ -28,17 +32,20 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
 
 
-def timestamp_to_string_col(col: Column | str) -> Column:
-    """Built-in-expression replica of java.sql.Timestamp.toString().
+#: java.sql.Timestamp.toString() as one Spark SQL expression over ``{ts}``:
+#: date_format gives micros zero-padded to 6; strip trailing zeros, then
+#: re-append '0' when the fraction was all zeros (Java prints '.0').  NULL
+#: in, NULL out (``concat`` with a NULL argument is NULL).
+TIMESTAMP_TO_STRING_SQL = (
+    "concat(date_format({ts}, 'yyyy-MM-dd HH:mm:ss'), '.', "
+    "coalesce(nullif(regexp_replace(date_format({ts}, 'SSSSSS'), '0+$', ''), ''), '0'))"
+)
 
-    date_format gives micros zero-padded to 6; strip trailing zeros, then
-    re-append '0' when the fraction was all zeros (Java prints '.0').
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    base = F.date_format(c, "yyyy-MM-dd HH:mm:ss")
-    frac = F.regexp_replace(F.date_format(c, "SSSSSS"), "0+$", "")
-    frac = F.when(frac == "", F.lit("0")).otherwise(frac)
-    return F.concat(base, F.lit("."), frac)
+
+def timestamp_to_string_col(ts: str) -> Column:
+    """Built-in-expression replica of java.sql.Timestamp.toString() over
+    ``ts``, a column name or SQL expression."""
+    return F.expr(TIMESTAMP_TO_STRING_SQL.format(ts=f"({ts})"))
 
 
 def timestamp_to_string_py(ts) -> str | None:
@@ -77,14 +84,34 @@ def timestamp_to_string_pandas(s: pd.Series) -> pd.Series:
     return out
 
 
-def register_timestamp_to_string(spark: SparkSession, vectorized: bool = True) -> None:
+def register_timestamp_to_string(spark: SparkSession, impl: str = "sql") -> None:
     """Make ``TimestampToString`` callable from SQL, as the reference does
-    with ``tableEnv.registerFunction`` (StreamingJob.java:88)."""
-    if vectorized:
+    with ``tableEnv.registerFunction`` (StreamingJob.java:88).
+
+    ``impl``: ``"sql"`` (default) registers a SQL-bodied temporary function
+    over :data:`TIMESTAMP_TO_STRING_SQL`; Spark inlines its body into the
+    caller's plan, so no row leaves the JVM.  ``"pandas"`` registers the
+    Arrow-vectorized UDF and ``"python"`` the row-at-a-time one; each puts
+    a Python evaluation node (and its worker round trip) into every plan
+    that calls it.  The latest registration replaces the previous one.
+
+    The pandas path fails on timestamps after 2262-04-11: PySpark hands a
+    pandas UDF its timestamps as ``datetime64[ns]``, which ends there."""
+    if impl == "sql":
+        body = TIMESTAMP_TO_STRING_SQL.format(ts="ts")
+        # CREATE OR REPLACE refuses to replace a Python UDF of the same name
+        spark.sql("DROP TEMPORARY FUNCTION IF EXISTS TimestampToString")
+        spark.sql(
+            "CREATE OR REPLACE TEMPORARY FUNCTION TimestampToString(ts TIMESTAMP) "
+            f"RETURNS STRING RETURN {body}"
+        )
+    elif impl == "pandas":
         fn = F.pandas_udf(timestamp_to_string_pandas, StringType())
         spark.udf.register("TimestampToString", fn)
-    else:
+    elif impl == "python":
         spark.udf.register("TimestampToString", timestamp_to_string_py, StringType())
+    else:
+        raise ValueError(f"impl must be 'sql', 'pandas' or 'python', not {impl!r}")
 
 
 #: DuckDB-side twin of :func:`finite_or_null` for oracle SQL (DuckDB has

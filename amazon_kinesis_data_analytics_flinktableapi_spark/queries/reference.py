@@ -169,9 +169,9 @@ _DUCK_TS_TO_STRING = (
 def q_currency_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact shape of the reference result (Result.java:3-8), via engine SQL
     with the registered ``TimestampToString`` function — exercises the SQL
-    entry point + catalog + UDF registration path end-to-end (the join
-    itself runs through the bucketed operator plan)."""
-    register_timestamp_to_string(spark)
+    entry point + catalog + Python (pandas) UDF registration path
+    end-to-end (the join itself runs through the bucketed operator plan)."""
+    register_timestamp_to_string(spark, impl="pandas")
     j = interval_join_bucketed(
         _orders_role(spark, sf_dir),
         _rates_role(spark, sf_dir),

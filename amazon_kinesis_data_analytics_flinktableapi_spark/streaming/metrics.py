@@ -1,5 +1,5 @@
 """Streaming observability (SURVEY.md §7 phase 5): per-batch throughput,
-state size and store cost, watermark and late-row drops via
+phase durations, state size and store cost, watermark and late-row drops via
 StreamingQueryListener — the engine-side replacement for the metrics the
 reference delegated to the Kinesis Data Analytics console.
 """
@@ -26,6 +26,13 @@ class BatchMetrics:
     state_store_instances: int
     state_commit_ms: int
     rows_dropped_by_watermark: int
+    #: the micro-batch's phases, from ``durationMs``: the whole trigger,
+    #: planning, the sink write (``addBatch``, which runs the batch's
+    #: jobs) and the offset log write (``walCommit``); 0 when not reported
+    trigger_ms: int
+    query_planning_ms: int
+    add_batch_ms: int
+    wal_commit_ms: int
 
 
 @dataclass
@@ -59,6 +66,7 @@ class EngineQueryListener(StreamingQueryListener):
         p = event.progress
         ops = p.stateOperators or []
         watermark = p.eventTime.get("watermark") if p.eventTime else None
+        phase = (p.durationMs or {}).get
         m = BatchMetrics(
             batch_id=p.batchId,
             input_rows=p.numInputRows,
@@ -68,6 +76,10 @@ class EngineQueryListener(StreamingQueryListener):
             state_store_instances=sum(op.numStateStoreInstances for op in ops),
             state_commit_ms=sum(op.commitTimeMs for op in ops),
             rows_dropped_by_watermark=sum(op.numRowsDroppedByWatermark for op in ops),
+            trigger_ms=phase("triggerExecution", 0),
+            query_planning_ms=phase("queryPlanning", 0),
+            add_batch_ms=phase("addBatch", 0),
+            wal_commit_ms=phase("walCommit", 0),
         )
         # an idle query RE-REPORTS its last batch every
         # noDataProgressEventInterval; appending each re-report would count

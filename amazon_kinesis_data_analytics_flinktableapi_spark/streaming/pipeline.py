@@ -7,7 +7,9 @@ UDF + int arithmetic) → append stream → JSON sink.
 
 ``build_reference_query`` is the engine-side equivalent: takes two typed
 *streaming* DataFrames, assigns watermarks, registers temp views, and runs
-the same SQL through the session catalog with the registered UDF.  Spark
+the same SQL through the session catalog with the registered
+``TimestampToString`` (a SQL-bodied function that Spark inlines, so a
+micro-batch makes no Python round trip for it).  Spark
 extracts the event-time bound from the join condition and expires join
 state automatically — the same bounded-state translation Flink's planner
 performed (SURVEY.md §4).

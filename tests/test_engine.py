@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pytest
 from pyspark.sql.types import IntegerType, StringType
 
 from tests.conftest import SF_SMOKE
@@ -163,14 +164,104 @@ def test_vectorized_timestamp_to_string_all_nat_stays_object():
     assert list(out) == [None, None]
 
 
-def _partition_runner(tmp_path, mode: str) -> dict:
+#: TimestampToString edge values: NULL, whole seconds ('.0'), '.5',
+#: full micros, pre-1970, the last pandas-representable microsecond, and
+#: Spark's largest timestamp
+_TS_EDGES = [
+    None,
+    "2024-01-01 12:00:07",
+    "2024-01-01 12:00:07.5",
+    "2024-01-01 12:00:07.123456",
+    "1969-12-31 23:59:59.25",
+    "2262-04-11 23:47:16.854775",
+    "9999-12-31 23:59:59.999999",
+]
+
+
+def _py_ts(v):
+    from datetime import datetime
+
+    return None if v is None else datetime.fromisoformat(v)
+
+
+def _ts_edge_frame(spark):
+    values = ", ".join(
+        "(CAST(NULL AS TIMESTAMP))" if v is None else f"(TIMESTAMP '{v}')" for v in _TS_EDGES
+    )
+    return spark.sql(f"SELECT * FROM VALUES {values} AS t(ts)")
+
+
+def _python_nodes(df) -> int:
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return plan.count("EvalPython")  # also matches ArrowEvalPython
+
+
+def test_timestamp_to_string_impls_agree(spark):
+    """The ``sql``, ``pandas`` and ``python`` registrations of
+    TimestampToString print byte-equal strings, equal to
+    ``timestamp_to_string_py``, on every edge value; only the SQL-bodied
+    one runs without a Python node.  PySpark hands a pandas UDF its
+    timestamps as ``datetime64[ns]``, which ends in 2262, so the pandas
+    path fails on year 9999 while the other two do not."""
+    from amazon_kinesis_data_analytics_flinktableapi_spark.functions.scalar import (
+        register_timestamp_to_string,
+        timestamp_to_string_py,
+    )
+
+    _ts_edge_frame(spark).createOrReplaceTempView("ts_edges")
+    in_range = "ts IS NULL OR ts < TIMESTAMP '9999-01-01'"
+    got = {}
+    for impl in ("sql", "pandas", "python"):
+        register_timestamp_to_string(spark, impl)
+        where = in_range if impl == "pandas" else "true"
+        q = spark.sql(
+            f"SELECT CAST(ts AS STRING) AS k, TimestampToString(ts) AS s FROM ts_edges WHERE {where}"
+        )
+        got[impl] = {r.k: r.s for r in q.collect()}
+        assert _python_nodes(q) == (0 if impl == "sql" else 1), impl
+    assert got["sql"] == {v: timestamp_to_string_py(_py_ts(v)) for v in _TS_EDGES}
+    assert got["python"] == got["sql"]
+    assert got["pandas"] == {k: v for k, v in got["sql"].items() if not (k or "").startswith("9999")}
+    assert got["sql"][None] is None
+    assert got["sql"]["2024-01-01 12:00:07"] == "2024-01-01 12:00:07.0"
+
+    register_timestamp_to_string(spark, "pandas")
+    with pytest.raises(Exception, match="out of bounds"):
+        spark.sql("SELECT TimestampToString(ts) FROM ts_edges").collect()
+    register_timestamp_to_string(spark)
+    with pytest.raises(ValueError, match="impl"):
+        register_timestamp_to_string(spark, "vectorized")
+
+
+def test_timestamp_to_string_last_registration_wins(spark):
+    """Registering TimestampToString replaces whatever implementation the
+    session had, in either direction (Spark refuses to CREATE OR REPLACE a
+    Python UDF with a SQL function, so the SQL path drops it first)."""
+    from amazon_kinesis_data_analytics_flinktableapi_spark.functions.scalar import (
+        register_timestamp_to_string,
+    )
+
+    def nodes():
+        q = spark.sql("SELECT TimestampToString(TIMESTAMP '2024-01-01 00:00:01.5') AS s")
+        assert q.first().s == "2024-01-01 00:00:01.5"
+        return _python_nodes(q)
+
+    for first, second in (("sql", "pandas"), ("pandas", "sql")):
+        register_timestamp_to_string(spark, first)
+        assert nodes() == (first != "sql")
+        register_timestamp_to_string(spark, second)
+        assert nodes() == (second != "sql"), (first, second)
+    register_timestamp_to_string(spark)
+
+
+def _rule_runner(tmp_path, mode: str) -> dict:
     import json
     import os
     import subprocess
     import sys
 
     proc = subprocess.run(
-        [sys.executable, "-m", "tests.partition_rule_runner", str(tmp_path), mode],
+        [sys.executable, "-m", "tests.session_rule_runner", str(tmp_path), mode],
         capture_output=True,
         text=True,
         timeout=420,
@@ -184,14 +275,24 @@ def test_shuffle_partitions_follow_task_slots(tmp_path):
     """``build_spark`` sizes shuffle partitions to the session's task slots:
     ``local[3]`` gives 3, so the reference interval join (4 state stores
     per partition) opens 12 stores per micro-batch, and an explicit
-    ``shuffle_partitions`` or ``extra_conf`` value still wins.  Runs in a SUBPROCESS
-    (tests/partition_rule_runner.py): the rule reads the SparkContext's
-    parallelism, fixed when a process builds its first session."""
-    result = _partition_runner(tmp_path, "engine")
+    ``shuffle_partitions`` or ``extra_conf`` value still wins.  The same
+    local session gets the checkpoint rule (the FileSystem-API manager),
+    and a manager passed through ``extra_conf`` wins there too.  Runs in a
+    SUBPROCESS (tests/session_rule_runner.py): the rules read the
+    SparkContext's master and parallelism, fixed when a process builds its
+    first session."""
+    from amazon_kinesis_data_analytics_flinktableapi_spark.engine import (
+        FILESYSTEM_CHECKPOINT_MANAGER,
+    )
+    from tests.session_rule_runner import DEFAULT_MANAGER
+
+    result = _rule_runner(tmp_path, "engine")
     assert result["default"] == "3", result
     assert result["reference"] == {"num_shuffle_partitions": 3, "num_state_store_instances": 12}
     assert result["explicit"] == "5", result
     assert result["extra_conf"] == "7", result
+    assert result["manager"] == FILESYSTEM_CHECKPOINT_MANAGER, result
+    assert result["extra_conf_manager"] == DEFAULT_MANAGER, result
 
 
 def test_driver_session_gets_partition_rule(tmp_path):
@@ -200,9 +301,36 @@ def test_driver_session_gets_partition_rule(tmp_path):
     replayed ``streaming_interval_join`` runs on ``local[2]``'s 2 slots,
     so every micro-batch opens 2 x 4 state stores, not 800.  A count the
     driver set itself is kept."""
-    result = _partition_runner(tmp_path, "driver")
+    result = _rule_runner(tmp_path, "driver")
     assert result["bare"] == "200", result
     assert result["configured"] == "2", result
     assert result["rows"] > 0, result
     assert result["state_store_instances"] == [8], result
     assert result["driver_set"] == "6", result
+
+
+def test_checkpoint_rule_keeps_restart_and_checksums(tmp_path):
+    """The checkpoint rule changes how checkpoint files are written, not
+    what is checked.  On a bare driver session (no manager set, so
+    Spark's default ``FileContext`` manager) the reference query over two
+    ``kinesis_sim`` streams checkpoints one micro-batch and stops;
+    ``__spark_entry__._configure`` then sets the ``FileSystem`` manager.
+    Restarted from that checkpoint under the new manager, the sink holds
+    every row of the batch twin below the final watermark exactly once.
+    Restarted from a copy whose latest state delta has one flipped byte,
+    the query fails on the file's checksum."""
+    from amazon_kinesis_data_analytics_flinktableapi_spark.engine import (
+        FILESYSTEM_CHECKPOINT_MANAGER,
+    )
+    from tests.session_rule_runner import DEFAULT_MANAGER
+
+    result = _rule_runner(tmp_path, "checkpoint")
+    assert result["bare_manager"] is None, result
+    assert result["first_run_manager"] == DEFAULT_MANAGER, result
+    assert 0 < result["first_run_rows"] < result["total_rows"], "want a mid-stream stop"
+    assert result["configured_manager"] == FILESYSTEM_CHECKPOINT_MANAGER, result
+    assert result["restart_manager"] == FILESYSTEM_CHECKPOINT_MANAGER, result
+    assert result["matched_and_null_rows"] == [True, True], result
+    assert result["expected_rows"] > 0 and result["exactly_once"], result
+    error = result["corrupt_restart_error"] or ""
+    assert "ChecksumException" in error and result["corrupted"] in error, result

@@ -403,6 +403,49 @@ def test_serialize_error_policy_counts_empties(tmp_path):
     assert sum(1 for rec in lines if rec == {}) == 1
 
 
+def test_reference_micro_batches_run_no_python_udf(spark, tmp_path):
+    """The reference SQL's TimestampToString is a SQL-bodied function that
+    Spark inlines: a micro-batch of the reference query over two
+    ``kinesis_sim`` streams evaluates no Python UDF."""
+    from amazon_kinesis_data_analytics_flinktableapi_spark.schemas import (
+        EXCHANGE_RATE_SCHEMA,
+        ORDER_SCHEMA,
+    )
+    from amazon_kinesis_data_analytics_flinktableapi_spark.sources.streaming import parse_json_stream
+    from amazon_kinesis_data_analytics_flinktableapi_spark.streaming.pipeline import (
+        build_reference_query,
+    )
+
+    register(spark)
+
+    def src(opts, schema):
+        raw = spark.readStream.format("kinesis_sim").options(**opts).load()
+        return parse_json_stream(raw, schema, value_col="data")
+
+    orders = src({"shards": 1, "records_per_shard": 40, "batch_records": 20,
+                  "template": "orders", "interval_ms": 40}, ORDER_SCHEMA)
+    rates = src({"shards": 1, "records_per_shard": 4, "batch_records": 2,
+                 "template": "rates", "interval_ms": 400}, EXCHANGE_RATE_SCHEMA)
+    q = (
+        build_reference_query(spark, orders, rates)
+        .writeStream.format("noop")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(processingTime="100 milliseconds")
+        .start()
+    )
+    deadline = time.time() + 180
+    try:
+        while (q.lastProgress or {}).get("batchId", -1) < 1:
+            assert q.exception() is None, q.exception()
+            assert time.time() < deadline, "want two micro-batches"
+            time.sleep(0.2)
+        plan = q._jsq.streamingQuery().lastExecution().executedPlan().toString()
+    finally:
+        q.stop()
+    assert "date_format" in plan, plan  # the inlined function body
+    assert "EvalPython" not in plan, plan  # also matches ArrowEvalPython
+
+
 def test_stream_restart_from_checkpoint_no_gaps_no_dupes(spark, tmp_path):
     """Exactly-once recovery contract, source AND sink together: stop a
     draining kinesis_sim→kinesis_sim query mid-stream, restart from the

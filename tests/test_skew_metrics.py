@@ -131,6 +131,32 @@ def test_listener_counts_watermark_drops_and_state_stores(spark, tmp_path):
         spark.streams.removeListener(listener)
 
 
+def test_listener_reports_batch_phases(spark, tmp_path):
+    """Each batch carries its ``durationMs`` phases: trigger, planning,
+    ``addBatch`` and the offset log write, the three nested in the first."""
+    listener = metrics.attach(spark)
+    try:
+        q = _late_row_aggregation(spark, tmp_path).writeStream.format("noop").option(
+            "checkpointLocation", str(tmp_path / "ckpt")
+        ).trigger(availableNow=True).start()
+        assert q.awaitTermination(120)
+        progress = {p["batchId"]: p["durationMs"] for p in q.recentProgress}
+        deadline = time.time() + 30  # listener events are async
+        while len(listener.collector.batches) < len(progress) and time.time() < deadline:
+            time.sleep(0.2)
+        batches = listener.collector.batches
+        assert len(batches) == len(progress) >= 3
+        for b in batches:
+            d = progress[b.batch_id]
+            assert (b.trigger_ms, b.query_planning_ms, b.add_batch_ms, b.wal_commit_ms) == (
+                d["triggerExecution"], d["queryPlanning"], d["addBatch"], d["walCommit"]
+            )
+            assert b.add_batch_ms > 0
+            assert b.trigger_ms >= b.query_planning_ms + b.add_batch_ms + b.wal_commit_ms
+    finally:
+        spark.streams.removeListener(listener)
+
+
 def _late_row_aggregation(spark, tmp_path):
     """A watermarked hourly count over three one-file micro-batches whose
     last row (10:30) arrives after the watermark has passed 12:00."""

@@ -342,9 +342,10 @@ def test_text_functions_null_and_case_semantics(spark):
     assert rows[1].sw and rows[1].sw > 0
     assert rows[2].n1 == 0               # [] for NULL, same as the n>=2 path
     assert rows[3].fp is not None        # genuinely-empty doc keeps its own key
-    register_timestamp_to_string(spark)
+    register_timestamp_to_string(spark, impl="pandas")
     got = spark.sql("SELECT TimestampToString(CAST(NULL AS timestamp)) AS x").collect()
     assert got[0].x is None
+    register_timestamp_to_string(spark)
 
 
 def test_cosine_zero_norm_is_null_not_job_abort(spark):
