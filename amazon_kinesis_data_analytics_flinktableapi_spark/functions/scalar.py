@@ -13,11 +13,11 @@ runs JVM-side inside whole-stage codegen:
    the reference's name so user SQL written against the reference
    (``TimestampToString(o.eventtime)``) runs unchanged.  By default a
    SQL-bodied temporary function over the same expression, which Spark
-   inlines into the calling plan; ``impl="pandas"`` / ``impl="python"``
-   register the Python UDF paths instead.
+   inlines into the calling plan; ``impl="pandas"`` registers the Python
+   UDF path instead.
 3. ``timestamp_to_string_pandas`` — Arrow-vectorized pandas_udf body, kept as
    the template for UDFs whose logic genuinely can't be expressed with
-   builtins; ``timestamp_to_string_py`` is its row-at-a-time twin.
+   builtins; ``timestamp_to_string_py`` is its row-at-a-time reference.
 
 ``java.sql.Timestamp.toString()`` format: ``yyyy-MM-dd HH:mm:ss.f…`` with
 1-9 fractional digits, trailing zeros stripped but always ≥1 digit
@@ -91,9 +91,9 @@ def register_timestamp_to_string(spark: SparkSession, impl: str = "sql") -> None
     ``impl``: ``"sql"`` (default) registers a SQL-bodied temporary function
     over :data:`TIMESTAMP_TO_STRING_SQL`; Spark inlines its body into the
     caller's plan, so no row leaves the JVM.  ``"pandas"`` registers the
-    Arrow-vectorized UDF and ``"python"`` the row-at-a-time one; each puts
-    a Python evaluation node (and its worker round trip) into every plan
-    that calls it.  The latest registration replaces the previous one.
+    Arrow-vectorized UDF, which puts a Python evaluation node (and its
+    worker round trip) into every plan that calls it.  The latest
+    registration replaces the previous one.
 
     The pandas path fails on timestamps after 2262-04-11: PySpark hands a
     pandas UDF its timestamps as ``datetime64[ns]``, which ends there."""
@@ -108,10 +108,8 @@ def register_timestamp_to_string(spark: SparkSession, impl: str = "sql") -> None
     elif impl == "pandas":
         fn = F.pandas_udf(timestamp_to_string_pandas, StringType())
         spark.udf.register("TimestampToString", fn)
-    elif impl == "python":
-        spark.udf.register("TimestampToString", timestamp_to_string_py, StringType())
     else:
-        raise ValueError(f"impl must be 'sql', 'pandas' or 'python', not {impl!r}")
+        raise ValueError(f"impl must be 'sql' or 'pandas', not {impl!r}")
 
 
 #: DuckDB-side twin of :func:`finite_or_null` for oracle SQL (DuckDB has
