@@ -13,8 +13,9 @@ runs JVM-side inside whole-stage codegen:
    the reference's name so user SQL written against the reference
    (``TimestampToString(o.eventtime)``) runs unchanged.  By default a
    SQL-bodied temporary function over the same expression, which Spark
-   inlines into the calling plan; ``impl="pandas"`` registers the Python
-   UDF path instead.
+   inlines into the calling plan; ``impl="pandas"`` calls the Python
+   UDF path instead, over ``unix_micros(ts)`` so that every Spark
+   timestamp (years 1-9999) reaches it.
 3. ``timestamp_to_string_pandas`` — Arrow-vectorized pandas_udf body, kept as
    the template for UDFs whose logic genuinely can't be expressed with
    builtins; ``timestamp_to_string_py`` is its row-at-a-time reference.
@@ -52,7 +53,7 @@ def timestamp_to_string_py(ts) -> str | None:
     """Row-at-a-time Python equivalent (slow path; used for udf parity tests)."""
     if ts is None:
         return None
-    s = ts.strftime("%Y-%m-%d %H:%M:%S")
+    s = f"{ts.year:04d}-" + ts.strftime("%m-%d %H:%M:%S")  # %Y leaves years < 1000 unpadded
     frac = f"{ts.microsecond:06d}".rstrip("0") or "0"
     return f"{s}.{frac}"
 
@@ -73,8 +74,10 @@ def timestamp_to_string_pandas(s: pd.Series) -> pd.Series:
     malformed rows.  NaT inputs become None in an object-dtype result
     (an all-NaT frame would otherwise keep a non-string dtype, which
     Arrow cannot convert to string), so SQL sees NULL, matching the
-    row-at-a-time path."""
-    base = s.dt.strftime("%Y-%m-%d %H:%M:%S")
+    row-at-a-time path.  Any ``datetime64`` resolution works; the
+    registered UDF passes ``datetime64[us]``, which spans Spark's range."""
+    # %Y leaves years < 1000 unpadded; Java pads to four digits
+    base = s.dt.year.astype("Int64").astype(str).str.zfill(4) + s.dt.strftime("-%m-%d %H:%M:%S")
     # java.sql.Timestamp.toString() fraction: 6-digit micros, trailing
     # zeros stripped, minimum one digit ('.0' for whole seconds)
     frac = s.dt.microsecond.astype("Int64").astype(str).str.zfill(6).str.rstrip("0")
@@ -84,32 +87,47 @@ def timestamp_to_string_pandas(s: pd.Series) -> pd.Series:
     return out
 
 
+#: name of the pandas UDF behind ``register_timestamp_to_string(impl="pandas")``
+_MICROS_UDF = "_TimestampToStringMicros"
+
+#: ``datetime64``'s NaT as int64: stands for SQL NULL on the UDF's input.
+#: A BIGINT column with a NULL reaches pandas as float64, whose 53-bit
+#: mantissa rounds microseconds after 2255 (9999-12-31 23:59:59.999999
+#: would print as year 10000), so NULL never reaches the UDF.
+_NAT_MICROS = -(2**63)
+
+
+def _timestamp_to_string_micros(micros: pd.Series) -> pd.Series:
+    """pandas_udf body over ``unix_micros(ts)``: PySpark hands a pandas UDF
+    a TIMESTAMP as ``datetime64[ns]``, which ends at 2262-04-11, so the
+    micros come in as int64 and are read as ``datetime64[us]``."""
+    return timestamp_to_string_pandas(pd.Series(micros.to_numpy("int64").view("datetime64[us]")))
+
+
 def register_timestamp_to_string(spark: SparkSession, impl: str = "sql") -> None:
     """Make ``TimestampToString`` callable from SQL, as the reference does
     with ``tableEnv.registerFunction`` (StreamingJob.java:88).
 
-    ``impl``: ``"sql"`` (default) registers a SQL-bodied temporary function
-    over :data:`TIMESTAMP_TO_STRING_SQL`; Spark inlines its body into the
-    caller's plan, so no row leaves the JVM.  ``"pandas"`` registers the
-    Arrow-vectorized UDF, which puts a Python evaluation node (and its
-    worker round trip) into every plan that calls it.  The latest
-    registration replaces the previous one.
-
-    The pandas path fails on timestamps after 2262-04-11: PySpark hands a
-    pandas UDF its timestamps as ``datetime64[ns]``, which ends there."""
+    Either way ``TimestampToString(ts TIMESTAMP)`` is a SQL-bodied
+    temporary function.  ``impl``: ``"sql"`` (default) makes its body
+    :data:`TIMESTAMP_TO_STRING_SQL`, which Spark inlines into the caller's
+    plan, so no row leaves the JVM.  ``"pandas"`` makes it call the
+    Arrow-vectorized UDF on ``unix_micros(ts)``, which puts a Python
+    evaluation node (and its worker round trip) into every plan that calls
+    it.  The latest registration replaces the previous one."""
     if impl == "sql":
         body = TIMESTAMP_TO_STRING_SQL.format(ts="ts")
-        # CREATE OR REPLACE refuses to replace a Python UDF of the same name
-        spark.sql("DROP TEMPORARY FUNCTION IF EXISTS TimestampToString")
-        spark.sql(
-            "CREATE OR REPLACE TEMPORARY FUNCTION TimestampToString(ts TIMESTAMP) "
-            f"RETURNS STRING RETURN {body}"
-        )
     elif impl == "pandas":
-        fn = F.pandas_udf(timestamp_to_string_pandas, StringType())
-        spark.udf.register("TimestampToString", fn)
+        spark.udf.register(_MICROS_UDF, F.pandas_udf(_timestamp_to_string_micros, StringType()))
+        body = f"{_MICROS_UDF}(coalesce(unix_micros(ts), {_NAT_MICROS}L))"
     else:
         raise ValueError(f"impl must be 'sql' or 'pandas', not {impl!r}")
+    # CREATE OR REPLACE refuses to replace a Python UDF of the same name
+    spark.sql("DROP TEMPORARY FUNCTION IF EXISTS TimestampToString")
+    spark.sql(
+        "CREATE OR REPLACE TEMPORARY FUNCTION TimestampToString(ts TIMESTAMP) "
+        f"RETURNS STRING RETURN {body}"
+    )
 
 
 #: DuckDB-side twin of :func:`finite_or_null` for oracle SQL (DuckDB has

@@ -21,11 +21,15 @@ class BatchMetrics:
     watermark: str | None
     #: the state layer, each summed over ``stateOperators``: stores opened
     #: and committed this batch (one per shuffle partition per store kind
-    #: of each operator), time spent committing them, and input rows
-    #: discarded as later than the watermark
+    #: of each operator), time spent committing them, input rows discarded
+    #: as later than the watermark, memory the stores hold, and time spent
+    #: writing rows into state and evicting rows from it
     state_store_instances: int
     state_commit_ms: int
     rows_dropped_by_watermark: int
+    state_memory_bytes: int
+    state_update_ms: int
+    state_removal_ms: int
     #: the micro-batch's phases, from ``durationMs``: the whole trigger,
     #: planning, the sink write (``addBatch``, which runs the batch's
     #: jobs) and the offset log write (``walCommit``); 0 when not reported
@@ -76,6 +80,9 @@ class EngineQueryListener(StreamingQueryListener):
             state_store_instances=sum(op.numStateStoreInstances for op in ops),
             state_commit_ms=sum(op.commitTimeMs for op in ops),
             rows_dropped_by_watermark=sum(op.numRowsDroppedByWatermark for op in ops),
+            state_memory_bytes=sum(op.memoryUsedBytes for op in ops),
+            state_update_ms=sum(op.allUpdatesTimeMs for op in ops),
+            state_removal_ms=sum(op.allRemovalsTimeMs for op in ops),
             trigger_ms=phase("triggerExecution", 0),
             query_planning_ms=phase("queryPlanning", 0),
             add_batch_ms=phase("addBatch", 0),

@@ -165,14 +165,17 @@ def test_vectorized_timestamp_to_string_all_nat_stays_object():
 
 
 #: TimestampToString edge values: NULL, whole seconds ('.0'), '.5',
-#: full micros, pre-1970, the last pandas-representable microsecond, and
-#: Spark's largest timestamp
+#: full micros, pre-1970, the Julian-Gregorian cutover gap, a 3-digit
+#: year, the last ``datetime64[ns]`` microsecond, and Spark's largest
+#: timestamp
 _TS_EDGES = [
     None,
     "2024-01-01 12:00:07",
     "2024-01-01 12:00:07.5",
     "2024-01-01 12:00:07.123456",
     "1969-12-31 23:59:59.25",
+    "1582-10-10 01:02:03.5",
+    "0999-03-04 05:06:07.1",
     "2262-04-11 23:47:16.854775",
     "9999-12-31 23:59:59.999999",
 ]
@@ -199,34 +202,28 @@ def _python_nodes(df) -> int:
 def test_timestamp_to_string_impls_agree(spark):
     """The ``sql`` and ``pandas`` registrations of TimestampToString
     print strings equal to ``timestamp_to_string_py`` on every edge
-    value; only the SQL-bodied one runs without a Python node.  PySpark
-    hands a pandas UDF its timestamps as ``datetime64[ns]``, which ends
-    in 2262, so the pandas path fails on year 9999 while the SQL one
-    does not."""
+    value, NULL and year 9999 included (the pandas UDF reads
+    ``unix_micros(ts)``, not ``datetime64[ns]``, which ends in 2262); only
+    the SQL-bodied one runs without a Python node."""
     from amazon_kinesis_data_analytics_flinktableapi_spark.functions.scalar import (
         register_timestamp_to_string,
         timestamp_to_string_py,
     )
 
-    _ts_edge_frame(spark).createOrReplaceTempView("ts_edges")
-    in_range = "ts IS NULL OR ts < TIMESTAMP '9999-01-01'"
+    # one partition: NULL and year 9999 share the UDF's Arrow batch
+    _ts_edge_frame(spark).coalesce(1).createOrReplaceTempView("ts_edges")
     got = {}
     for impl in ("sql", "pandas"):
         register_timestamp_to_string(spark, impl)
-        where = in_range if impl == "pandas" else "true"
-        q = spark.sql(
-            f"SELECT CAST(ts AS STRING) AS k, TimestampToString(ts) AS s FROM ts_edges WHERE {where}"
-        )
+        q = spark.sql("SELECT CAST(ts AS STRING) AS k, TimestampToString(ts) AS s FROM ts_edges")
         got[impl] = {r.k: r.s for r in q.collect()}
         assert _python_nodes(q) == (0 if impl == "sql" else 1), impl
     assert got["sql"] == {v: timestamp_to_string_py(_py_ts(v)) for v in _TS_EDGES}
-    assert got["pandas"] == {k: v for k, v in got["sql"].items() if not (k or "").startswith("9999")}
+    assert got["pandas"] == got["sql"]
+    assert got["pandas"]["9999-12-31 23:59:59.999999"] == "9999-12-31 23:59:59.999999"
     assert got["sql"][None] is None
     assert got["sql"]["2024-01-01 12:00:07"] == "2024-01-01 12:00:07.0"
 
-    register_timestamp_to_string(spark, "pandas")
-    with pytest.raises(Exception, match="out of bounds"):
-        spark.sql("SELECT TimestampToString(ts) FROM ts_edges").collect()
     register_timestamp_to_string(spark)
     with pytest.raises(ValueError, match="impl must be 'sql' or 'pandas'"):
         register_timestamp_to_string(spark, "python")
@@ -333,3 +330,126 @@ def test_checkpoint_rule_keeps_restart_and_checksums(tmp_path):
     assert result["expected_rows"] > 0 and result["exactly_once"], result
     error = result["corrupt_restart_error"] or ""
     assert "ChecksumException" in error and result["corrupted"] in error, result
+
+
+#: Fresh-interpreter prelude for the zip-cache rule tests: counts every
+#: zip directory read, puts a one-module archive first on ``sys.path`` and
+#: imports from it, so the archive has a ``zipimporter`` in
+#: ``sys.path_importer_cache``.  ``rereads()`` runs one
+#: ``importlib.invalidate_caches()`` and returns how many archive
+#: directories it read.
+_ZIP_PRELUDE = """
+import importlib, json, os, sys, zipfile, zipimport
+
+reads = []
+_read_directory = zipimport._read_directory
+zipimport._read_directory = lambda archive: reads.append(archive) or _read_directory(archive)
+
+def write_archive(modules):
+    with zipfile.ZipFile(ARCHIVE, "w") as z:
+        for name, body in modules.items():
+            z.writestr(name + ".py", body)
+
+def rereads():
+    reads.clear()
+    importlib.invalidate_caches()
+    return len(reads)
+
+write_archive({"zmod_a": "X = 1\\n"})
+sys.path.insert(0, ARCHIVE)
+import zmod_a
+"""
+
+
+def _zip_rule_probe(tmp_path, body: str) -> dict:
+    """Run ``_ZIP_PRELUDE`` + ``body`` in a fresh interpreter (the rule is
+    installed once per process, at the package's first import) and return
+    the JSON line it prints last."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    code = f"ARCHIVE = {str(tmp_path / 'mods.zip')!r}\n" + _ZIP_PRELUDE + body
+    proc = subprocess.run(
+        [sys.executable, "-c", code],
+        capture_output=True,
+        text=True,
+        timeout=180,
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    )
+    assert proc.returncode == 0, f"probe failed:\n{proc.stdout}\n{proc.stderr}"
+    return json.loads(proc.stdout.strip().splitlines()[-1])
+
+
+def test_zip_cache_rule_skips_unchanged_archives(tmp_path):
+    """Without the rule every ``importlib.invalidate_caches()`` re-reads
+    each zip archive's directory.  Once the engine package is imported,
+    the first call per importer still re-reads it, and a later call reads
+    nothing while the archive is unchanged."""
+    result = _zip_rule_probe(tmp_path, """
+before = [rereads(), rereads()]
+import amazon_kinesis_data_analytics_flinktableapi_spark as pkg
+after = [rereads(), rereads(), rereads()]
+print(json.dumps({"before": before, "after": after,
+                  "method": zipimport.zipimporter.invalidate_caches.__module__}))
+""")
+    assert result["before"] == [1, 1], result
+    assert result["after"] == [1, 0, 0], result
+    assert result["method"] == "amazon_kinesis_data_analytics_flinktableapi_spark", result
+
+
+def test_zip_cache_rule_rereads_a_rewritten_archive(tmp_path):
+    """An archive rewritten after its importer last read it (here with a
+    second module, so its size changes) is re-read by the next
+    ``invalidate_caches()``: the new module imports, and the call after
+    that reads nothing again."""
+    result = _zip_rule_probe(tmp_path, """
+import amazon_kinesis_data_analytics_flinktableapi_spark
+settled = [rereads(), rereads()]
+write_archive({"zmod_a": "X = 1\\n", "zmod_b": "Y = 2\\n"})
+rewritten = rereads()
+import zmod_b
+print(json.dumps({"settled": settled, "rewritten": rewritten, "y": zmod_b.Y, "then": rereads()}))
+""")
+    assert result["settled"] == [1, 0], result
+    assert result["rewritten"] == 1 and result["y"] == 2, result
+    assert result["then"] == 0, result
+
+
+def test_zip_cache_rule_leaves_cpython_313_alone(tmp_path):
+    """CPython 3.13 invalidates zip caches lazily, so there the package
+    leaves ``zipimporter.invalidate_caches`` as it is: every call still
+    re-reads (the version is faked for the package's import only)."""
+    result = _zip_rule_probe(tmp_path, """
+import collections
+real = sys.version_info
+fields = "major minor micro releaselevel serial"
+sys.version_info = collections.namedtuple("version_info", fields)(3, 13, 0, "final", 0)
+try:
+    import amazon_kinesis_data_analytics_flinktableapi_spark as pkg
+finally:
+    sys.version_info = real
+print(json.dumps({"rule": hasattr(pkg, "_stat_checked_zip_caches"),
+                  "method": zipimport.zipimporter.invalidate_caches.__module__,
+                  "after": [rereads(), rereads()]}))
+""")
+    assert result["rule"], result
+    assert result["method"] == "zipimport", result
+    assert result["after"] == [1, 1], result
+
+
+def test_python_workers_get_the_zip_cache_rule(spark):
+    """A Spark Python worker that imports the engine package (as it does
+    when it unpickles engine code) runs with the wrapped method."""
+    from pyspark.sql import functions as F
+
+    def method_module(_):
+        import zipimport
+
+        import amazon_kinesis_data_analytics_flinktableapi_spark  # noqa: F401
+
+        return zipimport.zipimporter.invalidate_caches.__module__
+
+    rows = spark.range(4).select(F.udf(method_module, "string")("id").alias("m")).collect()
+    assert {r.m for r in rows} == {"amazon_kinesis_data_analytics_flinktableapi_spark"}

@@ -133,26 +133,33 @@ def test_listener_counts_watermark_drops_and_state_stores(spark, tmp_path):
 
 def test_listener_reports_batch_phases(spark, tmp_path):
     """Each batch carries its ``durationMs`` phases: trigger, planning,
-    ``addBatch`` and the offset log write, the three nested in the first."""
+    ``addBatch`` and the offset log write, the three nested in the first;
+    and its state memory and update and removal times, each summed over
+    the state operators."""
     listener = metrics.attach(spark)
     try:
         q = _late_row_aggregation(spark, tmp_path).writeStream.format("noop").option(
             "checkpointLocation", str(tmp_path / "ckpt")
         ).trigger(availableNow=True).start()
         assert q.awaitTermination(120)
-        progress = {p["batchId"]: p["durationMs"] for p in q.recentProgress}
+        progress = {p["batchId"]: p for p in q.recentProgress}
         deadline = time.time() + 30  # listener events are async
         while len(listener.collector.batches) < len(progress) and time.time() < deadline:
             time.sleep(0.2)
         batches = listener.collector.batches
         assert len(batches) == len(progress) >= 3
         for b in batches:
-            d = progress[b.batch_id]
+            d, ops = progress[b.batch_id]["durationMs"], progress[b.batch_id]["stateOperators"]
             assert (b.trigger_ms, b.query_planning_ms, b.add_batch_ms, b.wal_commit_ms) == (
                 d["triggerExecution"], d["queryPlanning"], d["addBatch"], d["walCommit"]
             )
             assert b.add_batch_ms > 0
             assert b.trigger_ms >= b.query_planning_ms + b.add_batch_ms + b.wal_commit_ms
+            assert len(ops) == 1  # the hourly count's one state store operator
+            assert (b.state_memory_bytes, b.state_update_ms, b.state_removal_ms) == (
+                ops[0]["memoryUsedBytes"], ops[0]["allUpdatesTimeMs"], ops[0]["allRemovalsTimeMs"]
+            )
+            assert b.state_memory_bytes > 0
     finally:
         spark.streams.removeListener(listener)
 

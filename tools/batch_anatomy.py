@@ -3,6 +3,7 @@
 
     python3 tools/batch_anatomy.py [--seconds 20] [--seed 3] [--partitions N]
                                    [--conf key=value ...] [--drain ORDERS]
+                                   [--sample-driver]
 
 Runs the benchmark's open-loop reference topology
 (``perfbench.stream.rate_topology``: orders 100/s, rates 1/s, default
@@ -27,6 +28,13 @@ orders checked against DuckDB and the wrong ones, and, with ``--drain``,
 orders/s through a pre-published backlog on the warm session.
 ``--partitions`` sets the shuffle partition count; ``--conf`` adds
 session conf (e.g. the checkpoint file manager class).
+
+``--sample-driver`` also ``jstack``s the tool's own driver JVM every
+``SAMPLE_PERIOD_S`` while the stream runs and adds ``driver_samples`` to
+the summary: how many samples of the stream execution thread fell in the
+steady batches, and the share of them in each of ``STACK_SHARES`` (first
+match wins) or ``other``.  Each ``jstack`` pauses the JVM briefly, so
+the latencies of a sampled run read a little high.
 """
 
 from __future__ import annotations
@@ -36,8 +44,10 @@ import glob
 import json
 import os
 import shutil
+import subprocess
 import sys
 import tempfile
+import threading
 import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -90,6 +100,73 @@ def read_event_log(evlog: str) -> tuple[dict, dict]:
     return jobs, stages
 
 
+#: seconds between two ``jstack`` samples of the driver (one takes ~0.2 s)
+SAMPLE_PERIOD_S = 0.25
+#: stream-thread sample classes and the frames that mark them, checked in
+#: this order: the Hadoop-conf broadcast a ``StreamingSymmetricHashJoinExec``
+#: makes in its constructor (on every plan copy, so also while planning),
+#: the Python sink's writer-factory and commit runners, Spark jobs, and
+#: the rest of planning
+STACK_SHARES = (
+    ("join_conf_broadcast", ("StreamingSymmetricHashJoinExec.<init>",)),
+    ("sink_writer_factory_runner", ("UserDefinedPythonDataSourceWriteRunner",)),
+    ("sink_commit_runner", ("PythonStreamingSinkCommitRunner",)),
+    ("jobs", ("DAGScheduler.runJob",)),
+    ("planning", ("IncrementalExecution", "QueryPlanner.plan", "RuleExecutor.execute",
+                  "EnsureRequirements")),
+)
+
+
+def stream_thread_stack(dump: str) -> str | None:
+    """The frames of the stream execution thread in a ``jstack`` dump."""
+    for block in dump.split("\n\n"):
+        if block.startswith('"stream execution thread for'):
+            return block
+    return None
+
+
+def classify(stack: str) -> str:
+    for name, marks in STACK_SHARES:
+        if any(m in stack for m in marks):
+            return name
+    return "other"
+
+
+class DriverSampler:
+    """Samples the stream execution thread of JVM ``pid`` with ``jstack``
+    on a background thread until ``stop()``; ``samples`` holds
+    ``(wall time, stack)`` pairs."""
+
+    def __init__(self, pid: int):
+        self.pid, self.samples = pid, []
+        self._stop = threading.Event()
+        self._thread = threading.Thread(target=self._run, daemon=True)
+        self._thread.start()
+
+    def _run(self) -> None:
+        while not self._stop.wait(SAMPLE_PERIOD_S):
+            t = time.time()
+            dump = subprocess.run(
+                ["jstack", str(self.pid)], capture_output=True, text=True, timeout=60
+            ).stdout
+            stack = stream_thread_stack(dump)
+            if stack is not None:
+                self.samples.append((t, stack))
+
+    def stop(self) -> None:
+        self._stop.set()
+        self._thread.join(timeout=90)
+
+    def shares(self, start: float, end: float) -> dict:
+        """Sample count and per-class shares over ``[start, end]``."""
+        kinds = [classify(s) for t, s in self.samples if start <= t <= end]
+        names = [n for n, _ in STACK_SHARES] + ["other"]
+        return {
+            "samples": len(kinds),
+            "shares": {n: round(kinds.count(n) / max(len(kinds), 1), 3) for n in names},
+        }
+
+
 def anatomy(progress: list[dict], jobs: dict, stages: dict, first: int, last: int) -> list[dict]:
     """One record per micro-batch ``first`` .. ``last``."""
     out = []
@@ -125,6 +202,7 @@ def main(argv=None) -> int:
     ap.add_argument("--partitions", type=int, default=None)
     ap.add_argument("--conf", action="append", default=[], metavar="KEY=VALUE")
     ap.add_argument("--drain", type=int, default=0, metavar="ORDERS")
+    ap.add_argument("--sample-driver", action="store_true")
     args = ap.parse_args(argv)
 
     # Python workers import the engine package and perfbench.paced by name
@@ -151,9 +229,12 @@ def main(argv=None) -> int:
         shuffle_partitions=args.partitions,
         extra_conf=conf,
     )
+    sampler = None
     try:
         spark.sparkContext.setLogLevel("ERROR")
         paced.register(spark)
+        if args.sample_driver:
+            sampler = DriverSampler(spark.sparkContext._jvm.java.lang.ProcessHandle.current().pid())
         settings = {
             "shuffle_partitions": spark.conf.get("spark.sql.shuffle.partitions"),
             "checkpoint_manager": spark.conf.get(
@@ -190,6 +271,8 @@ def main(argv=None) -> int:
             attempted, failed = attempted + n, failed + bad
         progress = topo.progress
     finally:
+        if sampler is not None:
+            sampler.stop()
         spark.stop()
     jobs, stages = read_event_log(evlog)
     batches = anatomy(progress, jobs, stages, first, last)
@@ -204,6 +287,7 @@ def main(argv=None) -> int:
             per_kind[s["name"]] = per_kind.get(s["name"], 0) + s["task_ms"]
         for k, v in per_kind.items():
             stage_task_ms.setdefault(k, []).append(v)
+    driver = {"driver_samples": sampler.shares(commits[first - 1], commits[last])} if sampler else {}
     print(json.dumps({
         "summary": True,
         **settings,
@@ -217,6 +301,7 @@ def main(argv=None) -> int:
         "emit_latency_p50_s": round(median(latencies), 3),
         "emit_latency_p99_s": round(pct(latencies, 99), 3),
         "drain_rec_per_s": round(drain_rate, 1),
+        **driver,
         "attempted": attempted,
         "failed": failed,
     }))
