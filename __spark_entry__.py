@@ -19,13 +19,16 @@ SMOKE_SF_DIR = "/root/testdata/sf0.001"
 def _configure(spark: SparkSession) -> SparkSession:
     """Apply engine session conf to a driver-provided SparkSession,
     including the engine's partition and checkpoint rules (a value the
-    driver set explicitly is kept)."""
+    driver set explicitly is kept) and its conf-source rule (the driver's
+    Hadoop conf drops its per-property source records; every key, value
+    and final flag is kept)."""
     from amazon_kinesis_data_analytics_flinktableapi_spark.engine import (
+        clear_hadoop_conf_sources,
         size_shuffle_partitions,
         use_filesystem_checkpoints,
     )
 
-    size_shuffle_partitions(use_filesystem_checkpoints(spark))
+    size_shuffle_partitions(clear_hadoop_conf_sources(use_filesystem_checkpoints(spark)))
     for k, v in [
         ("spark.sql.session.timeZone", "UTC"),
         ("spark.sql.legacy.parquet.nanosAsLong", "true"),

@@ -31,12 +31,16 @@ class BatchMetrics:
     state_update_ms: int
     state_removal_ms: int
     #: the micro-batch's phases, from ``durationMs``: the whole trigger,
-    #: planning, the sink write (``addBatch``, which runs the batch's
-    #: jobs) and the offset log write (``walCommit``); 0 when not reported
+    #: the sources' offset reads (``latestOffset``), planning, the sink
+    #: write (``addBatch``, which runs the batch's jobs), the offset log
+    #: write (``walCommit``) and the commit log write with the sources'
+    #: commits (``commitOffsets``); 0 when not reported
     trigger_ms: int
+    latest_offset_ms: int
     query_planning_ms: int
     add_batch_ms: int
     wal_commit_ms: int
+    commit_offsets_ms: int
 
 
 @dataclass
@@ -84,9 +88,11 @@ class EngineQueryListener(StreamingQueryListener):
             state_update_ms=sum(op.allUpdatesTimeMs for op in ops),
             state_removal_ms=sum(op.allRemovalsTimeMs for op in ops),
             trigger_ms=phase("triggerExecution", 0),
+            latest_offset_ms=phase("latestOffset", 0),
             query_planning_ms=phase("queryPlanning", 0),
             add_batch_ms=phase("addBatch", 0),
             wal_commit_ms=phase("walCommit", 0),
+            commit_offsets_ms=phase("commitOffsets", 0),
         )
         # an idle query RE-REPORTS its last batch every
         # noDataProgressEventInterval; appending each re-report would count

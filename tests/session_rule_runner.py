@@ -1,14 +1,16 @@
 """Subprocess body for the session-rule tests (tests/test_engine.py).
 
 The engine's session rules (``size_shuffle_partitions``,
-``use_filesystem_checkpoints``) read the SparkContext's master and task
-slots, which exist only once a SparkContext starts, so each rule is
-observable only in a process whose FIRST session is built here.  Invoked
-via ``python -m tests.session_rule_runner <workdir> [engine|driver|checkpoint]``:
+``use_filesystem_checkpoints``, ``clear_hadoop_conf_sources``) read the
+SparkContext's master, task slots and Hadoop conf, which exist only once
+a SparkContext starts, so each rule is observable only in a process
+whose FIRST session is built here.  Invoked via
+``python -m tests.session_rule_runner <workdir> [engine|driver|checkpoint|conf_sources]``:
 ``engine`` builds the session with ``build_spark``, ``driver`` and
 ``checkpoint`` hand a bare ``SparkSession`` to ``__spark_entry__`` the way
-an external driver does.  Prints one JSON line with the evidence the host
-test asserts on, or exits nonzero with a traceback.
+an external driver does, and ``conf_sources`` does both in turn.  Prints
+one JSON line with the evidence the host test asserts on, or exits
+nonzero with a traceback.
 """
 
 from __future__ import annotations
@@ -28,8 +30,9 @@ DEFAULT_MANAGER = (
 MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
 
 
-def engine(workdir: str) -> dict:
-    from amazon_kinesis_data_analytics_flinktableapi_spark.engine import build_spark
+def _reference_run(spark, workdir: str):
+    """The reference query over two small ``kinesis_sim`` streams into a
+    ``noop`` sink, run to the end of its input (``availableNow``)."""
     from amazon_kinesis_data_analytics_flinktableapi_spark.schemas import (
         EXCHANGE_RATE_SCHEMA,
         ORDER_SCHEMA,
@@ -42,13 +45,7 @@ def engine(workdir: str) -> dict:
         build_reference_query,
     )
 
-    spark = build_spark(app_name="partition-rule", master="local[3]")
-    spark.sparkContext.setLogLevel("ERROR")
     register(spark)
-    out: dict = {
-        "default": spark.conf.get("spark.sql.shuffle.partitions"),
-        "manager": spark.conf.get(MANAGER_KEY, None),
-    }
 
     def src(opts):
         return spark.readStream.format("kinesis_sim").options(**opts).load()
@@ -71,6 +68,19 @@ def engine(workdir: str) -> dict:
     if not q.awaitTermination(240):
         q.stop()
         raise TimeoutError("reference query did not finish")
+    return q
+
+
+def engine(workdir: str) -> dict:
+    from amazon_kinesis_data_analytics_flinktableapi_spark.engine import build_spark
+
+    spark = build_spark(app_name="partition-rule", master="local[3]")
+    spark.sparkContext.setLogLevel("ERROR")
+    out: dict = {
+        "default": spark.conf.get("spark.sql.shuffle.partitions"),
+        "manager": spark.conf.get(MANAGER_KEY, None),
+    }
+    q = _reference_run(spark, workdir)
     last = q.lastProgress["stateOperators"][0]
     out["reference"] = {
         "num_shuffle_partitions": last["numShufflePartitions"],
@@ -283,7 +293,77 @@ def checkpoint(workdir: str) -> dict:
     return result
 
 
+def _hadoop_conf_state(spark) -> dict:
+    """The driver Hadoop conf's keys and values (a digest of the sorted
+    map), final parameters (the same), provenance (map size and keys with
+    a source) and the serialized size of a ``newHadoopConf`` copy."""
+    import hashlib
+
+    from amazon_kinesis_data_analytics_flinktableapi_spark.engine import hadoop_property_sources
+
+    jvm = spark._jvm
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    sources = hadoop_property_sources(jvm, conf)
+    copy = jvm.java.io.ByteArrayOutputStream()
+    spark._jsparkSession.sessionState().newHadoopConf().write(jvm.java.io.DataOutputStream(copy))
+    keys = [e.getKey() for e in conf.iterator()]
+
+    def digest(java_collection) -> str:
+        return hashlib.md5(java_collection.toString().encode()).hexdigest()
+
+    return {
+        "size": conf.size(),
+        "values": digest(jvm.java.util.TreeMap(conf.getValByRegex(".*"))),
+        "finals": digest(jvm.java.util.TreeSet(conf.getFinalParameters())),
+        "field": sources is not None,
+        "sources": None if sources is None else sources.size(),
+        "keys_with_sources": sum(conf.getPropertySources(k) is not None for k in keys),
+        "copy_bytes": copy.size(),
+    }
+
+
+def conf_sources(workdir: str) -> dict:
+    """The conf-source rule on both session paths.  A bare ``SparkSession``
+    handed to ``__spark_entry__._configure``: the driver Hadoop conf
+    before and after.  Then, after a stop, a ``build_spark`` session with
+    the same Hadoop settings: its conf once built, and again after a
+    reference micro-batch and a parquet write and read."""
+    from pyspark.sql import SparkSession
+
+    import __spark_entry__
+    from amazon_kinesis_data_analytics_flinktableapi_spark.engine import build_spark
+
+    warehouse = os.path.join(workdir, "warehouse")
+    spark = (
+        SparkSession.builder.appName("conf-source-rule-driver")
+        .master("local[2]")
+        .config("spark.ui.enabled", "false")
+        .config("spark.sql.warehouse.dir", warehouse)
+        .getOrCreate()
+    )
+    spark.sparkContext.setLogLevel("ERROR")
+    out: dict = {"bare": _hadoop_conf_state(spark)}
+    __spark_entry__._configure(spark)
+    out["configured"] = _hadoop_conf_state(spark)
+    spark.stop()
+
+    spark = build_spark(
+        app_name="conf-source-rule", master="local[2]",
+        extra_conf={"spark.sql.warehouse.dir": warehouse},
+    )
+    spark.sparkContext.setLogLevel("ERROR")
+    out["engine"] = _hadoop_conf_state(spark)
+    out["batches"] = len(_reference_run(spark, workdir).recentProgress)
+    pq = os.path.join(workdir, "pq")
+    spark.range(100).write.parquet(pq)
+    out["parquet_rows"] = spark.read.parquet(pq).count()
+    out["after_run"] = _hadoop_conf_state(spark)
+    spark.stop()
+    return out
+
+
 if __name__ == "__main__":
     mode = sys.argv[2] if len(sys.argv) > 2 else "engine"
-    modes = {"engine": engine, "driver": driver, "checkpoint": checkpoint}
+    modes = {"engine": engine, "driver": driver, "checkpoint": checkpoint,
+             "conf_sources": conf_sources}
     print(json.dumps(modes[mode](sys.argv[1])))

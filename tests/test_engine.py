@@ -332,6 +332,34 @@ def test_checkpoint_rule_keeps_restart_and_checksums(tmp_path):
     assert "ChecksumException" in error and result["corrupted"] in error, result
 
 
+def test_conf_source_rule_drops_provenance_only(tmp_path):
+    """The conf-source rule empties the driver Hadoop conf's per-property
+    source records and nothing else.  A bare session records a source
+    for every one of its ~1,100 properties.  After
+    ``__spark_entry__._configure``, and in a ``build_spark`` session with
+    the same Hadoop settings, the conf holds the same keys, values and
+    final parameters, no key has a source, and a ``newHadoopConf`` copy
+    (what the stream-stream join and file scans broadcast) serializes at
+    least 30% smaller.  The sources stay empty after a reference
+    micro-batch and a parquet write and read, so no conf reload undoes
+    the rule.  The bundled Hadoop must keep the map the rule empties: an
+    upgrade that drops it fails here rather than losing the gain
+    silently."""
+    result = _rule_runner(tmp_path, "conf_sources")
+    bare = result["bare"]
+    assert bare["field"], result
+    assert bare["keys_with_sources"] == bare["sources"] == bare["size"] > 1000, result
+    for name in ("configured", "engine", "after_run"):
+        state = result[name]
+        assert state["field"], (name, result)
+        assert [state[k] for k in ("size", "values", "finals")] == [
+            bare[k] for k in ("size", "values", "finals")
+        ], (name, result)
+        assert state["sources"] == state["keys_with_sources"] == 0, (name, result)
+        assert state["copy_bytes"] <= 0.7 * bare["copy_bytes"], (name, result)
+    assert result["batches"] >= 1 and result["parquet_rows"] == 100, result
+
+
 #: Fresh-interpreter prelude for the zip-cache rule tests: counts every
 #: zip directory read, puts a one-module archive first on ``sys.path`` and
 #: imports from it, so the archive has a ``zipimporter`` in

@@ -132,10 +132,10 @@ def test_listener_counts_watermark_drops_and_state_stores(spark, tmp_path):
 
 
 def test_listener_reports_batch_phases(spark, tmp_path):
-    """Each batch carries its ``durationMs`` phases: trigger, planning,
-    ``addBatch`` and the offset log write, the three nested in the first;
-    and its state memory and update and removal times, each summed over
-    the state operators."""
+    """Each batch carries its ``durationMs`` phases: trigger, the offset
+    reads, planning, ``addBatch``, the offset log write and the commit
+    log write, the last five nested in the first; and its state memory
+    and update and removal times, each summed over the state operators."""
     listener = metrics.attach(spark)
     try:
         q = _late_row_aggregation(spark, tmp_path).writeStream.format("noop").option(
@@ -150,11 +150,14 @@ def test_listener_reports_batch_phases(spark, tmp_path):
         assert len(batches) == len(progress) >= 3
         for b in batches:
             d, ops = progress[b.batch_id]["durationMs"], progress[b.batch_id]["stateOperators"]
-            assert (b.trigger_ms, b.query_planning_ms, b.add_batch_ms, b.wal_commit_ms) == (
-                d["triggerExecution"], d["queryPlanning"], d["addBatch"], d["walCommit"]
+            phases = (b.latest_offset_ms, b.query_planning_ms, b.add_batch_ms,
+                      b.wal_commit_ms, b.commit_offsets_ms)
+            assert (b.trigger_ms, *phases) == (
+                d["triggerExecution"], d["latestOffset"], d["queryPlanning"], d["addBatch"],
+                d["walCommit"], d["commitOffsets"]
             )
             assert b.add_batch_ms > 0
-            assert b.trigger_ms >= b.query_planning_ms + b.add_batch_ms + b.wal_commit_ms
+            assert b.trigger_ms >= sum(phases)
             assert len(ops) == 1  # the hourly count's one state store operator
             assert (b.state_memory_bytes, b.state_update_ms, b.state_removal_ms) == (
                 ops[0]["memoryUsedBytes"], ops[0]["allUpdatesTimeMs"], ops[0]["allRemovalsTimeMs"]

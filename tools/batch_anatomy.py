@@ -29,6 +29,14 @@ orders/s through a pre-published backlog on the warm session.
 ``--partitions`` sets the shuffle partition count; ``--conf`` adds
 session conf (e.g. the checkpoint file manager class).
 
+``broadcasts_per_batch`` in the summary counts the driver's broadcasts
+per micro-batch from the end of batch 1 to the stream's stop, from the
+broadcast ids of two one-byte probes (``broadcast_id``): one taken at
+the first poll that sees batch 1's progress, one after the stream
+stopped.  Each plan copy of the stream-stream join broadcasts the
+session's Hadoop conf, so this sizes how many copies a batch makes (a
+batch that starts before the first probe lands is counted in part).
+
 ``--sample-driver`` also ``jstack``s the tool's own driver JVM every
 ``SAMPLE_PERIOD_S`` while the stream runs and adds ``driver_samples`` to
 the summary: how many samples of the stream execution thread fell in the
@@ -167,6 +175,16 @@ class DriverSampler:
         }
 
 
+def broadcast_id(jsc) -> int:
+    """The id of a new one-byte broadcast: every broadcast the driver
+    makes (a plan node's Hadoop conf, a task binary) takes the next id, so
+    the difference of two such ids, less one, counts the broadcasts made
+    between them."""
+    b = jsc.broadcast(bytearray(1))
+    b.destroy()
+    return b.id()
+
+
 def anatomy(progress: list[dict], jobs: dict, stages: dict, first: int, last: int) -> list[dict]:
     """One record per micro-batch ``first`` .. ``last``."""
     out = []
@@ -242,8 +260,11 @@ def main(argv=None) -> int:
             ),
         }
         topo, t0 = stream.rate_topology(spark, work, "rate", args.seed)
+        jsc, probes = spark.sparkContext._jsc, []
 
         def on_poll():
+            if not probes and any(p["batchId"] >= 1 for p in topo.progress):
+                probes.append((broadcast_id(jsc), max(p["batchId"] for p in topo.progress)))
             commits = topo.commits()
             if topo.orders["records_per_shard"] == stream.OPEN_END and 1 in commits and (
                 max(commits) >= 2 and commits[max(commits)] - commits[1] >= args.seconds
@@ -252,6 +273,8 @@ def main(argv=None) -> int:
                 topo.close_at(-(-int((time.time() - t0) * 1000) // 10) * 10 + 10)
 
         topo.finish(on_poll)
+        probes.append((broadcast_id(jsc), max(p["batchId"] for p in topo.progress)))
+        (id0, b0), (id1, b1) = probes
         commits, ends = topo.commits(), topo.order_ends()
         first, last = 2, topo.last_order_batch()
         lo, hi = ends[first - 1], ends[last]
@@ -297,6 +320,7 @@ def main(argv=None) -> int:
         "job_ms_p50": p50("job_ms"),
         "driver_gap_ms_p50": p50("driver_gap_ms"),
         "state_commit_ms_p50": p50("state_commit_ms"),
+        "broadcasts_per_batch": round((id1 - id0 - 1) / max(b1 - b0, 1), 1),
         "stage_task_ms_p50": {k: median(v) for k, v in stage_task_ms.items()},
         "emit_latency_p50_s": round(median(latencies), 3),
         "emit_latency_p99_s": round(pct(latencies, 99), 3),
