@@ -130,10 +130,6 @@ def register_timestamp_to_string(spark: SparkSession, impl: str = "sql") -> None
     )
 
 
-#: DuckDB-side twin of :func:`finite_or_null` for oracle SQL (DuckDB has
-#: isfinite(); Spark SQL does not, hence the expression form below)
-FINITE_OR_NULL_SQL = "({col} IS NULL OR isfinite({col}))"
-
 #: largest finite IEEE-754 double — the single-comparison finiteness
 #: boundary both swallow predicates test against
 _DBL_MAX = 1.7976931348623157e308

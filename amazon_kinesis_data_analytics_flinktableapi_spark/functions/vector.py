@@ -46,9 +46,3 @@ def cosine(a: Column | str, b: Column | str) -> Column:
     ad, bd = as_double(a), as_double(b)
     denom = norm(ad) * norm(bd)
     return F.when(denom != 0.0, dot(ad, bd) / denom)
-
-
-def l2_distance(a: Column | str, b: Column | str) -> Column:
-    ad, bd = as_double(a), as_double(b)
-    diff = F.zip_with(ad, bd, lambda x, y: (x - y) * (x - y))
-    return F.sqrt(F.aggregate(diff, F.lit(0.0), lambda acc, x: acc + x))

@@ -31,7 +31,6 @@ def as_of_join(
     how: str = "left_outer",
     tie_breakers: list[str] | None = None,
     direction: str = "backward",
-    nearest_strategy: str = "single",
 ) -> DataFrame:
     """Latest-right-at-or-before join within ``horizon`` (``backward``),
     earliest-right-at-or-after (``direction="forward"`` — "the next quote
@@ -69,47 +68,26 @@ def as_of_join(
     left_cols = [F.col(f"l.{c}").alias(c) for c in left.columns]
     right_cols = [F.col(f"r.{c}").alias(f"r_{c}") for c in right.columns]
 
-    def picked_for(d: str) -> DataFrame:
-        j = interval_join_bucketed(left, right, on=keys, left_time=left_time,
-                                   right_time=right_time, interval=horizon, how=how,
-                                   direction=d)
-        return j.select(*left_cols, *right_cols)
+    picked = interval_join_bucketed(
+        left, right, on=keys, left_time=left_time, right_time=right_time,
+        interval=horizon, how=how, direction=direction,
+    ).select(*left_cols, *right_cols)
 
     t_ord = F.col(f"r_{right_time}")
     if direction == "nearest":
-        # Two physical strategies, identical semantics (both pinned by the
-        # hypothesis property suite + the pandas merge_asof cross-check in
-        # tests/test_asof_property.py; ``nearest_strategy`` selects):
-        #
-        # * "single" (default, r16): ONE symmetric bucketed join —
-        #   interval_join_bucketed(direction="nearest") explodes the right
-        #   side into 3 adjacent buckets with residual (t−h, t+h), the
-        #   exact union of backward (t−h, t] and forward [t, t+h).  Left
-        #   scanned/shuffled ONCE, total shuffle volume L + 3R (the
-        #   work-optimal plan for a throughput-bound cluster, and the one
-        #   that wins when the left is fact-sized — ADVICE r15's named 2×
-        #   left cost retired).
-        # * "union": the two one-sided bucketed joins unioned (2L + 4R
-        #   total work) — Spark schedules the independent branches
-        #   concurrently, which can win WALL-CLOCK on an underutilized
-        #   box; Δt = 0 matches materialize in both branches as identical
-        #   rows (rank-1 keeps one).
-        #
-        # Either way: ordering is exact integer micros — no float time
-        # compare; unmatched-left NULL rows sort last, so a left row emits
-        # its NULL row only when nothing matched on either side.
-        if nearest_strategy == "single":
-            picked = picked_for("nearest")
-        elif nearest_strategy == "union":
-            picked = picked_for("backward").unionAll(picked_for("forward"))
-        else:
-            raise ValueError(
-                f"nearest_strategy must be 'single' or 'union', got {nearest_strategy!r}"
-            )
+        # ONE symmetric bucketed join (r16): interval_join_bucketed
+        # (direction="nearest") explodes the right side into 3 adjacent
+        # buckets with residual (t−h, t+h), the exact union of backward
+        # (t−h, t] and forward [t, t+h).  Left scanned/shuffled ONCE,
+        # total shuffle volume L + 3R.  Pinned by the hypothesis property
+        # suite and the pandas merge_asof cross-check in
+        # tests/test_asof_property.py.  Ordering is exact integer micros —
+        # no float time compare; unmatched-left NULL rows sort last, so a
+        # left row emits its NULL row only when nothing matched on either
+        # side.
         delta = F.abs(F.unix_micros(t_ord) - F.unix_micros(F.col(left_time)))
         order = [delta.asc_nulls_last(), t_ord.asc_nulls_last()]
     else:
-        picked = picked_for(direction)
         order = [t_ord.desc_nulls_last() if direction == "backward" else t_ord.asc_nulls_last()]
     order += [F.col(f"r_{c}").desc_nulls_last() for c in (tie_breakers or [])]
     w = Window.partitionBy(left_id).orderBy(*order)

@@ -429,7 +429,7 @@ def q_kinesis_merge_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame
 def q_kinesis_fake_sdk_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """VERDICT r6 #4 driver row: the real-AWS swap seam.  The same stream
     (orders, 2 shards × 200 @ 25 ms, seed 13) is read twice — once through
-    the direct generator and once through ``client_mode=sdk``, where every
+    the direct generator and once through ``client=fake_sdk``, where every
     record is acquired via the boto3-shaped :class:`KinesisClient` protocol
     (``get_shard_iterator``/``get_records`` with pagination,
     sources/kinesis_client.py) — and compared as MULTISETS on the full wire
@@ -440,7 +440,11 @@ def q_kinesis_fake_sdk_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     independent md5 re-derivation.  ``sf_dir`` is unused — the connector is
     the source."""
     return _wire_parity_roundtrip(
-        spark, seed=13, records_per_shard=200, interval_ms=25, client_opts={}
+        spark,
+        seed=13,
+        records_per_shard=200,
+        interval_ms=25,
+        client_opts={"client": "fake_sdk"},
     )
 
 
@@ -454,7 +458,7 @@ def _wire_parity_roundtrip(
     shards: int = 2,
 ) -> DataFrame:
     """Shared body of the SDK-seam attestation queries: direct generator
-    vs ``client_mode=sdk`` (with ``client_opts`` picking the backend;
+    vs a KinesisClient (``client_opts`` names the ``client`` backend;
     ``base_opts`` extends BOTH reads, e.g. ``reshard_at`` /
     ``reshard_plan``), multiset-compared on the full wire tuple,
     aggregated per (shard, currency) with the symmetric-difference count
@@ -483,7 +487,7 @@ def _wire_parity_roundtrip(
     direct = spark.read.format("kinesis_sim").options(**base).load().cache()
     via_sdk = (
         spark.read.format("kinesis_sim")
-        .options(**base, client_mode="sdk", **client_opts)
+        .options(**base, **client_opts)
         .load()
         .cache()
     )
@@ -539,7 +543,7 @@ def q_kinesis_translating_sdk_roundtrip(spark: SparkSession, sf_dir: str) -> Dat
     """VERDICT r7 #4 driver row: the ordinal↔opaque-sequence translation a
     production ``aws`` factory needs, driven end-to-end.  The same stream
     (orders, 2 shards × 120 @ 30 ms, seed 21) is read through the direct
-    generator and through ``client_mode=sdk, client=fake_opaque`` — where
+    generator and through ``client=fake_opaque`` — where
     every record is served with REAL-shaped opaque non-dense sequence
     strings (sources/kinesis_client.py OpaqueSeqKinesisClient) and mapped
     back to the connector's dense ordinals by TranslatingKinesisClient's
@@ -587,8 +591,7 @@ def q_kinesis_throttled_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame
     """VERDICT r10 #2 driver row: the adapter retry obligations
     (KinesisClient protocol docstring) driven end-to-end.  The same
     stream (orders, 2 shards × 90 @ 20 ms, seed 33) is read through the
-    direct generator and through ``client_mode=sdk,
-    client=fake_throttling`` — where every 3rd ``get_records`` raises
+    direct generator and through ``client=fake_throttling`` — where every 3rd ``get_records`` raises
     ``ProvisionedThroughputExceededException`` and every 5th poisons its
     iterator with ``ExpiredIteratorException``
     (sources/kinesis_client.py ThrottlingKinesisClient), absorbed by
@@ -655,8 +658,7 @@ def q_kinesis_reshard_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     RESHARDS at sequence 60: both parents close and split into two
     children each (``shard_topology``), so the topology is 2 closed
     parents × 60 records + 4 open children × 60 records.  It is read
-    through the direct generator and through ``client_mode=sdk,
-    client=fake_opaque`` — opaque non-dense sequence numbers on every
+    through the direct generator and through ``client=fake_opaque`` — opaque non-dense sequence numbers on every
     shard, translated back to dense per-shard ordinals by
     TranslatingKinesisClient with an independent ledger key per lineage
     shard — and compared as a symmetric MULTISET diff on the full wire
@@ -712,7 +714,7 @@ def q_kinesis_merge_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     the topology is 4 closed parents × 60 records + 2 merge children ×
     60 records, all with 60-record dense spaces (the oracle's 6×60
     grid).  It is read through the direct generator and through
-    ``client_mode=sdk, client=fake_opaque`` — opaque non-dense sequence
+    ``client=fake_opaque`` — opaque non-dense sequence
     numbers on every shard, translated back per lineage shard by
     TranslatingKinesisClient — and compared as a symmetric MULTISET diff
     on the full wire tuple (``n_mismatch``, oracle-pinned to 0).
@@ -778,7 +780,7 @@ def q_kinesis_reshard_chain_roundtrip(spark: SparkSession, sf_dir: str) -> DataF
     forms a two-generation DAG: 4 closed shards (0, 1, 2, 3) × 60, two
     open grandchildren (4, 5) × 60, and one open merge child (6) × 120
     (the oracle's 6×60 + 1×120 grid).  Read through the direct generator
-    and through ``client_mode=sdk, client=fake_opaque`` (per-lineage-
+    and through ``client=fake_opaque`` (per-lineage-
     shard opaque→dense translation) and compared as a symmetric MULTISET
     diff on the full wire tuple (``n_mismatch``, oracle-pinned to 0).
     ``sf_dir`` is unused — the connector is the source."""

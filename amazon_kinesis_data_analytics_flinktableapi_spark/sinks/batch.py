@@ -8,7 +8,7 @@ exchange-free co-located joins for every downstream consumer.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def write_parquet(
@@ -42,7 +42,3 @@ def write_bucketed_table(
     if sort_by:
         writer = writer.sortBy(*sort_by)
     writer.saveAsTable(table_name)
-
-
-def read_table_from_catalog(spark: SparkSession, table_name: str) -> DataFrame:
-    return spark.table(table_name)

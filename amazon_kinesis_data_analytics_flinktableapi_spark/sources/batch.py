@@ -100,12 +100,6 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return read_parquet(spark, path)
 
 
-def read_json(spark: SparkSession, path: str, schema) -> DataFrame:
-    """Schema-declared JSON batch read (schema-on-read, S2): the declared
-    StructType prunes parsing to exactly the schema's fields."""
-    return spark.read.schema(schema).json(path)
-
-
 def read_csv(spark: SparkSession, path: str, schema, header: bool = True, sep: str = ",") -> DataFrame:
     """Schema-declared CSV read.  The explicit StructType (never
     inferSchema — that is a second full scan of 100 TB) makes parsing

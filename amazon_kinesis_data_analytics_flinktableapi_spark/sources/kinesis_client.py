@@ -1,7 +1,9 @@
 """The real-AWS-Kinesis seam: a client protocol shaped like boto3.
 
 ``kinesis_sim`` (S1, StreamingJob.java:26-41) reads records from a
-deterministic in-process generator.  Swapping that generator for the AWS
+deterministic in-process generator unless its ``client`` read option
+names a factory registered here (:data:`CLIENT_FACTORIES`); then every
+read goes through that client.  Swapping the generator for the AWS
 SDK must not touch any Spark-facing surface — partition planning, the
 {shard: next_sequence} offset model, replay-by-sequence-range recovery,
 and the sink commit protocol all stay identical.  This module pins that
@@ -1093,7 +1095,7 @@ CLIENT_FACTORIES: dict[str, object] = {
 
 def register_client_factory(name: str, factory) -> None:
     """Register a client backend (e.g. ``"aws"`` → boto3) for
-    ``client_mode=sdk, client=<name>`` reads.
+    ``client=<name>`` reads.
 
     Executor visibility: Data Source readers run in Python WORKER
     processes that re-import this module, so a factory registered at
@@ -1154,8 +1156,8 @@ def sdk_read_range(
     the connector's wire tuples (shard_id, seq, partition_key, data,
     arrival_ts).
 
-    This is the ONE function both the batch reader and the streaming
-    replay path route through in ``client_mode=sdk`` — offset semantics
+    This is the ONE function both readers route every range through when
+    a ``client`` is set (via ``kinesis_sim._fetch``) — offset semantics
     (half-open ranges keyed by next-sequence-number) live here once, so
     the generator-backed fake and a service-backed client are
     interchangeable by construction.  Pagination follows

@@ -9,11 +9,12 @@ get-records-between-sequence ranges — over a deterministic synthetic
 record generator shaped like the
 reference's Kinesis Data Generator templates (README.md:60-72: orders
 and exchange-rate JSON).  Swapping the generator for real AWS SDK calls
-is a registered client factory away: ``client_mode=sdk`` routes every
+is a registered client factory away: ``client=<factory>`` routes every
 read through the boto3-shaped :class:`KinesisClient` protocol
 (``sources/kinesis_client.py``, contract-tested against the generator
 path); every Spark-facing surface (schema, partition planning, offset
-model) stays identical.
+model) stays identical.  Both readers fetch records through one
+function, :func:`_fetch`.
 
 Wire parity with the reference consumer (StreamingJob.java:26-41):
 
@@ -343,6 +344,20 @@ class _Opts:
     """Validated option bag (data-source options arrive as strings)."""
 
     def __init__(self, options: dict):
+        # retired names fail loudly: unknown keys are otherwise ignored
+        # (subclassed readers pass their own options through), so an old
+        # caller asking for a client read would silently get the generator
+        if "client_mode" in options:
+            raise ValueError(
+                "client_mode was removed: set client=<factory> (e.g. "
+                "client=fake_sdk) to read through a KinesisClient, or leave "
+                "client unset to read the generator"
+            )
+        if "arrow" in options:
+            raise ValueError(
+                "arrow: the Arrow transport was removed; batch reads "
+                "always yield tuples"
+            )
         self.shards = int(options.get("shards", 1))
         self.seed = int(options.get("seed", 42))
         self.template = options.get("template", "orders")
@@ -428,24 +443,21 @@ class _Opts:
             raise ValueError(
                 f"lineage_order must be 'relaxed' or 'strict', got {self.lineage_order!r}"
             )
-        #: record-acquisition path: "generator" = direct in-process calls
-        #: (the hot default); "sdk" = route every read through a
-        #: KinesisClient (boto3 wire shape) — the contract-tested seam a
-        #: real AWS backend plugs into (see sources/kinesis_client.py)
-        self.client_mode = options.get("client_mode", "generator")
-        #: arrow=true switches batch reads to pyarrow RecordBatch yields
-        #: (Spark 4's Arrow IPC Python Data Source path).  Measured on
-        #: this connector it is NOT faster — the records are 5 small
-        #: scalar fields, and PySpark's batched-cPickle tuple transport
-        #: edges Arrow at both 200k and 2M-record scans (1.36M vs 1.09M
-        #: rec/s at 2M after the r12 generator tuning) because the Arrow
-        #: win (column-wise zero-copy) is eaten by assembling Python
-        #: objects into arrays in the worker.  Kept as an option with
-        #: row-parity pinned: for WIDE or binary-heavy schemas the
-        #: balance flips, and the transport seam is the point.
-        self.arrow_batches = str(options.get("arrow", "false")).lower() == "true"
-        #: which registered client factory "sdk" mode builds on the executor
-        self.client = options.get("client", "fake_sdk")
+        #: record-acquisition path: unset = direct in-process generator
+        #: calls (the hot default); a registered factory name (fake_sdk,
+        #: fake_opaque, fake_throttling, a deployment's aws) = build that
+        #: KinesisClient on the executor and route every read through it
+        #: (boto3 wire shape) — the contract-tested seam a real AWS
+        #: backend plugs into (see sources/kinesis_client.py)
+        self.client = options.get("client")
+        if self.client is not None:
+            from .kinesis_client import CLIENT_FACTORIES
+
+            if self.client not in CLIENT_FACTORIES:
+                raise ValueError(
+                    f"unknown client {self.client!r}; registered: "
+                    f"{sorted(CLIENT_FACTORIES)}"
+                )
         self.stream_name = options.get("stream_name", "kinesis-sim")
         #: adapter-ledger persistence (factories that build a
         #: TranslatingKinesisClient honor these): ledger_path loads the
@@ -477,21 +489,9 @@ class _Opts:
         if sa not in ("true", "false"):
             raise ValueError(f"strict_anchor must be true or false, got {sa!r}")
         self.strict_anchor = sa == "true"
-        if self.client_mode not in ("generator", "sdk"):
-            raise ValueError(
-                f"client_mode must be 'generator' or 'sdk', got {self.client_mode!r}"
-            )
-        if self.client_mode == "sdk":
-            from .kinesis_client import CLIENT_FACTORIES
-
-            if self.client not in CLIENT_FACTORIES:
-                raise ValueError(
-                    f"unknown client {self.client!r}; registered: "
-                    f"{sorted(CLIENT_FACTORIES)}"
-                )
 
     def make_client(self):
-        """Build this read's KinesisClient (executor-side; sdk mode only)."""
+        """Build this read's KinesisClient (executor-side; needs ``client``)."""
         from .kinesis_client import CLIENT_FACTORIES
 
         return CLIENT_FACTORIES[self.client](self)
@@ -509,9 +509,9 @@ class _Opts:
         seq at-or-after t is ceil((t − epoch − shard ms) / interval_ms),
         clamped to [0, ∞) — same inclusive contract as the AWS service.
 
-        Resolution is LOCAL (the simulator's arrival model) in both
-        client modes; ``client_mode=sdk`` routes record *ranges* through
-        the client, not initial-position lookup.  A real-backend adapter
+        Resolution is LOCAL (the simulator's arrival model) with or
+        without a ``client``; a client serves record *ranges*, not
+        initial-position lookup.  A real-backend adapter
         already owns the ordinal↔service-sequence ledger (see
         ``kinesis_client``), and timestamp→ordinal is one more lookup in
         that ledger — the fake client's AT_TIMESTAMP iterator exists so
@@ -523,52 +523,37 @@ class _Opts:
         return 0
 
 
-#: rows per Arrow RecordBatch on the batch-read path — large enough to
-#: amortize the per-batch IPC/conversion overhead, small enough that a
-#: batch (~1 MB at ~130 B/record) never strains worker memory
-_ARROW_CHUNK = 8192
+def _fetch(o: _Opts, ranges, strict: bool = False) -> Iterator[tuple]:
+    """The connector's one record fetch: the wire tuples of each half-open
+    ``(shard, start, end)`` range, in order, lazily.  Both readers call it
+    — the batch reader with its partition's range, the stream reader with
+    one range per shard of a micro-batch (or of a committed range it
+    replays).
 
+    Without ``client`` the records come from the in-process generator,
+    which regenerates any range (a pure function of seq).  With one, every
+    range is read through that KinesisClient by ``sdk_read_range``;
+    ``strict=True`` is the checkpoint-replay contract (a committed range
+    the backend cannot fully serve fails the task, never silently
+    shrinks).  A client with a ``ledger_path`` saves its ordinal↔sequence
+    entries once, after the last range (read-merge-write: concurrent tasks
+    union their shards; re-saving under task retry is idempotent, since
+    entries are immutable facts about stream positions) — so a streaming
+    ledger persists at the cadence Spark durably owns the offsets."""
+    if o.client is None:
+        for shard, start, end in ranges:
+            for seq in range(start, end):
+                yield _record(o.template, o.seed, shard, seq, o.interval_ms)
+        return
+    from .kinesis_client import sdk_read_range
 
-def _arrow_batches(records: Iterator[tuple]) -> Iterator:
-    """Chunk the connector's (shard_id, seq, partition_key, data,
-    arrival_ts) tuples into pyarrow RecordBatches.
-
-    Spark 4's Python Data Source API accepts ``Iterator[RecordBatch]``
-    from ``read()`` and moves them to the JVM over Arrow IPC — no
-    per-tuple pickling.  On THIS schema (5 small scalar fields) the
-    measured balance favors the default tuple path (see the ``arrow``
-    option in ``_Opts``); the Arrow route exists for wide/binary-heavy
-    schema variants and as the pinned-parity transport seam.  Record
-    CONTENT is identical to the tuple path — same generator, same
-    ordering — only the transport changes.
-    """
-    import pyarrow as pa
-
-    schema = pa.schema(
-        [
-            ("shard_id", pa.string()),
-            ("sequence_number", pa.int64()),
-            ("partition_key", pa.string()),
-            ("data", pa.string()),
-            # tz-aware micros, matching Spark's TimestampType in the UTC
-            # session the engine pins
-            ("arrival_ts", pa.timestamp("us", tz="UTC")),
-        ]
-    )
-    buf: list[tuple] = []
-    for rec in records:
-        buf.append(rec)
-        if len(buf) >= _ARROW_CHUNK:
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(col, type=f.type) for col, f in zip(zip(*buf), schema)],
-                schema=schema,
-            )
-            buf.clear()
-    if buf:
-        yield pa.RecordBatch.from_arrays(
-            [pa.array(col, type=f.type) for col, f in zip(zip(*buf), schema)],
-            schema=schema,
+    client = o.make_client()
+    for shard, start, end in ranges:
+        yield from sdk_read_range(
+            client, o.stream_name, shard, start, end, require_complete=strict
         )
+    if getattr(client, "ledger_path", None):
+        client.save_ledger()
 
 
 class _ShardPartition(InputPartition):
@@ -597,36 +582,8 @@ class KinesisSimBatchReader(DataSourceReader):
             for t in o.topology()
         ]
 
-    def read(self, partition: _ShardPartition) -> Iterator:
-        o = self.opts
-        if o.arrow_batches:
-            # opt-in Arrow transport (see _arrow_batches); content
-            # identical to the tuple path — parity pinned in
-            # test_kinesis_sim
-            yield from _arrow_batches(self._tuples(partition))
-            return
-        yield from self._tuples(partition)
-
-    def _tuples(self, partition: _ShardPartition) -> Iterator[tuple]:
-        o = self.opts
-        if o.client_mode == "sdk":
-            # the contract-tested seam: identical tuples, acquired through
-            # the boto3-shaped client instead of direct generator calls
-            from .kinesis_client import sdk_read_range
-
-            client = o.make_client()
-            yield from sdk_read_range(
-                client, o.stream_name, partition.shard, partition.start, partition.end
-            )
-            if getattr(client, "ledger_path", None):
-                # persist the ordinal↔sequence entries this range observed
-                # (read-merge-write: concurrent tasks union their shards).
-                # Safe under task retry — ledger entries are immutable
-                # facts about stream positions, so re-saving is idempotent
-                client.save_ledger()
-            return
-        for seq in range(partition.start, partition.end):
-            yield _record(o.template, o.seed, partition.shard, seq, o.interval_ms)
+    def read(self, partition: _ShardPartition) -> Iterator[tuple]:
+        return _fetch(self.opts, [(partition.shard, partition.start, partition.end)])
 
 
 class KinesisSimStreamReader(SimpleDataSourceStreamReader):
@@ -720,35 +677,11 @@ class KinesisSimStreamReader(SimpleDataSourceStreamReader):
         # iterators).  iter(list) satisfies both — list iterators are
         # copyable via the pickle protocol.  Size is bounded by
         # batch_records × shards.
-        o = self.opts
-        out = []
-        if o.client_mode == "sdk":
-            from .kinesis_client import sdk_read_range
-
-            client = o.make_client()
-            for shard_name, cursor in start.items():
-                shard = int(shard_name.rsplit("-", 1)[1])
-                out.extend(
-                    sdk_read_range(
-                        client,
-                        o.stream_name,
-                        shard,
-                        int(cursor),
-                        int(end[shard_name]),
-                        require_complete=strict,
-                    )
-                )
-            if getattr(client, "ledger_path", None):
-                # one client serves every shard of this micro-batch;
-                # persist its accumulated entries at the batch boundary —
-                # the same cadence Spark durably owns the offsets
-                client.save_ledger()
-            return iter(out)
-        for shard_name, cursor in start.items():
-            shard = int(shard_name.rsplit("-", 1)[1])
-            for seq in range(int(cursor), int(end[shard_name])):
-                out.append(_record(o.template, o.seed, shard, seq, o.interval_ms))
-        return iter(out)
+        ranges = [
+            (int(shard_name.rsplit("-", 1)[1]), int(cursor), int(end[shard_name]))
+            for shard_name, cursor in start.items()
+        ]
+        return iter(list(_fetch(self.opts, ranges, strict=strict)))
 
     def commit(self, end: dict) -> None:
         pass  # nothing to clean up — the generator is stateless
@@ -946,12 +879,16 @@ class KinesisSimDataSource(DataSource):
     lineage, see ``apply_reshard_plan``; note its documented
     parent-before-child ordering relaxation); lineage_order
     (relaxed|strict — strict holds streaming children until their parents
-    drain, KCL's parent-first contract); client_mode
-    (generator|sdk), client (registered KinesisClient factory name,
-    default fake_sdk), stream_name, ledger_path + strict_anchor
-    (adapter-ledger persistence: load at client construction, save back
-    read-merge-write after each completed range; strict refuses horizon
-    recounts) — the real-AWS seam, see sources/kinesis_client.py.
+    drain, KCL's parent-first contract); client (registered
+    KinesisClient factory name — fake_sdk, fake_opaque, fake_throttling
+    or a deployment's aws; unset reads the in-process generator),
+    stream_name, ledger_path + strict_anchor (adapter-ledger persistence:
+    load at client construction, save back read-merge-write after each
+    completed range; strict refuses horizon recounts), throttle_every,
+    expire_every, fault_max_retries, fault_backoff_ms (fault schedules
+    for client=fake_throttling) — the real-AWS seam, see
+    sources/kinesis_client.py.  Retired option names are refused (see
+    ``_Opts``).
     """
 
     @classmethod

@@ -3,13 +3,15 @@
 The reference consumes Kinesis shards via FlinkKinesisConsumer +
 JsonNodeDeserializationSchema + a Jackson map into POJOs
 (StreamingJob.java:26-61).  OSS Spark has no Kinesis connector, so the
-engine abstracts a source registry with the same shape — a named source
-producing a typed streaming DataFrame:
+engine offers one builder per stream source, each producing a typed
+streaming DataFrame (builders take source-specific arguments, so call
+them directly):
 
-- ``file_replay``  — JSON-lines directory replay (the test/CI source; also
-                     the production pattern for S3-landed data).
-- ``kafka``        — the production stream bus (``format("kafka")``).
-- ``rate``         — synthetic benchmark source.
+- ``file_replay``      — JSON-lines directory replay (the test/CI source;
+                         also the production pattern for S3-landed data).
+- ``kafka_json``       — the production stream bus (``format("kafka")``).
+- ``kinesis_sim_json`` — the in-repo Kinesis-semantics connector
+                         (``sources/kinesis_sim.py``).
 
 All JSON parsing goes through ``parse_json_stream``: one ``from_json``
 with a declared minimal schema (schema-on-read, parse-time pruning), then
@@ -111,13 +113,6 @@ def kafka_json(
     return parse_json_stream(raw, schema)
 
 
-def rate_source(spark: SparkSession, rows_per_second: int = 100) -> DataFrame:
-    """Synthetic (timestamp, value) stream for smoke/bench."""
-    return (
-        spark.readStream.format("rate").option("rowsPerSecond", rows_per_second).load()
-    )
-
-
 def kinesis_sim_json(spark: SparkSession, schema: StructType, **options) -> DataFrame:
     """Kinesis-semantics stream (shards, sequence offsets, TRIM_HORIZON/
     LATEST) from the in-repo Python Data Source connector
@@ -127,16 +122,3 @@ def kinesis_sim_json(spark: SparkSession, schema: StructType, **options) -> Data
     register(spark)
     raw = spark.readStream.format("kinesis_sim").options(**options).load()
     return parse_json_stream(raw, schema, value_col="data")
-
-
-#: Source DISCOVERY map (the "source registry" SURVEY.md §2 S1 refers
-#: to): enumerates the stream sources this engine ships so callers and
-#: docs have one authoritative list.  NOT a uniform dispatch table — the
-#: four builders take source-specific arguments (brokers/topic vs
-#: path/schema vs connector options), so call the functions directly.
-SOURCES = {
-    "file_replay": file_replay,
-    "kafka": kafka_json,
-    "kinesis_sim": kinesis_sim_json,
-    "rate": rate_source,
-}

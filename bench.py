@@ -111,7 +111,7 @@ def _kinesis_scan_rps(spark, label: str, **extra) -> float:
     def read(n_shards: int, n_per_shard: int):
         return (
             spark.read.format("kinesis_sim")
-            .option("stream", "orders").option("shards", n_shards)
+            .option("template", "orders").option("shards", n_shards)
             .option("records_per_shard", n_per_shard)
             .options(**extra).load()
         )
@@ -214,7 +214,7 @@ def main() -> None:
         # the same scan through the boto3-shaped KinesisClient seam: the
         # per-record cost of the SDK response envelope the AWS path pays
         "kinesis_sim_sdk_scan_recs_per_sec": _kinesis_scan_rps(
-            spark, "kinesis_sim_sdk_scan", client_mode="sdk"
+            spark, "kinesis_sim_sdk_scan", client="fake_sdk"
         ),
     }
     state = _streaming_state_max_rows(spark, sf_dir, specs)

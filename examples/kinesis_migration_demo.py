@@ -11,7 +11,7 @@ persistence across a restart, and a parent→child reshard:
    half-open window, LEFT OUTER), projected through TimestampToString
    (S7) and int arithmetic (Q2).
 2. **The SDK seam**: the same read routed through the boto3-shaped
-   ``KinesisClient`` protocol (``client_mode=sdk, client=fake_opaque``):
+   ``KinesisClient`` protocol (``client=fake_opaque``):
    opaque non-dense sequence numbers on the wire, translated back to the
    connector's dense ordinals by ``TranslatingKinesisClient`` — the
    wrapper a production ``boto3.client("kinesis")`` factory uses
@@ -102,7 +102,7 @@ def main() -> None:
 
     # -- 2. the same read through the full opaque-sequence adapter stack
     direct = read_stream("orders", 50)
-    via_sdk = read_stream("orders", 50, client_mode="sdk", client="fake_opaque")
+    via_sdk = read_stream("orders", 50, client="fake_opaque")
     mismatch = direct.exceptAll(via_sdk).unionAll(via_sdk.exceptAll(direct)).count()
     print(f"[2] sdk adapter stack: {via_sdk.count()} records, wire-multiset mismatch = {mismatch}")
 
@@ -123,7 +123,7 @@ def main() -> None:
 
     # -- 4. a parent→child reshard through the same stack
     resharded = read_stream(
-        "orders", 50, reshard_at="200", client_mode="sdk", client="fake_opaque"
+        "orders", 50, reshard_at="200", client="fake_opaque"
     )
     per_shard = resharded.groupBy("shard_id").count().orderBy("shard_id")
     print("[4] resharded stream (parent closes at 200; children carry 300 each):")
@@ -142,7 +142,7 @@ def main() -> None:
     ]
     chained = read_stream(
         "orders", 50,
-        reshard_plan=_json.dumps(plan), client_mode="sdk", client="fake_opaque",
+        reshard_plan=_json.dumps(plan), client="fake_opaque",
     )
     print("[5] two-generation reshard (split at 200, children merge at 150):")
     chained.groupBy("shard_id").count().orderBy("shard_id").show(truncate=False)

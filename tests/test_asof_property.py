@@ -75,7 +75,7 @@ def _brute(orders, rates, direction):
     return want
 
 
-def _run(orders, rates, direction, **kw):
+def _run(orders, rates, direction):
     spark = get_spark()
     left = spark.createDataFrame(
         [(oid, _ts(ot), key) for oid, ot, key in orders],
@@ -87,7 +87,7 @@ def _run(orders, rates, direction, **kw):
     )
     out = as_of_join(left, right, on="ccy", left_id="id", left_time="t",
                      right_time="rt", horizon=f"{HORIZON_S} seconds",
-                     tie_breakers=["rate"], direction=direction, **kw)
+                     tie_breakers=["rate"], direction=direction)
     got = {}
     for r in out.collect():
         off = None if r.r_rt is None else int((r.r_rt - T0).total_seconds())
@@ -135,24 +135,11 @@ def _brute_nearest(orders, rates):
 @given(orders=orders_st, rates=rates_st)
 @settings(max_examples=25, deadline=None)
 def test_asof_nearest_matches_brute_force(orders, rates):
+    """The nearest plan (one symmetric 3-bucket join) against the
+    brute-force contract, NULL keys/times and ties included."""
     got = _run(orders, rates, "nearest")
     assert set(got) == {o[0] for o in orders}
     assert got == _brute_nearest(orders, rates)
-
-
-@given(orders=orders_st, rates=rates_st)
-@settings(max_examples=15, deadline=None)
-def test_asof_nearest_strategies_agree(orders, rates):
-    """The two physical strategies — one symmetric 3-bucket join
-    ("single", the r16 work-optimal default) and the union of the two
-    one-sided joins ("union") — must produce identical results on
-    arbitrary inputs including NULL keys/times and ties (both are also
-    individually brute-checked via the default path's property test and
-    the pandas merge_asof cross-check)."""
-    single = _run(orders, rates, "nearest", nearest_strategy="single")
-    union = _run(orders, rates, "nearest", nearest_strategy="union")
-    assert single == union
-    assert single == _brute_nearest(orders, rates)
 
 
 def test_asof_nearest_matches_pandas_merge_asof(spark):

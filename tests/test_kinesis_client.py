@@ -117,7 +117,7 @@ def test_sdk_read_range_short_pages_and_bounds():
     assert sdk_read_range(c, "s", 0, 10, 10) == []
 
 
-# --- connector parity: client_mode=sdk vs the direct generator ------------
+# --- connector parity: client=fake_sdk vs the direct generator -----------
 
 
 def _collect_sorted(spark, **opts):
@@ -129,7 +129,7 @@ def test_batch_read_sdk_mode_bit_identical(spark):
     register(spark)
     base = {"shards": 3, "records_per_shard": 40, "template": "orders", "seed": 11}
     direct = _collect_sorted(spark, **base)
-    via_sdk = _collect_sorted(spark, **base, client_mode="sdk")
+    via_sdk = _collect_sorted(spark, **base, client="fake_sdk")
     assert via_sdk == direct and len(direct) == 120
 
 
@@ -146,7 +146,7 @@ def test_stream_reader_sdk_mode_shares_offset_and_replay_logic():
         "initial_position": "LATEST",
     }
     gen = KinesisSimStreamReader(base)
-    sdk = KinesisSimStreamReader({**base, "client_mode": "sdk"})
+    sdk = KinesisSimStreamReader({**base, "client": "fake_sdk"})
     assert gen.initialOffset() == sdk.initialOffset()
     cur_g, cur_s = gen.initialOffset(), sdk.initialOffset()
     for _ in range(6):  # walk past the tip clamp
@@ -163,9 +163,7 @@ def test_stream_reader_sdk_mode_shares_offset_and_replay_logic():
 
 def test_unknown_client_rejected_and_factory_registry():
     with pytest.raises(ValueError, match="unknown client"):
-        _Opts({"client_mode": "sdk", "client": "no_such_backend"})
-    with pytest.raises(ValueError, match="client_mode"):
-        _Opts({"client_mode": "grpc"})
+        _Opts({"client": "no_such_backend"})
     # a registered third-party factory becomes reachable through options
     calls = []
 
@@ -180,7 +178,6 @@ def test_unknown_client_rejected_and_factory_registry():
     try:
         o = _Opts(
             {
-                "client_mode": "sdk",
                 "client": "test_backend",
                 "stream_name": "orders-prod",
                 "records_per_shard": 5,
@@ -269,13 +266,13 @@ def test_sdk_replay_of_committed_range_fails_loudly_when_unservable():
     of it (here: restart with a smaller records_per_shard, so the fake's
     tip sits inside the committed range) fails the task instead."""
     base = {"shards": 1, "records_per_shard": 100, "batch_records": 20}
-    r = KinesisSimStreamReader({**base, "client_mode": "sdk"})
+    r = KinesisSimStreamReader({**base, "client": "fake_sdk"})
     start, end = {"shardId-000000000000": 40}, {"shardId-000000000000": 60}
     # healthy backend: full committed range, identical to generator mode
     gen = KinesisSimStreamReader(base)
     assert list(r.readBetweenOffsets(start, end)) == list(gen.readBetweenOffsets(start, end))
     shrunk = KinesisSimStreamReader(
-        {**base, "records_per_shard": 50, "client_mode": "sdk"}
+        {**base, "records_per_shard": 50, "client": "fake_sdk"}
     )
     with pytest.raises(RuntimeError, match="committed range"):
         list(shrunk.readBetweenOffsets(start, end))
@@ -552,7 +549,7 @@ def test_fake_opaque_factory_end_to_end():
         "initial_position": "LATEST",
     }
     gen = KinesisSimStreamReader(base)
-    opq = KinesisSimStreamReader({**base, "client_mode": "sdk", "client": "fake_opaque"})
+    opq = KinesisSimStreamReader({**base, "client": "fake_opaque"})
     assert gen.initialOffset() == opq.initialOffset()
     cur_g, cur_o = gen.initialOffset(), opq.initialOffset()
     for _ in range(6):
@@ -569,7 +566,7 @@ def test_batch_read_fake_opaque_bit_identical(spark):
     register(spark)
     base = {"shards": 3, "records_per_shard": 40, "template": "orders", "seed": 11}
     direct = _collect_sorted(spark, **base)
-    via_opaque = _collect_sorted(spark, **base, client_mode="sdk", client="fake_opaque")
+    via_opaque = _collect_sorted(spark, **base, client="fake_opaque")
     assert via_opaque == direct and len(direct) == 120
 
 
@@ -1325,7 +1322,7 @@ def test_fake_throttling_factory_end_to_end(spark):
     read is bit-identical to client=fake_sdk despite the injected fault
     schedules — the adapter stack absorbed every fault."""
     register(spark)
-    base = {"shards": 2, "records_per_shard": 50, "seed": 21, "client_mode": "sdk"}
+    base = {"shards": 2, "records_per_shard": 50, "seed": 21}
     clean = _collect_sorted(spark, **base, client="fake_sdk")
     faulted = _collect_sorted(
         spark, **base, client="fake_throttling", throttle_every=3, expire_every=5

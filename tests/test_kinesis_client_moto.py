@@ -13,7 +13,7 @@ with zero connector code changed.  ``importorskip`` keeps the file a
 skip-with-receipt in environments without moto/boto3 (no network is
 needed — moto patches botocore in-process).
 
-Scope note: the Spark ``client_mode=sdk`` DataSource path is NOT driven
+Scope note: the Spark ``client=<factory>`` DataSource path is NOT driven
 here because factories run in executor Python workers, where moto's
 in-process patching does not exist; the in-Spark path is attested by the
 ``kinesis_translating_sdk_roundtrip`` oracle query against the opaque

@@ -8,6 +8,7 @@ sequence ranges (the exactly-once recovery requirement).
 
 from __future__ import annotations
 
+import re
 import time
 
 import pytest
@@ -693,7 +694,7 @@ def test_reshard_batch_read_crosses_split(spark):
     direct = sorted(tuple(r) for r in df.collect())
     for client in ("fake_sdk", "fake_opaque"):
         via = spark.read.format("kinesis_sim").options(
-            **opts, client_mode="sdk", client=client
+            **opts, client=client
         ).load()
         assert sorted(tuple(r) for r in via.collect()) == direct, client
 
@@ -715,7 +716,7 @@ def test_reshard_stream_offsets_saturate_at_close():
         "shardId-000000000000": 8,   # parent saturated at its close
         "shardId-000000000001": 12, "shardId-000000000002": 12,
     }
-    sdk = KinesisSimStreamReader({**base, "client_mode": "sdk", "client": "fake_opaque"})
+    sdk = KinesisSimStreamReader({**base, "client": "fake_opaque"})
     assert list(r.readBetweenOffsets(start, cur)) == list(sdk.readBetweenOffsets(start, cur))
 
 
@@ -857,7 +858,7 @@ def test_reshard_plan_batch_and_stream_cross_merge_and_generations(spark):
     direct = sorted(tuple(r) for r in df.collect())
     for client in ("fake_sdk", "fake_opaque"):
         via = spark.read.format("kinesis_sim").options(
-            **opts, client_mode="sdk", client=client
+            **opts, client=client
         ).load()
         assert sorted(tuple(r) for r in via.collect()) == direct, client
     # streaming: offsets advance per lineage shard and saturate at closes
@@ -870,7 +871,7 @@ def test_reshard_plan_batch_and_stream_cross_merge_and_generations(spark):
         _rows, cur = r.read(cur)
     assert all(cur[f"shardId-{s:012d}"] == 6 for s in range(6))
     assert cur["shardId-000000000006"] == 12
-    sdk = KinesisSimStreamReader({**base, "client_mode": "sdk", "client": "fake_opaque"})
+    sdk = KinesisSimStreamReader({**base, "client": "fake_opaque"})
     assert list(r.readBetweenOffsets(start, cur)) == list(sdk.readBetweenOffsets(start, cur))
 
 
@@ -1057,7 +1058,7 @@ def test_connector_ledger_path_persists_and_warm_starts(spark, tmp_path):
     p = str(tmp_path / "orders.ledger.json")
     opts = dict(
         shards=2, records_per_shard=5000, seed=5,
-        client_mode="sdk", client="fake_opaque", ledger_path=p,
+        client="fake_opaque", ledger_path=p,
     )
     # batch read: one executor task per shard, each saving its entries
     df = spark.read.format("kinesis_sim").options(**opts).load()
@@ -1233,10 +1234,9 @@ def test_record_byte_identity_with_reference_formulation():
                         ), (template, seed, shard, seq, interval_ms)
 
 
-def test_arrow_and_tuple_transport_row_parity(spark):
-    """arrow=true (RecordBatch transport) and the default per-tuple
-    transport must produce identical rows in both client modes — only
-    the transport differs."""
+def test_generator_and_fake_sdk_client_row_parity(spark):
+    """A batch read through client=fake_sdk yields exactly the rows of
+    the default generator read — only the acquisition path differs."""
     from amazon_kinesis_data_analytics_flinktableapi_spark.sources.kinesis_sim import register
 
     register(spark)
@@ -1244,7 +1244,7 @@ def test_arrow_and_tuple_transport_row_parity(spark):
     def scan(**extra):
         return (
             spark.read.format("kinesis_sim")
-            .option("stream", "orders")
+            .option("template", "orders")
             .option("shards", 4)
             .option("records_per_shard", 500)
             .options(**extra)
@@ -1255,24 +1255,25 @@ def test_arrow_and_tuple_transport_row_parity(spark):
 
     base = scan()
     assert len(base) == 2000
-    assert scan(arrow="true") == base
-    assert scan(arrow="true", client_mode="sdk") == base
-    assert scan(client_mode="sdk") == base
+    assert scan(client="fake_sdk") == base
 
 
-def test_arrow_batches_empty_and_chunk_boundaries():
-    """_arrow_batches: empty iterator yields no batches; chunking splits
-    exactly at _ARROW_CHUNK and preserves order/content."""
+@pytest.mark.parametrize(
+    "option, value, message",
+    [
+        ("client_mode", "sdk", "client=<factory>"),
+        ("arrow", "true", "Arrow transport was removed"),
+    ],
+)
+def test_retired_read_options_rejected(option, value, message):
+    """The retired option names fail at option parse, naming what
+    replaced them: unknown keys are otherwise ignored, so an old
+    client_mode=sdk read would silently come from the generator."""
     from amazon_kinesis_data_analytics_flinktableapi_spark.sources.kinesis_sim import (
-        _ARROW_CHUNK,
-        _arrow_batches,
-        _record,
+        KinesisSimBatchReader,
+        KinesisSimStreamReader,
     )
 
-    assert list(_arrow_batches(iter([]))) == []
-    n = _ARROW_CHUNK + 3
-    recs = [_record("orders", 42, 0, q, 10) for q in range(n)]
-    batches = list(_arrow_batches(iter(recs)))
-    assert [b.num_rows for b in batches] == [_ARROW_CHUNK, 3]
-    seqs = [v.as_py() for b in batches for v in b.column("sequence_number")]
-    assert seqs == list(range(n))
+    for reader in (KinesisSimBatchReader, KinesisSimStreamReader):
+        with pytest.raises(ValueError, match=re.escape(message)):
+            reader({option: value})
