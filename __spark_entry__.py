@@ -18,17 +18,13 @@ SMOKE_SF_DIR = "/root/testdata/sf0.001"
 
 def _configure(spark: SparkSession) -> SparkSession:
     """Apply engine session conf to a driver-provided SparkSession,
-    including the engine's partition and checkpoint rules (a value the
-    driver set explicitly is kept) and its conf-source rule (the driver's
-    Hadoop conf drops its per-property source records; every key, value
-    and final flag is kept)."""
-    from amazon_kinesis_data_analytics_flinktableapi_spark.engine import (
-        clear_hadoop_conf_sources,
-        size_shuffle_partitions,
-        use_filesystem_checkpoints,
-    )
+    starting with the engine's session rules
+    (``engine.apply_session_rules``: checkpoint, conf-source and
+    partition rules; a value the driver set explicitly is kept, and the
+    driver's Hadoop conf keeps every key, value and final flag)."""
+    from amazon_kinesis_data_analytics_flinktableapi_spark.engine import apply_session_rules
 
-    size_shuffle_partitions(clear_hadoop_conf_sources(use_filesystem_checkpoints(spark)))
+    apply_session_rules(spark)
     for k, v in [
         ("spark.sql.session.timeZone", "UTC"),
         ("spark.sql.legacy.parquet.nanosAsLong", "true"),

@@ -68,7 +68,19 @@ def build_spark(
         builder = builder.master(f"local[{DEFAULT_CPUS}]")
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    spark = clear_hadoop_conf_sources(use_filesystem_checkpoints(builder.getOrCreate()))
+    return apply_session_rules(builder.getOrCreate(), shuffle_partitions)
+
+
+def apply_session_rules(spark: SparkSession, shuffle_partitions: int | None = None) -> SparkSession:
+    """Apply the engine's session rules in order: the checkpoint rule
+    (:func:`use_filesystem_checkpoints`), the conf-source rule
+    (:func:`clear_hadoop_conf_sources`), then the partition rule
+    (:func:`size_shuffle_partitions`, with ``shuffle_partitions`` as its
+    ``n``).  ``build_spark`` and ``__spark_entry__._configure`` both call
+    it, so an engine-built session and a driver-provided one get the same
+    rules.  Each rule keeps a value set explicitly."""
+    use_filesystem_checkpoints(spark)
+    clear_hadoop_conf_sources(spark)
     return size_shuffle_partitions(spark, shuffle_partitions)
 
 

@@ -4,16 +4,15 @@ Two published building blocks the ANN/semantic-dedup tier was missing:
 
 * :func:`kmeans_lloyd` — Lloyd's k-means iteration (Lloyd 1982, "Least
   squares quantization in PCM"), the refinement step behind every real
-  IVF index build (``ivf_topk``'s sampled k-means trains once; this is
-  the distributed multi-iteration version whose assignments a SQL oracle
-  can replay).
+  IVF index build: the distributed multi-iteration version whose
+  assignments a SQL oracle can replay.
 * :func:`pq_encode` — Product Quantization (Jégou, Douze, Schmid 2011,
   "Product Quantization for Nearest Neighbor Search"): split the vector
   into M subspaces, encode each against a per-subspace codebook, keep
-  M small codes + the exact quantization error.  With ``ivf_topk`` this
-  completes the IVF-PQ layout that production 100 TB vector stores use
-  (IVF prunes the corpus, PQ shrinks the residual scan by ~dim·4/M
-  bytes per vector).
+  M small codes + the exact quantization error.  With the IVF lists of
+  ``ivf_topk_det`` this completes the IVF-PQ layout that production
+  100 TB vector stores use (IVF prunes the corpus, PQ shrinks the
+  residual scan by ~dim·4/M bytes per vector).
 
 Cross-engine determinism (the repo-wide sketch convention,
 ``operators/similarity.py``): vectors quantize to integer micro-units
@@ -134,22 +133,20 @@ def floordiv(s: Column, n: Column) -> Column:
 class _Codebook(NamedTuple):
     ids: np.ndarray  # int64 code ids, in codebook (id) order
     vecs: list  # the vectors as Python lists; may be NULL, ragged or hold NULLs
-    mat: np.ndarray | None  # the clean rectangle, or None → all rows fall back
-    num: type  # element type the fallback scores in (int or float)
+    mat: np.ndarray | None  # the clean int64 rectangle, or None → all rows fall back
 
 
-def _codebook(rows: list, dtype=np.int64) -> _Codebook:
-    """Kernel codebook from collected ``[(id, vector), ...]`` rows in id
-    order.  ``mat`` is set only when every vector is NULL-free and all
-    share one non-zero width."""
+def _codebook(rows: list) -> _Codebook:
+    """Kernel codebook from collected ``[(id, quantized vector), ...]``
+    rows in id order.  ``mat`` is set only when every vector is NULL-free
+    and all share one non-zero width."""
     vecs = [None if v is None else list(v) for _, v in rows]
     widths = {-1 if v is None or None in v else len(v) for v in vecs}
     clean = len(widths) == 1 and min(widths) > 0
     return _Codebook(
         np.array([c for c, _ in rows], dtype=np.int64),
         vecs,
-        np.array(vecs, dtype=dtype) if clean else None,
-        int if np.dtype(dtype).kind == "i" else float,
+        np.array(vecs, dtype=np.int64) if clean else None,
     )
 
 
@@ -211,14 +208,14 @@ def _py_residual(v, cv):
     ]
 
 
-def _as_pylist(v, num: type = int):
+def _as_pylist(v):
     """Normalize one Arrow-delivered cell for the Python fallbacks: None
     stays None; NaN elements (Arrow's float64 representation of NULL
-    list elements) become None; everything else becomes ``num`` (exact
+    list elements) become None; everything else becomes ``int`` (exact
     for quantized ints, which are ≤ ~5e6)."""
     if v is None:
         return None
-    return [None if x is None or x != x else num(x) for x in v]
+    return [None if x is None or x != x else int(x) for x in v]
 
 
 def _clean_rows(vals, mat):
@@ -275,7 +272,7 @@ def _sq_argmin_batch(vals, cb: _Codebook, n_sub: int = 1):
             pos[s, mask] = p
             dist[s, mask] = scores[np.arange(len(Xs)), p] + np.einsum("ij,ij->i", Xs, Xs)
     for j in np.flatnonzero(~mask):
-        v = _as_pylist(vals[j], cb.num)
+        v = _as_pylist(vals[j])
         for s in range(n_sub):
             sv = _sub(v, s, n_sub)
             dd = [_py_sq_dist(sv, _sub(cv, s, n_sub)) for cv in cb.vecs]
@@ -322,7 +319,7 @@ def _dot_topn_batch(vals, cb: _Codebook, n: int) -> np.ndarray:
         for j, row in zip(np.flatnonzero(mask), top):
             out[j] = row
     for j in np.flatnonzero(~mask):
-        v = _as_pylist(vals[j], cb.num)
+        v = _as_pylist(vals[j])
         dd = [_py_int_dot(v, cv) for cv in cb.vecs]
         out[j] = cb.ids[sorted(range(len(dd)), key=lambda i: (-dd[i], i))[:n]]
     return out

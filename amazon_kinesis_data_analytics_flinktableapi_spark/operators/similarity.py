@@ -1,26 +1,29 @@
 """Similarity search over embedding columns (driver extension surface).
 
+One operator per index, all sharing the (q_id, c_id, cos_sim, rn) top-k
+contract of :func:`_topk_tail`:
+
 - ``brute_topk``   — exact cosine top-k: broadcast the query set, scan the
                      corpus once, per-partition top-k via window rank.
                      The correctness baseline, and at 100 TB still the
                      right plan when |queries| is small (one corpus scan,
                      no index build).
-- ``lsh_topk``     — random-hyperplane LSH: bucket corpus + queries by
-                     sign-bit sketch, rank only within colliding buckets
-                     (multi-probe over rotations).  The scale path when
-                     |queries| × |corpus| is too big to brute force.
-- ``ivf_topk``     — inverted-file (IVF) index: k-means centroids trained
-                     on a bounded sample, corpus partitioned by nearest
-                     centroid, queries probe the ``nprobe`` nearest lists.
-                     Data-adaptive buckets (vs LSH's data-oblivious
-                     hyperplanes) — better recall on clustered corpora.
+- ``lsh_topk_det`` — random-hyperplane LSH: bucket corpus + queries by
+                     integer sign-bit sketch, rank only within colliding
+                     buckets.  The scale path when |queries| × |corpus|
+                     is too big to brute force.
+- ``ivf_topk_det`` — inverted-file (IVF) index: lowest-id centroids,
+                     corpus partitioned by nearest centroid, queries probe
+                     the ``nprobe`` nearest lists.
 
-Exact cosine scoring is built-in zip_with/aggregate expressions
-(functions.vector), evaluated in the JVM.  Centroid assignment and
-probing (``ivf_topk``, ``ivf_topk_det``, ``semantic_dedup``) and the
-integer LSH sketches are Arrow kernels — one numpy matmul per batch in a
-Python worker; the centroid kernel is the dot top-n shared with
-``operators/clustering.py``.
+Both indexes quantize vectors and hyperplanes/centroids to integers, so
+their buckets, and hence the approximate result, are bit-identical on
+any engine and a DuckDB twin hash-checks them.  Exact cosine scoring is
+built-in zip_with/aggregate expressions (functions.vector), evaluated in
+the JVM.  Centroid assignment and probing (``ivf_topk_det``,
+``semantic_dedup``) and the integer LSH sketches are Arrow kernels — one
+numpy matmul per batch in a Python worker; the centroid kernel is the
+int64 dot top-n shared with ``operators/clustering.py``.
 
 CACHE LIFETIME: several operators here (and in operators/dedup.py)
 ``.cache()`` an intermediate both sides of a self-join read — required,
@@ -40,8 +43,18 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from amazon_kinesis_data_analytics_flinktableapi_spark.functions.text import half_up_round
-from amazon_kinesis_data_analytics_flinktableapi_spark.functions.vector import as_double, cosine, dot, norm
+from amazon_kinesis_data_analytics_flinktableapi_spark.functions.vector import as_double, cosine, norm
 from amazon_kinesis_data_analytics_flinktableapi_spark.operators.clustering import _codebook, _dot_topn_column
+
+
+def _topk_tail(scored: DataFrame, k: int, scale: int) -> DataFrame:
+    """(q_id, c_id, __sim) → ranked top-k with the shared output contract."""
+    w = Window.partitionBy("q_id").orderBy(F.col("__sim").desc(), F.col("c_id"))
+    return (
+        scored.select("q_id", "c_id", "__sim", F.row_number().over(w).alias("rn"))
+        .filter(F.col("rn") <= k)
+        .select("q_id", "c_id", half_up_round(F.col("__sim"), scale).alias("cos_sim"), "rn")
+    )
 
 
 def brute_topk(
@@ -64,144 +77,7 @@ def brute_topk(
         c.join(F.broadcast(q), F.col("q_id") != F.col("c_id"))
         .select("q_id", "c_id", cosine("q_vec", "c_vec").alias("__sim"))
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("__sim").desc(), F.col("c_id"))
-    return (
-        scored.select("q_id", "c_id", "__sim", F.row_number().over(w).alias("rn"))
-        .filter(F.col("rn") <= k)
-        .select("q_id", "c_id", half_up_round(F.col("__sim"), scale).alias("cos_sim"), "rn")
-    )
-
-
-def _hyperplanes(dim: int, n_planes: int, seed: int = 13) -> list[list[float]]:
-    rng = np.random.RandomState(seed)
-    return rng.randn(n_planes, dim).tolist()
-
-
-def _lit_darray(vals) -> "F.Column":
-    """Double-array literal built in ONE py4j call.  ``F.array(*[F.lit(x)
-    ...])`` costs two gateway round-trips per element — a 64-dim plane set
-    spends seconds in pure plan construction before Spark sees the query.
-    ``repr(float)`` is shortest-round-trip, so Java's parseDouble recovers
-    the identical IEEE double."""
-    return F.expr("array(" + ",".join(repr(float(v)) + "D" for v in vals) + ")")
-
-
-def sketch_expr(vec_col: str, planes: list[list[float]]):
-    """Sign-bit LSH sketch of a vector column as a long (one bit per plane)."""
-    v = as_double(vec_col)
-    bits = []
-    for i, p in enumerate(planes):
-        plane = _lit_darray(p)
-        d = F.aggregate(F.zip_with(v, plane, lambda x, y: x * y), F.lit(0.0), lambda a, x: a + x)
-        bits.append(F.when(d >= 0, F.shiftleft(F.lit(1).cast("long"), i)).otherwise(F.lit(0).cast("long")))
-    out = bits[0]
-    for b in bits[1:]:
-        out = out.bitwiseOR(b)
-    return out
-
-
-def lsh_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-    n_planes: int | None = None,
-    n_tables: int = 4,
-    seed: int = 13,
-    scale: int = 6,
-    multi_probe: bool = False,
-) -> DataFrame:
-    """Approximate top-k: rank only candidates whose sign-bit sketch
-    collides with the query in ≥1 of ``n_tables`` independent tables.
-
-    ``n_planes=None`` (default) auto-sizes from a corpus count via
-    :func:`auto_n_planes` — log2(n / 4096), clamped — so a naive caller
-    at any scale gets target-sized buckets instead of the fixture
-    default (VERDICT r12 #6).
-
-    Scale: corpus is sketched once per table (scan-bound, codegen), the
-    join is equi on (table, sketch) — shuffle ∝ corpus size × n_tables,
-    candidate ranking ∝ bucket sizes, never |corpus|×|queries|.  Recall
-    is tunable via n_planes (bucket width) and n_tables (probes); the
-    recall test in tests/test_similarity.py pins it against brute_topk.
-
-    ``multi_probe``: additionally probe, per table, every bucket at
-    Hamming distance 1 from the query's own bucket (each single plane-bit
-    flipped) — the multi-probe LSH idea (Lv et al., VLDB'07): near
-    neighbours that fall just on the other side of ONE hyperplane are
-    recovered without adding tables.  The probe fan-out lives entirely on
-    the QUERY side (×(1+n_planes) broadcast rows); the corpus is still
-    sketched exactly once per table, so corpus-side cost is unchanged —
-    the knob that buys recall on hard (uniform, unclustered) data where
-    bucket collisions are rare.
-    """
-    if n_planes is None:
-        n_planes = auto_n_planes(corpus.count())
-    tables = [(_t, _hyperplanes(dim, n_planes, seed + 101 * _t)) for _t in range(n_tables)]
-
-    def sketched(df: DataFrame, prefix: str, probe: bool) -> DataFrame:
-        parts = []
-        for t, planes in tables:
-            sk = sketch_expr(vec_col, planes)
-            if probe:
-                # materialize the sketch ONCE, then build the probe set by
-                # flipping bits of the materialized column: inlining `sk`
-                # into all 1+n_planes array slots would evaluate the
-                # interpreted n_planes-dot expression O(n_planes²) times
-                # per row (Catalyst's CollapseProject keeps the two-step
-                # projection because the alias is non-cheap and multiply-
-                # referenced)
-                base = df.select(
-                    F.col(id_col).alias(f"{prefix}_id"),
-                    F.col(vec_col).alias(f"{prefix}_vec"),
-                    F.lit(t).alias("t"),
-                    sk.alias("__sk0"),
-                )
-                sk0 = F.col("__sk0")
-                parts.append(
-                    base.select(
-                        f"{prefix}_id",
-                        f"{prefix}_vec",
-                        "t",
-                        F.explode(
-                            F.array(
-                                sk0,
-                                *[sk0.bitwiseXOR(F.lit(1 << i).cast("long")) for i in range(len(planes))],
-                            )
-                        ).alias("sk"),
-                    )
-                )
-            else:
-                parts.append(
-                    df.select(
-                        F.col(id_col).alias(f"{prefix}_id"),
-                        F.col(vec_col).alias(f"{prefix}_vec"),
-                        F.lit(t).alias("t"),
-                        sk.alias("sk"),
-                    )
-                )
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.union(p)
-        return out
-
-    cs = sketched(corpus, "c", probe=False)
-    qs = sketched(queries, "q", probe=multi_probe)
-    candidates = (
-        cs.join(F.broadcast(qs), ["t", "sk"])
-        .filter(F.col("q_id") != F.col("c_id"))
-        .select("q_id", "c_id", "q_vec", "c_vec")
-        .distinct()
-    )
-    scored = candidates.select("q_id", "c_id", cosine("q_vec", "c_vec").alias("__sim"))
-    w = Window.partitionBy("q_id").orderBy(F.col("__sim").desc(), F.col("c_id"))
-    return (
-        scored.select("q_id", "c_id", "__sim", F.row_number().over(w).alias("rn"))
-        .filter(F.col("rn") <= k)
-        .select("q_id", "c_id", half_up_round(F.col("__sim"), scale).alias("cos_sim"), "rn")
-    )
+    return _topk_tail(scored, k, scale)
 
 
 def auto_n_planes(n_vectors: int, target_bucket: int = 4096, lo: int = 4, hi: int = 24) -> int:
@@ -225,8 +101,8 @@ def auto_n_centroids(n_vectors: int, lo: int = 16, hi: int = 4096) -> int:
     ``≈ sqrt(n)`` balance (FAISS guideline) — per-query cost is
     n_centroids (centroid scoring) + nprobe·n/n_centroids (list scan),
     minimized at sqrt.  Clamped: ``lo`` matches the fixture-scale
-    default; ``hi`` bounds the broadcast centroid matrix (4096×64
-    doubles = 2 MB) and the driver-side k-means."""
+    default; ``hi`` bounds the driver-side centroid collect and the
+    centroid matrix shipped to every task (4096×64 int64 = 2 MB)."""
     import math
 
     if n_vectors <= 0:
@@ -256,138 +132,6 @@ def auto_nprobe(n_centroids: int, lo: int = 4) -> int:
     # n_centroids cap LAST: a tiny index (lists < lo) probes every list,
     # never more lists than exist
     return min(n_centroids, max(lo, math.ceil(math.sqrt(max(n_centroids, 1)))))
-
-
-def _kmeans_centroids(sample: np.ndarray, n_centroids: int, seed: int, iters: int = 12) -> np.ndarray:
-    """Lloyd's k-means on a driver-side sample, L2-normalized output.
-
-    The sample is bounded (``train_limit`` rows), so this is O(sample ×
-    centroids × iters) on the driver — the standard IVF build: at 100 TB
-    the index is still trained on a fixed-size sample, never the corpus.
-    """
-    rng = np.random.RandomState(seed)
-    cents = sample[rng.choice(len(sample), size=min(n_centroids, len(sample)), replace=False)].copy()
-    for _ in range(iters):
-        # cosine assignment: normalize rows, nearest = max dot
-        cn = cents / np.maximum(np.linalg.norm(cents, axis=1, keepdims=True), 1e-12)
-        assign = (sample @ cn.T).argmax(axis=1)
-        for j in range(len(cents)):
-            members = sample[assign == j]
-            if len(members):
-                cents[j] = members.mean(axis=0)
-    return cents / np.maximum(np.linalg.norm(cents, axis=1, keepdims=True), 1e-12)
-
-
-def ivf_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_centroids: int | None = None,
-    nprobe: int | None = None,
-    train_limit: int | None = None,
-    seed: int = 13,
-    scale: int = 6,
-) -> DataFrame:
-    """Approximate top-k via an inverted-file index: (q_id, c_id, cos_sim, rn).
-
-    Scale: train on a bounded sample (driver-side, O(train_limit)); assign
-    each corpus vector to its nearest centroid (one scan, no shuffle);
-    queries probe their ``nprobe`` nearest lists and the candidate join is
-    equi on the centroid id — shuffle ∝ |corpus| + |probed buckets|, never
-    |corpus|×|queries|.  Recall/cost dial: nprobe/n_centroids.  Vectors
-    with zero norm never rank above a real match (dot = 0).
-
-    ``n_centroids=None`` (default) auto-sizes the index from a corpus
-    count via :func:`auto_n_centroids` (≈√n, clamped) — VERDICT r12 #6:
-    a naive caller at 1e9 vectors previously got the fixture-scale 16
-    lists and quadratic intra-list pair work.  Auto sizing costs one
-    ``corpus.count()`` (metadata-cheap on parquet).
-
-    Eager snapshot: the training sample is collected and k-means runs on
-    the driver when this function is CALLED.  In the returned plan, list
-    assignment (top-1) and query probing (top-nprobe) are the shared
-    dot top-n Arrow kernel (``operators/clustering.py``): one float64
-    matmul per batch, constant plan size out to the 4096-list cap.  A
-    NULL vector gets a NULL bucket and no probes, so it never ranks.
-    """
-    n_rows: int | None = None
-    if n_centroids is None:
-        # one corpus.count() — metadata-cheap on a parquet scan, but a
-        # DERIVED input re-executes its full lineage here and again at
-        # query run (ADVICE r13): callers with expensive lineage should
-        # cache the input or pass explicit sizes
-        n_rows = corpus.count()
-        n_centroids = auto_n_centroids(n_rows)
-    if nprobe is None:
-        # √lists rule (VERDICT r13 #1) — holds recall ~flat across corpus
-        # decades where a fixed width decays; see auto_nprobe
-        nprobe = auto_nprobe(n_centroids)
-    if train_limit is None:
-        # k-means needs a multiple of n_centroids samples to place lists
-        # meaningfully; 8× is the cheapest ratio that kept recall flat in
-        # the auto-sizing tests (still bounded: ≤32k rows at the auto cap)
-        train_limit = max(4096, 8 * n_centroids)
-    # Train on a seeded RANDOM sample, not the corpus head (r14): limit()
-    # takes whatever rows the first partitions yield, so any corpus whose
-    # layout is correlated with content (time-partitioned, per-source
-    # files — i.e. every real 100 TB corpus) would train centroids on one
-    # region of the space and scatter the rest across ill-fitting lists —
-    # the classic IVF build mistake the FAISS docs warn about.  (Measured
-    # recall-neutral on the driver fixture, whose id-ordered layout is
-    # uncorrelated with content; the fix targets layout-correlated
-    # corpora.)  sample() is scan-local (no shuffle) and the Bernoulli draw
-    # is seed-deterministic per row for a fixed partition layout.  The
-    # fraction is EXACT (train_limit/n, no oversample): an oversampled
-    # fraction + limit() re-introduces head bias, because limit() fills
-    # from the first partitions — the sample lands a few % short of
-    # train_limit instead, which k-means is indifferent to.
-    base = corpus.select(as_double(vec_col))
-    if n_rows is None:
-        n_rows = base.count()
-    frac = min(1.0, train_limit / max(n_rows, 1))
-    # NULL vectors have no position to train on (they get a NULL bucket)
-    sample = np.array(
-        [r[0] for r in base.sample(False, frac, seed).limit(train_limit).collect() if r[0] is not None],
-        dtype=np.float64,
-    )
-    if sample.size == 0 and frac < 1.0:
-        # pathological sampling miss (tiny corpus + tiny fraction can
-        # only happen with an explicit train_limit far below the corpus
-        # size) — fall back to the head rather than failing the build
-        sample = np.array(
-            [r[0] for r in base.limit(train_limit).collect() if r[0] is not None], dtype=np.float64
-        )
-    if sample.size == 0:
-        # an empty training sample would surface as an opaque numpy
-        # AxisError inside _kmeans_centroids; name the actual problem
-        raise ValueError("ivf_topk: corpus has no embeddings to train the index on")
-    cb = _codebook(list(enumerate(_kmeans_centroids(sample, n_centroids, seed).tolist())), np.float64)
-    present = F.col(vec_col).isNotNull()
-    # corpus side: top-1 centroid; query side: top-nprobe centroids,
-    # exploded to one probe row each
-    c = corpus.select(
-        F.col(id_col).alias("c_id"),
-        F.col(vec_col).alias("c_vec"),
-        F.when(present, _dot_topn_column(as_double(vec_col), cb, 1)[0]).alias("bucket"),
-    )
-    q = queries.select(
-        F.col(id_col).alias("q_id"),
-        F.col(vec_col).alias("q_vec"),
-        F.explode(F.when(present, _dot_topn_column(as_double(vec_col), cb, nprobe))).alias("bucket"),
-    )
-    scored = (
-        c.join(F.broadcast(q), "bucket")
-        .filter(F.col("q_id") != F.col("c_id"))
-        .select("q_id", "c_id", cosine("q_vec", "c_vec").alias("__sim"))
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("__sim").desc(), F.col("c_id"))
-    return (
-        scored.select("q_id", "c_id", "__sim", F.row_number().over(w).alias("rn"))
-        .filter(F.col("rn") <= k)
-        .select("q_id", "c_id", half_up_round(F.col("__sim"), scale).alias("cos_sim"), "rn")
-    )
 
 
 def neardup_pairs(
@@ -522,16 +266,6 @@ def quantized_sketches_all(qv_col: str, tables: list[list[list[int]]]) -> "F.Col
     return _sketches(F.col(qv_col))
 
 
-def _topk_tail(scored: DataFrame, k: int, scale: int) -> DataFrame:
-    """(q_id, c_id, __sim) → ranked top-k with the shared output contract."""
-    w = Window.partitionBy("q_id").orderBy(F.col("__sim").desc(), F.col("c_id"))
-    return (
-        scored.select("q_id", "c_id", "__sim", F.row_number().over(w).alias("rn"))
-        .filter(F.col("rn") <= k)
-        .select("q_id", "c_id", half_up_round(F.col("__sim"), scale).alias("cos_sim"), "rn")
-    )
-
-
 def lsh_topk_det(
     corpus: DataFrame,
     queries: DataFrame,
@@ -544,13 +278,19 @@ def lsh_topk_det(
     seed: int = 13,
     scale: int = 6,
 ) -> DataFrame:
-    """Deterministic LSH top-k: same plan shape as :func:`lsh_topk` (equi
-    join on (table, sketch), candidate-only ranking) but with
-    integer-quantized vectors and hyperplanes, so the buckets — and hence
-    the approximate result — are bit-identical on any engine and a SQL
+    """Approximate top-k via random-hyperplane LSH: (q_id, c_id, cos_sim,
+    rn), ranking only candidates whose sign-bit sketch collides with the
+    query in ≥1 of ``n_tables`` independent tables.  Vectors and
+    hyperplanes are integer-quantized, so the buckets — and hence the
+    approximate result — are bit-identical on any engine and a SQL
     oracle can hash-check the whole query (``queries/llm._ann_lsh_oracle``
-    is the generated DuckDB twin).  Scale properties are unchanged:
-    shuffle ∝ corpus × n_tables, never |corpus| × |queries|.
+    is the generated DuckDB twin).
+
+    Scale: the corpus is sketched once for all tables, the candidate join
+    is equi on (table, sketch) — shuffle ∝ corpus × n_tables, candidate
+    ranking ∝ bucket sizes, never |corpus| × |queries|.  Recall is tunable
+    via n_planes (bucket width) and n_tables (probes); the recall tests in
+    tests/test_similarity.py pin it against :func:`brute_topk`.
 
     ``n_planes=None`` auto-sizes via :func:`auto_n_planes`; an
     oracle-twinned caller must pass the SAME explicit n_planes to both
@@ -614,17 +354,17 @@ def ivf_topk_det(
     nprobe: int | None = None,
     scale: int = 6,
 ) -> DataFrame:
-    """Deterministic IVF top-k: the oracle-checkable sibling of
-    :func:`ivf_topk`.  Centroids are the ``n_centroids`` lowest-id corpus
-    vectors (TakeOrderedAndProject — a bounded driver collect, no global
-    sort) instead of sampled k-means, and list assignment/probing uses
-    exact integer-quantized dot products with ties broken toward the
-    smaller centroid id — every step reproducible by a SQL twin
-    (``queries/llm._ann_ivf_oracle``).  The plan shape IS the production
-    IVF plan: one corpus scan to assign buckets (no shuffle), queries
-    probe their ``nprobe`` best lists, candidate join equi on the bucket
-    id.  Use :func:`ivf_topk` (k-means-trained, recall-pinned in tests)
-    when index quality matters more than cross-engine determinism.
+    """Approximate top-k via an inverted-file index: (q_id, c_id, cos_sim,
+    rn).  Centroids are the ``n_centroids`` lowest-id corpus vectors
+    (TakeOrderedAndProject — a bounded driver collect, no global sort),
+    and list assignment/probing uses exact integer-quantized dot products
+    with ties broken toward the smaller centroid id — every step
+    reproducible by a SQL twin (``queries/llm._ann_ivf_oracle``).  One
+    corpus scan assigns buckets (no shuffle), queries probe their
+    ``nprobe`` best lists, and the candidate join is equi on the bucket
+    id — shuffle ∝ |corpus| + |probed buckets|, never |corpus| ×
+    |queries|.  Recall/cost dial: nprobe/n_centroids; recall is pinned
+    against :func:`brute_topk` in tests/test_similarity.py.
 
     ``n_centroids=None`` auto-sizes (:func:`auto_n_centroids`; an
     oracle-twinned caller passes the same explicit value to the oracle
@@ -640,8 +380,9 @@ def ivf_topk_det(
     if n_centroids is None:
         n_centroids = auto_n_centroids(corpus.count())
     if nprobe is None:
-        # same √lists default as ivf_topk (VERDICT r13 #1); an
-        # oracle-twinned caller passes the explicit value to both sides
+        # √lists rule (VERDICT r13 #1) — holds recall ~flat across corpus
+        # decades where a fixed width decays; an oracle-twinned caller
+        # passes the explicit value to both sides
         nprobe = auto_nprobe(n_centroids)
     cents = (
         corpus.orderBy(id_col)

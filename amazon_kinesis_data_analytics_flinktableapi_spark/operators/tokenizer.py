@@ -15,8 +15,8 @@ produces a vocabulary-sized table, and every merge round after that is
 vocabulary-scale work.  At 100 TB the corpus is ~10^11 tokens but the
 distinct-token vocab is ~10^7-10^8 rows: the iteration runs over ~0.1%
 of the input, distributed, with only a 1-row argmax crossing to the
-driver per round (the same bounded-collect pattern as the IVF train
-sample in ``operators/similarity.py`` — Spark ML drives all its
+driver per round (the same bounded-collect pattern as the IVF centroid
+collect in ``operators/similarity.py`` — Spark ML drives all its
 iterative algorithms this way).
 
 Symbol sequences ride as marker-delimited strings
@@ -159,101 +159,6 @@ def bpe_train(
         base.unpersist()
 
 
-def _select_nonoverlapping(cands, m: int):
-    """Greedy top-``m`` mutually NON-INTERACTING pairs from rank-ordered
-    candidates.  Two batch members interact when they share a symbol —
-    then one replace can destroy/alter the other's occurrences — or when
-    one's operand equals another's MERGED spelling (symbol identity is
-    the spelling here, so pair (x, 'ab') would match occurrences the
-    batch itself creates).  Rejecting on the union {l, r, l+r} of every
-    already-selected member makes the batch order-independent and keeps
-    each member's batch-start count equal to its sequential merge-time
-    count."""
-    used: set[str] = set()
-    out = []
-    for row in cands:
-        l, r = row["l"], row["r"]
-        if l in used or r in used or (l + r) in used:
-            continue
-        out.append((l, r, row["n"]))
-        used.update((l, r, l + r))
-        if len(out) == m:
-            break
-    return out
-
-
-def bpe_train_batched(
-    words: DataFrame,
-    k: int,
-    batch: int = 16,
-    token_col: str = "tok",
-    checkpoint_every: int = BPE_CHECKPOINT_EVERY,
-) -> list[tuple[int, str, str, str, int]]:
-    """Batched BPE training: up to ``batch`` mutually non-interacting
-    merges per pair-count recomputation — the standard distributed-BPE
-    job-count fix (VERDICT r16 #6).
-
-    :func:`bpe_train` pays ONE driver round-trip (= one Spark job DAG)
-    per merge: exact, but a real ~30k-merge tokenizer build is 30k jobs
-    whose *scheduling* overhead (~50-100 ms/job) dominates the
-    vocabulary-scale work.  This variant recomputes pair counts once per
-    ROUND, collects a small ranked candidate pool, greedily selects up
-    to ``batch`` non-interacting pairs (:func:`_select_nonoverlapping`),
-    and applies them as one chained narrow projection — ``ceil(k/batch)``
-    round-trips, a ``batch``× job-count reduction (30k merges at
-    batch=64 ≈ 470 jobs, cluster-practical).
-
-    Semantics: ``batch=1`` is EXACTLY :func:`bpe_train` (property-pinned
-    on random corpora).  For ``batch>1`` each selected pair's recorded
-    ``n_occurrences`` equals its sequential merge-time count (the
-    non-interaction rule guarantees earlier batch members cannot change
-    it), and the merge LIST equals sequential training's whenever no
-    pair CREATED by a batch member would have out-ranked a later member
-    under exact recounting — the one divergence mode, inherent to every
-    batched BPE (a created pair like (x, 'ab') can rank above the
-    batch's tail; sequential would take it first).  Tokenizer quality is
-    equivalent in practice — the affected merges are adjacent-rank swaps
-    — but a bit-exact merge table needs ``batch=1``."""
-    if batch < 1:
-        raise ValueError(f"batch must be >= 1, got {batch}")
-    if checkpoint_every < 1:
-        raise ValueError(f"checkpoint_every must be >= 1, got {checkpoint_every}")
-    base = words_as_symbol_strings(words, token_col).cache()
-    try:
-        cur = base
-        merges: list[tuple[int, str, str, str, int]] = []
-        applied_since_ckpt = 0
-        while len(merges) < k:
-            want = min(batch, k - len(merges))
-            # pool sized so overlap rejections rarely starve the batch; a
-            # starved batch just defers pairs to the next exact recount
-            pool = (
-                _pair_counts(cur)
-                .orderBy(F.desc("n"), F.asc("l"), F.asc("r"))
-                .limit(4 * want + 16)
-                .collect()
-            )
-            picked = _select_nonoverlapping(pool, want)
-            if not picked:
-                break
-            w: Column = F.col("w")
-            for l, r, n in picked:
-                merges.append((len(merges) + 1, l, r, l + r, n))
-                w = F.replace(
-                    w,
-                    F.lit(SYM_BEGIN + l + SYM_END + SYM_BEGIN + r + SYM_END),
-                    F.lit(SYM_BEGIN + l + r + SYM_END),
-                )
-            cur = cur.select(w.alias("w"), "freq")
-            applied_since_ckpt += len(picked)
-            if applied_since_ckpt >= checkpoint_every and len(merges) < k:
-                cur = cur.localCheckpoint(eager=True)
-                applied_since_ckpt = 0
-        return merges
-    finally:
-        base.unpersist()
-
-
 def bpe_encode_counts(
     words: DataFrame,
     merges: list[tuple[int, str, str, str, int]],
@@ -308,11 +213,11 @@ def bpe_train_merges(words: DataFrame, k: int, token_col: str = "tok") -> DataFr
 
     Job-count bound (VERDICT r16 #6): this exact form is k driver
     round-trips = k Spark job DAGs — right for the oracle-checked k=8
-    query and fine to ~10² merges, but a production ~30k-merge build
-    would be 30k jobs with scheduling overhead dominating.  Use
-    :func:`bpe_train_batched` there: ceil(k/batch) round-trips, exact
-    per-merge counts under its non-interaction rule, bit-exact to this
-    form at ``batch=1``."""
+    query and fine to ~10² merges; a production ~30k-merge build would
+    be 30k jobs with scheduling overhead dominating.  Every registered
+    query needs the exact sequential merge list, which batching several
+    merges per recount does not keep (86% merge agreement measured,
+    SCALING.md)."""
     return words.sparkSession.createDataFrame(
         bpe_train(words, k, token_col), schema=MERGE_SCHEMA
     )

@@ -222,8 +222,7 @@ def q_array_hof_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # inlining cents/big into all three outputs re-runs the interpreted
     # transform chain 3× (and the filter 2×) per row — Catalyst's
     # CollapseProject keeps these steps separate because the aliases are
-    # non-cheap and multiply-referenced (same pattern as lsh_topk's
-    # materialized sketch)
+    # non-cheap and multiply-referenced
     vals = F.transform("rows", lambda r: r.getField("value"))
     staged = arrs.select(
         "user_id", F.transform(vals, lambda x: F.floor(x * 100)).alias("cents")

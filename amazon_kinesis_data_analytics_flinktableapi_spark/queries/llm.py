@@ -1355,10 +1355,10 @@ def _ann_lsh_oracle(k: int = 10, n_planes: int = 8, n_tables: int = 4,
 @query(
     "ann_lsh_topk",
     oracle=nse_oracle(_ann_lsh_oracle()),
-    doc="LSH-bucketed approximate cosine top-k — deterministic "
-    "integer-quantized hyperplane sketches, so the approximate result "
-    "itself is oracle-hash-checkable; recall vs brute_topk additionally "
-    "pinned in tests/test_similarity.py",
+    doc="LSH-bucketed approximate cosine top-k (lsh_topk_det, the one LSH "
+    "index) — integer-quantized hyperplane sketches, so the approximate "
+    "result itself is oracle-hash-checkable; recall vs brute_topk "
+    "additionally pinned in tests/test_similarity.py",
 )
 def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (emb,) = load(spark, sf_dir, "embeddings")
@@ -1814,10 +1814,10 @@ def _ann_ivf_oracle(k: int = 10, n_centroids: int = 16, nprobe: int = 4,
 @query(
     "ann_ivf_topk",
     oracle=nse_oracle(_ann_ivf_oracle()),
-    doc="IVF approximate cosine top-k — deterministic lowest-id centroids "
-    "+ integer-quantized assignment make the inverted-file partitioning "
-    "oracle-hash-checkable; the k-means-trained ivf_topk stays the "
-    "production index build (recall pinned in tests/test_similarity.py)",
+    doc="IVF approximate cosine top-k (ivf_topk_det, the one IVF index) — "
+    "lowest-id centroids + integer-quantized assignment make the "
+    "inverted-file partitioning oracle-hash-checkable; recall vs "
+    "brute_topk pinned in tests/test_similarity.py",
 )
 def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (emb,) = load(spark, sf_dir, "embeddings")

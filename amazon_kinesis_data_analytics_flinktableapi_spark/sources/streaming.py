@@ -7,11 +7,14 @@ engine offers one builder per stream source, each producing a typed
 streaming DataFrame (builders take source-specific arguments, so call
 them directly):
 
-- ``file_replay``      — JSON-lines directory replay (the test/CI source;
-                         also the production pattern for S3-landed data).
-- ``kafka_json``       — the production stream bus (``format("kafka")``).
-- ``kinesis_sim_json`` — the in-repo Kinesis-semantics connector
-                         (``sources/kinesis_sim.py``).
+- ``file_replay`` — JSON-lines directory replay (the test/CI source;
+                    also the production pattern for S3-landed data).
+- ``kafka_json``  — the production stream bus (``format("kafka")``).
+
+The in-repo Kinesis-semantics connector (``sources/kinesis_sim.py``) is a
+registered data source, not a builder: after its ``register(spark)``,
+read it with ``spark.readStream.format("kinesis_sim")`` and parse its
+``data`` column with ``parse_json_stream(raw, schema, value_col="data")``.
 
 All JSON parsing goes through ``parse_json_stream``: one ``from_json``
 with a declared minimal schema (schema-on-read, parse-time pruning), then
@@ -112,13 +115,3 @@ def kafka_json(
     )
     return parse_json_stream(raw, schema)
 
-
-def kinesis_sim_json(spark: SparkSession, schema: StructType, **options) -> DataFrame:
-    """Kinesis-semantics stream (shards, sequence offsets, TRIM_HORIZON/
-    LATEST) from the in-repo Python Data Source connector
-    (``sources/kinesis_sim.py``), parsed through the shared S2 path."""
-    from amazon_kinesis_data_analytics_flinktableapi_spark.sources.kinesis_sim import register
-
-    register(spark)
-    raw = spark.readStream.format("kinesis_sim").options(**options).load()
-    return parse_json_stream(raw, schema, value_col="data")

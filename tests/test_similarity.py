@@ -64,38 +64,6 @@ def test_brute_topk_cosine_values(vectors):
         assert math.isclose(r.cos_sim, expect, abs_tol=1e-5)
 
 
-def test_lsh_topk_recall(vectors):
-    queries = vectors.filter(F.col("vec_id") < 10)
-    brute = S.brute_topk(vectors, queries, k=10)
-    lsh = S.lsh_topk(vectors, queries, k=10, dim=DIM, n_planes=6, n_tables=8)
-    bset = {(r.q_id, r.c_id) for r in brute.collect()}
-    lset = {(r.q_id, r.c_id) for r in lsh.collect()}
-    recall = len(bset & lset) / len(bset)
-    assert recall >= 0.6, f"LSH recall@10 too low: {recall}"
-
-
-def test_ivf_topk_recall(vectors):
-    queries = vectors.filter(F.col("vec_id") < 10)
-    brute = S.brute_topk(vectors, queries, k=10)
-    ivf = S.ivf_topk(vectors, queries, k=10, n_centroids=10, nprobe=3)
-    bset = {(r.q_id, r.c_id) for r in brute.collect()}
-    iset = {(r.q_id, r.c_id) for r in ivf.collect()}
-    recall = len(bset & iset) / len(bset)
-    # clustered fixture: each query's true neighbours live in its own
-    # cluster, which IVF's data-adaptive centroids should isolate
-    assert recall >= 0.8, f"IVF recall@10 too low: {recall}"
-
-
-def test_ivf_topk_values_exact_within_probed(vectors):
-    # scores it does return must be the exact cosine (verification is exact)
-    out = S.ivf_topk(vectors, vectors.filter(F.col("vec_id") == 0), k=5, n_centroids=10, nprobe=3)
-    rows = dict((r.vec_id, np.array(r.embedding)) for r in vectors.collect())
-    for r in out.collect():
-        q, c = rows[0], rows[r.c_id]
-        expect = float(q @ c / (np.linalg.norm(q) * np.linalg.norm(c)))
-        assert math.isclose(r.cos_sim, expect, abs_tol=1e-5)
-
-
 def test_neardup_pairs_threshold(vectors):
     out = S.neardup_pairs(vectors, threshold=0.9, id_col="vec_id", vec_col="embedding")
     rows = dict((r.vec_id, np.array(r.embedding)) for r in vectors.collect())
@@ -135,25 +103,6 @@ def test_neardup_pairs_lsh_no_nested_loop(vectors):
     # equi-join on (table, sketch) — no cartesian/nested-loop join anywhere
     plan = S.neardup_pairs_lsh(vectors, threshold=0.9, dim=DIM)._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan, plan
-
-
-def test_lsh_multi_probe_recall_on_uniform(spark):
-    """Uniform (unclustered) embeddings are LSH's hard case — bucket
-    collisions are rare and single-probe recall collapses.  Multi-probe
-    (every Hamming-1 neighbour bucket probed on the query side) must
-    recover most of the true top-k without touching corpus-side cost.
-    Measured on this fixture: 0.33 single-probe vs 0.83 multi-probe."""
-    rng = np.random.RandomState(7)
-    rows = [(i, [float(x) for x in rng.randn(DIM)]) for i in range(400)]
-    vectors = spark.createDataFrame(rows, SCHEMA)
-    queries = vectors.filter(F.col("vec_id") < 10)
-    brute = {(r.q_id, r.c_id) for r in S.brute_topk(vectors, queries, k=10).collect()}
-    single = S.lsh_topk(vectors, queries, k=10, dim=DIM, n_planes=6, n_tables=8)
-    multi = S.lsh_topk(vectors, queries, k=10, dim=DIM, n_planes=6, n_tables=8, multi_probe=True)
-    r_single = len(brute & {(r.q_id, r.c_id) for r in single.collect()}) / len(brute)
-    r_multi = len(brute & {(r.q_id, r.c_id) for r in multi.collect()}) / len(brute)
-    assert r_multi >= 0.7, f"multi-probe recall too low on uniform data: {r_multi}"
-    assert r_multi > r_single, f"multi-probe ({r_multi}) should beat single-probe ({r_single})"
 
 
 def test_lsh_topk_det_recall_and_values(vectors):
@@ -199,7 +148,10 @@ def test_ivf_topk_det_recall(vectors):
     det = S.ivf_topk_det(vectors, queries, k=10, n_centroids=10, nprobe=3)
     b = {(r.q_id, r.c_id) for r in brute.collect()}
     d = {(r.q_id, r.c_id) for r in det.collect()}
-    assert len(d & b) / len(b) >= 0.5  # lowest-id centroids trade recall for determinism
+    recall = len(d & b) / len(b)
+    # clustered fixture: each query's true neighbours live in its own
+    # cluster, and probing 3 lists must reach it
+    assert recall >= 0.8, f"IVF recall@10 too low: {recall}"
 
 
 def test_semantic_dedup_invariants(spark):
@@ -317,7 +269,7 @@ def test_matrix_kernels_empty_batch_and_nulls():
         _sq_argmin_batch,
     )
 
-    cb = _codebook([(7, [1.0, 0.0]), (9, [0.0, 1.0])], np.float64)
+    cb = _codebook([(7, [1, 0]), (9, [0, 1])])
     empty = np.array([], dtype=object)
     assert list(_dot_topn_batch(empty, cb, 1)) == []
     assert list(_dot_topn_batch(empty, cb, 2)) == []
@@ -327,7 +279,7 @@ def test_matrix_kernels_empty_batch_and_nulls():
     assert [list(p) for p in _dot_topn_batch(allnull, cb, 2)] == [[7, 9], [7, 9]]
     pos, dist = _sq_argmin_batch(allnull, _codebook([(0, [1, 0]), (1, [0, 1])]))
     assert pos.tolist() == [[0, 0]] and dist.tolist() == [[0, 0]]
-    mixed = np.array([None, np.array([2.0, 1.0]), np.array([0.5, 3.0])], dtype=object)
+    mixed = np.array([None, np.array([2, 1]), np.array([1, 3])], dtype=object)
     assert [list(p) for p in _dot_topn_batch(mixed, cb, 1)] == [[7], [7], [9]]
 
 
@@ -355,7 +307,7 @@ def test_lsh_topk_autosized_recall_two_corpus_sizes(spark, n):
     brute = {(r.q_id, r.c_id) for r in S.brute_topk(vectors, queries, k=10).collect()}
     lsh = {
         (r.q_id, r.c_id)
-        for r in S.lsh_topk(vectors, queries, k=10, dim=DIM, n_tables=8).collect()
+        for r in S.lsh_topk_det(vectors, queries, k=10, dim=DIM, n_tables=8).collect()
     }
     assert len(lsh & brute) / len(brute) >= 0.6, f"auto-sized recall floor at n={n}"
 
@@ -371,7 +323,7 @@ def test_ivf_topk_autosized_recall_two_corpus_sizes(spark):
         brute = {(r.q_id, r.c_id) for r in S.brute_topk(vectors, queries, k=10).collect()}
         ivf = {
             (r.q_id, r.c_id)
-            for r in S.ivf_topk(vectors, queries, k=10).collect()
+            for r in S.ivf_topk_det(vectors, queries, k=10).collect()
         }
         assert len(ivf & brute) / len(brute) >= 0.6, f"auto-sized IVF recall floor at n={n}"
 
@@ -446,10 +398,10 @@ def _vectors_with_null(spark, n=120, dim=8):
 
 def test_ivf_kernels_tolerate_null_embeddings(spark):
     """code-review r13 #1: np.stack over a batch containing None killed the
-    task.  A NULL embedding must keep each caller's contract: the det
-    variants put it in the smallest-id list (it can never rank, its
-    cosine is NULL), ``semantic_dedup`` keeps it in the smallest-id
-    cluster, and the k-means ``ivf_topk`` gives it a NULL bucket."""
+    task.  A NULL embedding must keep each caller's contract:
+    ``ivf_topk_det`` puts it in the smallest-id list (it can never rank,
+    its cosine is NULL) and ``semantic_dedup`` keeps it in the
+    smallest-id cluster."""
     from tests.test_clustering import ref_semantic_dedup
 
     vecs = _vectors_with_null(spark)
@@ -459,9 +411,6 @@ def test_ivf_kernels_tolerate_null_embeddings(spark):
     kept = {(r.vec_id, r.cluster) for r in S.semantic_dedup(vecs, threshold=0.99, n_centroids=12).collect()}
     assert kept == ref_semantic_dedup(_rows(vecs), threshold=0.99, n_centroids=12)
     assert (120, 0) in kept
-    with_null_query = vecs.filter((F.col("vec_id") < 3) | (F.col("vec_id") == 120))
-    out = S.ivf_topk(vecs, with_null_query, k=5, n_centroids=8, nprobe=3).collect()
-    assert out and all(r.c_id != 120 and r.q_id != 120 for r in out)
 
 
 def test_ann_int8_topk_overlap_vs_exact_dot(spark):

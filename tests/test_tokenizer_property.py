@@ -13,10 +13,7 @@ from collections import Counter
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from amazon_kinesis_data_analytics_flinktableapi_spark.operators.tokenizer import (
-    bpe_train,
-    bpe_train_batched,
-)
+from amazon_kinesis_data_analytics_flinktableapi_spark.operators.tokenizer import bpe_train
 
 # tiny alphabet + short words force dense pair collisions, merge ties,
 # merged-symbol reuse, and early exhaustion inside few examples
@@ -68,53 +65,6 @@ def test_bpe_train_matches_reference_algorithm(spark, corpus):
     got = bpe_train(words, k=5)
     want = _ref_bpe(sorted(agg.items()), k=5)
     assert got == want, (corpus, got, want)
-
-
-@settings(max_examples=8, deadline=None)
-@given(corpus=_corpus)
-def test_bpe_batched_batch1_is_exactly_sequential(spark, corpus):
-    """batch=1 degenerates to one merge per recount — it must equal
-    bpe_train bit-for-bit on ANY corpus (the strongest pin on the
-    batched loop's recount/apply/tiebreak machinery)."""
-    agg = Counter()
-    for w, f in corpus:
-        agg[w] += f
-    words = spark.createDataFrame(sorted(agg.items()), "tok string, freq bigint")
-    assert bpe_train_batched(words, k=5, batch=1) == bpe_train(words, k=5)
-
-
-def test_bpe_batched_matches_sequential_on_noninteracting_merges(spark):
-    """VERDICT r16 #6's property: when the top-m pairs are mutually
-    non-interacting (disjoint symbols, no created-pair out-ranking),
-    batched == sequential including merge-time counts.  Corpus built so
-    ranks 1-3 are (a,b)=40, (c,d)=30, (e,f)=20 with every created pair
-    ('ab' etc.) capped below the next rank by the x-separators."""
-    rows = [
-        ("xabx", 40),   # (a,b): 40; creates (x,ab)/(ab,x) at 40 — but
-        ("xcdx", 30),   # those involve 'x' pairs already counted lower
-        ("xefx", 20),
-    ]
-    # (x,a)=40 ties (a,b)=40 but loses the (l asc) tiebreak; after the
-    # merge, (x,ab)=40 WOULD out-rank (c,d)=30 sequentially — so include
-    # it in the check: sequential is ground truth, batched must match
-    # whenever we assert equality.  Use batch sizes that keep each
-    # batch's members non-interacting AND not out-rankable: batch=1
-    # trivially; the real assertion below uses a corpus without the
-    # created-pair hazard.
-    clean = [("ab", 40), ("cd", 30), ("ef", 20)]  # single words: merges
-    # (a,b),(c,d),(e,f) — merged words become single symbols, creating
-    # NO new pairs at all, the pure non-interacting case
-    words = spark.createDataFrame(clean, "tok string, freq bigint")
-    seq = bpe_train(words, k=3)
-    for m in (2, 3, 8):
-        assert bpe_train_batched(words, k=3, batch=m) == seq, m
-    # and the hazard corpus documents the divergence mode honestly:
-    # batched(batch>=2) may differ from sequential there — both must
-    # still be valid merge lists with exact batch-start counts
-    hazard = spark.createDataFrame(rows, "tok string, freq bigint")
-    got = bpe_train_batched(hazard, k=3, batch=3)
-    assert [g[0] for g in got] == [1, 2, 3]
-    assert got[0][1:] == ("a", "b", "ab", 40)  # rank 1 always agrees
 
 
 def _ref_winnow(text: str, k: int, w: int, m: int):
