@@ -64,6 +64,38 @@ def test_brute_topk_cosine_values(vectors):
         assert math.isclose(r.cos_sim, expect, abs_tol=1e-5)
 
 
+def test_lsh_topk_recall(vectors):
+    queries = vectors.filter(F.col("vec_id") < 10)
+    brute = S.brute_topk(vectors, queries, k=10)
+    lsh = S.lsh_topk_det(vectors, queries, k=10, dim=DIM, n_planes=6, n_tables=8)
+    bset = {(r.q_id, r.c_id) for r in brute.collect()}
+    lset = {(r.q_id, r.c_id) for r in lsh.collect()}
+    recall = len(bset & lset) / len(bset)
+    assert recall >= 0.6, f"LSH recall@10 too low: {recall}"
+
+
+def test_ivf_topk_recall(vectors):
+    queries = vectors.filter(F.col("vec_id") < 10)
+    brute = S.brute_topk(vectors, queries, k=10)
+    ivf = S.ivf_topk_det(vectors, queries, k=10, n_centroids=10, nprobe=3)
+    bset = {(r.q_id, r.c_id) for r in brute.collect()}
+    iset = {(r.q_id, r.c_id) for r in ivf.collect()}
+    recall = len(bset & iset) / len(bset)
+    # clustered fixture: each query's true neighbours live in its own
+    # cluster, and probing 3 of the 10 lists must reach it
+    assert recall >= 0.8, f"IVF recall@10 too low: {recall}"
+
+
+def test_ivf_topk_values_exact_within_probed(vectors):
+    # scores it does return must be the exact cosine (verification is exact)
+    out = S.ivf_topk_det(vectors, vectors.filter(F.col("vec_id") == 0), k=5, n_centroids=10, nprobe=3)
+    rows = dict((r.vec_id, np.array(r.embedding)) for r in vectors.collect())
+    for r in out.collect():
+        q, c = rows[0], rows[r.c_id]
+        expect = float(q @ c / (np.linalg.norm(q) * np.linalg.norm(c)))
+        assert math.isclose(r.cos_sim, expect, abs_tol=1e-5)
+
+
 def test_neardup_pairs_threshold(vectors):
     out = S.neardup_pairs(vectors, threshold=0.9, id_col="vec_id", vec_col="embedding")
     rows = dict((r.vec_id, np.array(r.embedding)) for r in vectors.collect())
